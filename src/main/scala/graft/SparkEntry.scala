@@ -794,8 +794,8 @@ object SparkEntry {
     "q251_quadkey_index" -> ((s, dir) => { ensure(s)
       // D7 quadkey layout (r14): createIndex(method="quadkey") clusters
       // rows by the Web-Mercator quadkey of the envelope centroid and
-      // persists a hidden _qk stat column; contains-mode bbox queries
-      // then add Tiles.cover PREFIX-RANGE predicates that parquet
+      // persists a hidden _qk stat column; on contains-mode bbox queries
+      // EnvelopePrefilter then adds PREFIX-RANGE predicates that parquet
       // row-group string min/max stats prune against — asserted in-gate
       // (correct rows through an unpruned scan still fail). The bbox
       // uses half-integer corners so no lattice point sits on the

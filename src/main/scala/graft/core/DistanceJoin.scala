@@ -229,13 +229,9 @@ object DistanceJoin {
         val cut = merged.lineageCut()
         val m = merged.queryExecution.observedMetrics(s"knn_round_$round")
         val (miss, total) = (m.getLong(0), m.getLong(1))
-        loopDebug(f"GRAFT_LOOP knn round $round r=$r%.1f " +
-          s"total=$total miss=$miss")
-        val resolved = explodeTop(
-          if (atMax) cut.filter(col("_ncand").isNotNull)
-          else cut.filter(col("_ncand") >= k))
+        val resolved = explodeTop(cut.filter(col("_ncand") >= k))
         out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        if (atMax || miss == 0L) done = true
+        if (miss == 0L) done = true
         else {
           unmatched = cut.filter(coalesce(col("_ncand"), lit(0L)) < k)
             .select(leftCols: _*)
@@ -313,12 +309,6 @@ object DistanceJoin {
       "right side / result columns — the lIdCol payload join-back would " +
       "emit ambiguous duplicates; rename them")
   }
-
-  /** Env-gated per-round logging for the doubling loops (measurement,
-    * VERDICT r15 #4/#6 "log the rounds"): GRAFT_LOOP_DEBUG=1. */
-  private def loopDebug(msg: => String): Unit =
-    if (sys.env.get("GRAFT_LOOP_DEBUG").exists(_.nonEmpty))
-      System.err.println(msg)
 
   /** The radius schedule shared by [[nearestLoop]] and [[knnLoop]]
     * (optimization r16). Any schedule returns IDENTICAL rows — a left
@@ -403,8 +393,6 @@ object DistanceJoin {
         val cut = merged.lineageCut()
         val m = merged.queryExecution.observedMetrics(s"nl_round_$round")
         val (miss, total) = (m.getLong(0), m.getLong(1))
-        loopDebug(f"GRAFT_LOOP nearest round $round r=$r%.1f " +
-          s"total=$total miss=$miss")
         val best = cut.filter(col("_best").isNotNull)
           .select(leftCols :+ col("_best.*"): _*)
         out = Some(out.map(_.unionByName(best)).getOrElse(best))

@@ -171,8 +171,8 @@ object Tiles {
    * The caller owns the centroid-containment argument: pruning a
    * centroid-quadkey layout with this cover is exact for POINT rows
    * (centroid = the point) and needs the CONVEX HULL of the mask for
-   * general rows — see `GeoDb.getCollectionByMask`, which encodes
-   * that rule.
+   * general rows — see `plans.EnvelopePrefilter.qkPrefix` (the hull
+   * cover) and `GeoDb.getCollectionByMask` (the pointsOnly cover).
    */
   def coverGeometry(geom: org.locationtech.jts.geom.Geometry, z: Int,
                     maxPrefixes: Int = 64): Seq[String] = {

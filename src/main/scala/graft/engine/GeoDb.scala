@@ -475,10 +475,8 @@ class GeoDb(
    * Spatial path (geodb_get_by_bbox, geodb.sql:1179-1257): rectangle vs
    * `geometry` under one of eight comparison modes, optional extra `where`
    * composed with AND/OR, ORDER BY id, limit/offset (offset needs limit).
-   *
-   * Scale path: a conjunctive envelope pre-filter on the materialized
-   * `_bbox_*` stat columns lets Parquet prune row groups before the JTS
-   * predicate runs (the GIST-index replacement, SURVEY §4 R3).
+   * Row-group pruning (the GIST-index replacement) is
+   * [[graft.plans.EnvelopePrefilter]]'s, see [[spatialRead]].
    */
   def getCollectionByBbox(collection: String,
                           bbox: (Double, Double, Double, Double),
@@ -496,73 +494,26 @@ class GeoDb(
     val (minx, miny, maxx, maxy) =
       if (qCrs == meta.srid) bbox
       else GeoOps.transformBbox(bbox._1, bbox._2, bbox._3, bbox._4, qCrs, meta.srid)
-    val rect = st_makeenvelope(lit(minx), lit(miny), lit(maxx), lit(maxy))
-    // bbox is the FIRST argument, row geometry the second (geodb.sql:1204-1214)
-    val stPred = st_relation(comparisonMode, rect, col("geometry"))
-    val pre0 = envelopePrefilter(comparisonMode, minx, miny, maxx, maxy)
-    // declared quadkey layout: add prefix-range predicates on the _qk
-    // stat column (row-group string min/max pruning). Sound only for
-    // the geom-inside-bbox modes — there the envelope CENTROID lies in
-    // the bbox, so its quadkey falls under Tiles.cover's prefixes; an
-    // intersecting-but-huge geometry's centroid can sit anywhere, so
-    // the intersects family keeps only the _bbox_* prefilter.
-    val qkPre: Option[Column] = qkZoomOf(meta).flatMap { z =>
-      comparisonMode.toLowerCase match {
-        case "contains" | "equals" =>
-          val cov = graft.core.Tiles.cover(minx, miny, maxx, maxy, z,
-            qkMaxPrefixes)
-          Some(if (cov.isEmpty) lit(false)
-          else cov.map(p => col("_qk") >= lit(p) &&
-            col("_qk") <= lit(p + "3" * (z - p.length))).reduce(_ || _))
-        case _ => None
-      }
-    }
-    val pre = (pre0, qkPre) match {
-      case (Some(a), Some(b)) => Some(a && b)
-      case (a, b) => a.orElse(b)
-    }
-    val full = where.filter(_.nonEmpty) match {
-      case Some(w) if op.equalsIgnoreCase("OR") => expr(w) || stPred
-      case Some(w) => expr(w) && stPred
-      case None => stPred
-    }
-    val filtered = readRaw(d, collection)
-      .filter(pre.map(p => if (where.isEmpty || op.equalsIgnoreCase("AND")) full && p else full).getOrElse(full))
-      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-    var out = filtered.orderBy("id") // geodb.sql:1240
-    limit.foreach { l =>
-      offset.foreach(o => out = out.offset(o))
-      out = out.limit(l)
-    }
-    logEvent(EventType.Read, s"Collection $d/$collection read by bbox")
-    emptyContract(out)
+    spatialRead(d, collection, meta, "bbox", GeoOps.makeEnvelope(minx, miny, maxx, maxy),
+      comparisonMode, where, op, limit, offset)
   }
 
   /**
    * ARBITRARY-POLYGON spatial path (r15; [[getCollectionByBbox]] is the
    * rectangle special case): mask geometry (WKT, any areal type) vs
-   * `geometry` under the eight comparison modes, with the same
-   * envelope prefilter AND — new — quadkey PREFIX pruning from
-   * [[graft.core.Tiles.coverGeometry]] of the mask itself, not its
-   * envelope: an L-shaped region's notch contributes no prefixes, so
-   * row groups under it never leave the parquet reader.
+   * `geometry` under the eight comparison modes. On a quadkey layout
+   * the contains/equals modes prune on the cover of the mask's convex
+   * hull ([[graft.plans.EnvelopePrefilter]]), so the notch of an
+   * L-shaped mask keeps less than its envelope would.
    *
-   * Soundness of the mask-cover prune (contains/equals modes only,
-   * like the bbox path): the `_qk` layout keys the ENVELOPE CENTROID.
-   * `mask contains geom` ⟹ geom ⊆ mask ⟹ the centroid of geom's
-   * envelope lies in geom's convex hull (2-D fact: the bounding-box
-   * center of a convex set lies in the set — the four extreme points
-   * touching the box's sides span a quadrilateral around the center)
-   * ⊆ the CONVEX HULL of the mask. So the general prune covers
-   * `hull(mask)` — already strictly better than the envelope for any
-   * non-convex mask. For a POINT-only collection the centroid IS the
-   * point ∈ mask, and `pointsOnly = true` tightens the cover to the
-   * mask itself (the full L-shape win). pointsOnly is a CALLER
-   * CONTRACT: a non-point row pruned under it is silently lost, which
-   * is why every SURVIVING non-point row refuses loudly (the guard
-   * catches misuse unless the offending rows were themselves pruned —
-   * stated plainly here because a partial guard must not read as a
-   * total one).
+   * For a POINT-only collection the envelope centroid IS the point, so
+   * `pointsOnly = true` tightens the cover to the mask itself (the full
+   * L-shape win). pointsOnly is a CALLER CONTRACT the optimizer rule
+   * cannot infer, so this is the one `_qk` prefilter the engine builds
+   * itself: a non-point row pruned under it is silently lost, which is
+   * why every SURVIVING non-point row refuses loudly (the guard catches
+   * misuse unless the offending rows were themselves pruned — stated
+   * plainly here because a partial guard must not read as a total one).
    */
   def getCollectionByMask(collection: String, maskWkt: String,
                           comparisonMode: String = "contains",
@@ -586,77 +537,56 @@ class GeoDb(
       s"getCollectionByMask: mask must be a non-empty areal geometry " +
       s"(Polygon/MultiPolygon), got ${mask.getGeometryType}" +
       (if (mask.isEmpty) " (EMPTY)" else ""))
-    val env = mask.getEnvelopeInternal
-    val stPred = st_relation(comparisonMode, lit(wkb), col("geometry"))
-    val pre0 = envelopePrefilter(comparisonMode,
-      env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
-    val qkPre: Option[Column] = qkZoomOf(meta).flatMap { z =>
-      comparisonMode.toLowerCase match {
-        case "contains" | "equals" =>
-          val covGeom = if (pointsOnly) mask else mask.convexHull()
-          val cov = graft.core.Tiles.coverGeometry(covGeom, z, qkMaxPrefixes)
-          Some(if (cov.isEmpty) lit(false)
-          else cov.map(p => col("_qk") >= lit(p) &&
-            col("_qk") <= lit(p + "3" * (z - p.length))).reduce(_ || _))
-        case _ => None
-      }
-    }
-    val pre = (pre0, qkPre) match {
-      case (Some(a), Some(b)) => Some(a && b)
-      case (a, b) => a.orElse(b)
-    }
-    val checked =
-      if (!pointsOnly) stPred
-      else when(geometry_type(col("geometry")) === "POINT", stPred)
+    val guard = Option.when(pointsOnly)(
+      when(geometry_type(col("geometry")) === "POINT", lit(true))
         .otherwise(raise_error(concat(
           lit("getCollectionByMask(pointsOnly): non-POINT geometry ("),
           geometry_type(col("geometry")),
           lit(") — the tightened mask cover is only sound for points; " +
-            "drop pointsOnly"))).cast(BooleanType))
-    val full = where.filter(_.nonEmpty) match {
-      case Some(w) if op.equalsIgnoreCase("OR") => expr(w) || checked
-      case Some(w) => expr(w) && checked
-      case None => checked
+            "drop pointsOnly"))).cast(BooleanType)))
+    val cover = qkZoomOf(meta).filter(_ => pointsOnly &&
+        Set("contains", "equals").contains(comparisonMode.toLowerCase)).map { z =>
+      graft.core.Tiles.coverGeometry(mask, z).map(p => col("_qk") >= lit(p) &&
+        col("_qk") <= lit(p + "3" * (z - p.length))).reduceOption(_ || _)
+        .getOrElse(lit(false))
     }
-    val filtered = readRaw(d, collection)
-      .filter(pre.map(p => if (where.isEmpty || op.equalsIgnoreCase("AND")) full && p else full).getOrElse(full))
+    spatialRead(d, collection, meta, "mask", wkb, comparisonMode, where, op,
+      limit, offset, guard, cover)
+  }
+
+  /**
+   * The one body of the bbox and mask reads: `st_<mode>(query, geometry)`
+   * (query geometry FIRST, geodb.sql:1204-1214) composed with `where`
+   * under `op`, ORDER BY id (geodb.sql:1240), then offset/limit. It
+   * builds no stat-column prefilter: for a conjunctive
+   * read the optimizer rule [[graft.plans.EnvelopePrefilter]] adds the
+   * `_bbox_*` conjuncts the mode implies and, on a quadkey layout, the
+   * `_qk` prefix ranges. `guard` runs ahead of the predicate, so every
+   * surviving row meets it; `cover` is a caller's own `_qk` prefilter,
+   * added only where the rule would add its own (no `OR` composition).
+   */
+  private def spatialRead(d: String, collection: String, meta: CollectionMeta,
+                          via: String, query: Array[Byte], mode: String,
+                          where: Option[String], op: String,
+                          limit: Option[Int], offset: Option[Int],
+                          guard: Option[Column] = None,
+                          cover: Option[Column] = None): DataFrame = {
+    val spatial = (guard.toSeq :+ st_relation(mode, lit(query), col("geometry")))
+      .reduce(_ && _)
+    val cond = where.filter(_.nonEmpty).map(expr) match {
+      case Some(w) if op.equalsIgnoreCase("OR") => w || spatial
+      case w => (w.toSeq ++ Seq(spatial) ++ cover).reduce(_ && _)
+    }
+    var out = readRaw(d, collection).filter(cond)
       .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-    var out = filtered.orderBy("id")
+      .orderBy("id")
     limit.foreach { l =>
       offset.foreach(o => out = out.offset(o))
       out = out.limit(l)
     }
-    logEvent(EventType.Read, s"Collection $d/$collection read by mask")
+    logEvent(EventType.Read, s"Collection $d/$collection read by $via")
     emptyContract(out)
   }
-
-  /** Quadkey prefix budget for the `_qk` pruning covers (bbox + mask
-    * paths). The trade-off it dials (measured in PruneBench on the
-    * L-mask scenario, z=10): 64 prefixes keep ~53% of the envelope's
-    * tile mass, 256 reach the ~34% optimum — but every prefix is one
-    * more string range pair that Spark re-evaluates PER ROW after the
-    * row-group stats already pruned, so bigger budgets trade row-group
-    * skipping for per-row filter cost. 64 is the measured sweet spot
-    * for ~1M-row collections; raise it for corpora whose row groups
-    * are small relative to the mask's boundary tiles. */
-  private def qkMaxPrefixes: Int =
-    spark.conf.getOption("spark.graft.quadkey.maxPrefixes")
-      .map(_.toInt).getOrElse(64)
-
-  /** Row-group-prunable envelope condition implied by the DE-9IM mode. */
-  private def envelopePrefilter(mode: String, minx: Double, miny: Double,
-                                maxx: Double, maxy: Double): Option[Column] =
-    mode.toLowerCase match {
-      // bbox contains geom => geom envelope inside bbox
-      case "contains" | "equals" =>
-        Some(col("_bbox_minx") >= minx && col("_bbox_maxx") <= maxx &&
-             col("_bbox_miny") >= miny && col("_bbox_maxy") <= maxy)
-      // any interaction requires envelope overlap
-      case "intersects" | "touches" | "overlaps" | "crosses" | "within" =>
-        Some(col("_bbox_minx") <= maxx && col("_bbox_maxx") >= minx &&
-             col("_bbox_miny") <= maxy && col("_bbox_maxy") >= miny)
-      case _ => None // disjoint has no useful envelope implication
-    }
 
   // =========================================================================
   // Aggregates (§2.4)
@@ -929,9 +859,10 @@ class GeoDb(
    * quadkey of their envelope centroid at `zoom` ([[graft.core.Tiles]]),
    * and a persistent hidden `_qk` stat column is written and MAINTAINED
    * by every subsequent insert/upsert/update (unlike the Hilbert key,
-   * which is layout-only). Declared layouts make
-   * [[getCollectionByBbox]] add quadkey PREFIX-RANGE predicates
-   * (`Tiles.cover`) for contains/equals modes, which parquet string
+   * which is layout-only). On a declared layout the optimizer rule
+   * [[graft.plans.EnvelopePrefilter]] adds quadkey PREFIX-RANGE
+   * predicates to containment-direction reads (the bbox and mask reads'
+   * contains/equals modes, and user filters), which parquet string
    * min/max stats prune row groups against — prefix nesting means one
    * stored zoom answers every coarser query. Rows outside the Mercator
    * latitude domain REFUSE at build/DML time (Tiles' contract); use the

@@ -341,8 +341,9 @@ object Dedup {
     // the shuffle join that arbitrary-scale graphs need. Threshold via
     // spark.graft.cc.broadcastNodes (rows; ~16 B/row — the default 2M
     // is a ~32 MB broadcast, well under the driver/executor caps).
-    val nodeCount = labels0.queryExecution.observedMetrics("cc_nodes")
-      .getLong(0)
+    val nodeCount = labels0.queryExecution.observedMetrics.get("cc_nodes")
+      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
+        "components(): node-count metric missing after materialization"))
     val bcastLimit = pairs.sparkSession.conf
       .getOption("spark.graft.cc.broadcastNodes").map(_.toLong)
       .getOrElse(2000000L)
@@ -380,15 +381,11 @@ object Dedup {
       // ONE job: the lineage cut materializes the round AND the
       // CollectMetrics node inside it answers "did any label change?" —
       // the r15 shape paid a second join+isEmpty job per round for that
-      val t0 = System.nanoTime()
       val next = nextAll.lineageCut()
       val changed = nextAll.queryExecution.observedMetrics.get(s"cc_round_$i")
         .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
           "components(): convergence metric missing after materialization"))
       converged = changed == 0L
-      if (sys.env.get("GRAFT_LOOP_DEBUG").exists(_.nonEmpty))
-        System.err.println(f"GRAFT_LOOP components round $i: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s, changed=$changed")
       labels = next.select(col("node"), col("rep"))
       i += 1
     }

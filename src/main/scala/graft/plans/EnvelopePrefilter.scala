@@ -19,8 +19,16 @@ import graft.functions.{StDistance, StDistanceSpherical, StRelation}
  *
  * Soundness: injection only for top-level conjuncts (never inside OR);
  * every non-disjoint DE-9IM relation implies envelope intersection, and
- * contains(bbox, geom) strengthens to envelope containment. Idempotent:
- * skips filters that already reference a stat column.
+ * contains(bbox, geom) strengthens to envelope containment. Idempotent
+ * per kind: no envelope conjuncts for a filter that already references a
+ * `_bbox_*` column, no prefix ranges for one that already references
+ * `_qk`.
+ *
+ * This rule is the one place that decides the stat-column prefilter,
+ * for the engine's own reads too: [[graft.engine.GeoDb]]'s bbox and
+ * mask reads emit only the plain `st_<mode>(<literal>, geometry)`
+ * conjunct and rely on it. The single exception is the mask read's
+ * `pointsOnly` cover, a caller contract this rule cannot infer.
  *
  * DISTANCE conjuncts prune too (r14): `st_distance(geom, <literal>) <= r`
  * (either argument/literal order, `<` too — and therefore `st_dwithin`,
@@ -63,34 +71,35 @@ import graft.functions.{StDistance, StDistanceSpherical, StRelation}
 object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
 
   private val statNames = Seq("_bbox_minx", "_bbox_miny", "_bbox_maxx", "_bbox_maxy")
-  /** Everything this rule can inject — the idempotency guards check
-    * the full set so a previous `_qk` injection also stops re-entry. */
-  private val injectedNames = statNames :+ "_qk"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, child) if !references(cond, injectedNames) =>
+    case f @ Filter(cond, child) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      def extrasFor(target: LogicalPlan): Seq[Expression] = conjuncts.flatMap {
-        case StRelation(mode, q, g: Attribute) if q.foldable =>
-          statsFor(target, g).flatMap { s =>
-            prefilter(mode, q, s(0), s(1), s(2), s(3), queryFirst = true)
-          }.toSeq ++
-            (if (Set("contains", "equals").contains(mode.toLowerCase))
-              qkPrefix(target, g, q).toSeq else Nil)
-        case StRelation(mode, g: Attribute, q) if q.foldable =>
-          statsFor(target, g).flatMap { s =>
-            prefilter(mode, q, s(0), s(1), s(2), s(3), queryFirst = false)
-          }.toSeq ++
-            (if (mode.toLowerCase == "within") qkPrefix(target, g, q).toSeq
-             else Nil)
-        case DistConjunct(g, q, r, sphereR)
-            if r >= 0 && !r.isNaN && !r.isInfinite =>
-          statsFor(target, g).flatMap { s =>
-            distPrefilter(q, r, sphereR, s(0), s(1), s(2), s(3))
-          }
-        case _ => None
+      // per-kind idempotency: a kind `carried` already references —
+      // injected by an earlier pass or hand-built by the caller — is not
+      // injected again, so a caller's own `_qk` cover (GeoDb's
+      // pointsOnly mask read) still gains the envelope conjuncts
+      def extrasFor(target: LogicalPlan, carried: Seq[Expression]): Seq[Expression] = {
+        val envDone = carried.exists(references(_, statNames))
+        val qkDone = carried.exists(references(_, Seq("_qk")))
+        def env(g: Attribute)(build: Seq[Attribute] => Option[Expression]) =
+          if (envDone) None else statsFor(target, g).flatMap(build)
+        def qk(g: Attribute, q: Expression, containment: Boolean) =
+          if (qkDone || !containment) None else qkPrefix(target, g, q)
+        conjuncts.flatMap {
+          case StRelation(mode, q, g: Attribute) if q.foldable =>
+            env(g)(s => prefilter(mode, q, s(0), s(1), s(2), s(3), queryFirst = true)).toSeq ++
+              qk(g, q, Set("contains", "equals").contains(mode.toLowerCase))
+          case StRelation(mode, g: Attribute, q) if q.foldable =>
+            env(g)(s => prefilter(mode, q, s(0), s(1), s(2), s(3), queryFirst = false)).toSeq ++
+              qk(g, q, mode.toLowerCase == "within")
+          case DistConjunct(g, q, r, sphereR)
+              if r >= 0 && !r.isNaN && !r.isInfinite =>
+            env(g)(s => distPrefilter(q, r, sphereR, s(0), s(1), s(2), s(3))).toSeq
+          case _ => Nil
+        }
       }
-      val direct = extrasFor(child)
+      val direct = extrasFor(child, Seq(cond))
       if (direct.nonEmpty) Filter((conjuncts ++ direct).reduce(And), child)
       else child match {
         // stat columns pruned away by a projection — the shape of every
@@ -98,16 +107,15 @@ object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
         // Inject the prefilter BELOW the project, where the stats are
         // still visible; sound because the conjunct is implied by `cond`.
         case Project(projList, grandchild) =>
-          // idempotency: the outer Filter's condition never gains stat
-          // refs, so the :29 guard alone doesn't stop re-application when
-          // this rule runs to fixed point on its own (it is registered via
-          // extraOptimizations). A stat-referencing Filter directly under
-          // the Project can only be a previous injection — skip.
-          val alreadyInjected = grandchild match {
-            case Filter(gcond, _) => references(gcond, injectedNames)
-            case _ => false
-          }
-          val below = if (alreadyInjected) Seq.empty else extrasFor(grandchild)
+          // idempotency: the outer condition cannot reference the
+          // projected-away stats, so a previous injection shows only as
+          // a Filter directly under the Project (this rule runs to fixed
+          // point on its own when registered via extraOptimizations)
+          val carried = cond +: (grandchild match {
+            case Filter(gcond, _) => Seq(gcond)
+            case _ => Nil
+          })
+          val below = extrasFor(grandchild, carried)
           if (below.isEmpty) f
           else Filter(cond, Project(projList, Filter(below.reduce(And), grandchild)))
         case _ => f
@@ -129,8 +137,12 @@ object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
    * bearing: prefixes longer than the stored keys would silently
    * exclude every row, so with no declared zoom nothing is injected.
    * This is what makes the D7 quadkey layout reach ARBITRARY user
-   * queries (raw SQL, DataFrame filters), not just the engine's bbox
-   * and mask read paths.
+   * queries (raw SQL, DataFrame filters), and it is how the engine's
+   * bbox and mask reads reach it too. The prefix budget is
+   * `coverGeometry`'s fixed 64. An empty cover (a hull wholly outside
+   * the Mercator domain, where no indexed centroid lies) injects
+   * nothing; the rows are the same, and for a rectangle the containment
+   * envelope conjuncts already exclude every indexed row group.
    */
   private def qkPrefix(child: LogicalPlan, geom: Attribute,
                        queryGeom: Expression): Option[Expression] = {

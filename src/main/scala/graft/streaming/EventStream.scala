@@ -460,15 +460,7 @@ object EventStream {
               def call(): Unit = span(name)(job())
             })
           }
-          // Await EVERY write before propagating the first failure: an
-          // early rethrow would leave sibling writers of the failed
-          // attempt running while the batch replays, racing the replay's
-          // own writes over the same batch=N dirs and bloom artifacts
-          // (r16 ADVICE fix). Collect-then-rethrow keeps "first failure
-          // propagated, all writes quiescent on return" as the contract.
-          val outcomes = futures.map(f =>
-            try { f.get(); None } catch { case t: Throwable => Some(t) })
-          outcomes.flatten.headOption.foreach(t => throw t)
+          awaitWrites(futures)
         } finally pool.shutdown()
         // scheduled layout maintenance: after this batch's writes land,
         // bin-pack closed ranges across corpus + side tables. Replays
@@ -483,6 +475,31 @@ object EventStream {
         ()
       }
       .start()
+  }
+
+  /**
+   * The ingest sink's write barrier. Awaits EVERY write before
+   * propagating the first failure: an early rethrow would leave sibling
+   * writers of the failed attempt running while the batch replays,
+   * racing the replay's own writes over the same batch=N dirs and bloom
+   * artifacts. So "first failure propagated, all writes quiescent on
+   * return" is the contract. An interrupt of the waiting thread is the
+   * exception: the remaining writes are cancelled, the interrupt flag is
+   * restored and the InterruptedException rethrown.
+   */
+  private[graft] def awaitWrites(
+      futures: Seq[java.util.concurrent.Future[_]]): Unit = {
+    val failures = futures.flatMap { f =>
+      try { f.get(); None }
+      catch {
+        case ie: InterruptedException =>
+          futures.foreach(_.cancel(true))
+          Thread.currentThread().interrupt()
+          throw ie
+        case t: Throwable => Some(t)
+      }
+    }
+    failures.headOption.foreach(t => throw t)
   }
 
   /**

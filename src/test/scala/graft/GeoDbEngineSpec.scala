@@ -697,6 +697,29 @@ class GeoDbEngineSpec extends SparkSpec {
       }.head
       assert(scan.metadata("PushedFilters").contains("_qk"))
     }
+    // pointsOnly: the rule's envelope conjuncts plus the engine's own
+    // TIGHT cover of the mask (not the rule's hull cover)
+    val maskPushed = qMask.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.head.metadata("PushedFilters")
+    assert(Seq("GreaterThanOrEqual(_bbox_minx,-30.5)", "LessThanOrEqual(_bbox_maxx,40.5)",
+      "GreaterThanOrEqual(_bbox_miny,-35.5)", "LessThanOrEqual(_bbox_maxy,40.5)")
+      .forall(maskPushed.contains), maskPushed)
+    def qkUppers(q: org.apache.spark.sql.DataFrame): Set[String] = {
+      import org.apache.spark.sql.catalyst.expressions.{Attribute, LessThanOrEqual, Literal}
+      q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case LessThanOrEqual(a: Attribute, Literal(v, StringType)) if a.name == "_qk" =>
+          v.toString
+      })).toSet
+    }
+    def ranges(cov: Seq[String]) = cov.map(p => p + "3" * (8 - p.length)).toSet
+    val lGeom = GeoOps.read(GeoOps.geomFromText(
+      org.apache.spark.unsafe.types.UTF8String.fromString(l)))
+    val tight = ranges(graft.core.Tiles.coverGeometry(lGeom, 8))
+    val hull = ranges(graft.core.Tiles.coverGeometry(lGeom.convexHull(), 8))
+    assert(tight != hull)
+    assert(qkUppers(qMask) === tight)
+    assert(qkUppers(qHull) === hull)
     // intersects mode keeps only the envelope prefilter (centroid key
     // unsound for big geometries)
     val qi = db.getCollectionByMask("mk", l, "intersects")
@@ -725,6 +748,79 @@ class GeoDbEngineSpec extends SparkSpec {
       db.getCollectionByMask("mk", "LINESTRING(0 0, 1 1)"))
     intercept[IllegalArgumentException](
       db.getCollectionByMask("mk", "POLYGON EMPTY"))
+  }
+
+  test("bbox and mask reads: the optimizer rule's prefilter per mode, where-composition and layout") {
+    import spark.implicits._
+    val rect = "POLYGON((-40.5 -30.5, 40.5 -30.5, 40.5 30.5, -40.5 30.5, -40.5 -30.5))"
+    val l = "POLYGON((-30.5 -35.5, 40.5 -35.5, 40.5 -10.5, -0.5 -10.5, " +
+      "-0.5 40.5, -30.5 40.5, -30.5 -35.5))"
+    // points, small boxes and segments on the integer lattice (off every
+    // half-integer query edge), plus rows equal to / touching each query
+    val rows = (0 until 300).map { i =>
+      (s"POINT(${(i * 7) % 160 - 80} ${(i * 13) % 120 - 60})", i)
+    } ++ (300 until 400).map { i =>
+      val (x, y) = ((i * 11) % 160 - 80, (i * 17) % 120 - 60)
+      (s"POLYGON(($x $y, ${x + 3} $y, ${x + 3} ${y + 2}, $x ${y + 2}, $x $y))", i)
+    } ++ (400 until 450).map { i =>
+      val (x, y) = ((i * 11) % 160 - 80, (i * 17) % 120 - 60)
+      (s"LINESTRING($x $y, ${x + 15} ${y + 7})", i)
+    } ++ Seq((rect, 450), (l, 451), ("LINESTRING(40.5 -5, 40.5 5)", 452),
+      ("LINESTRING(-0.5 20, -0.5 30)", 453))
+    val db = new GeoDb(spark, tmpDir("graft-wh"), "geodb_user")
+    for (c <- Seq("pfh", "pfq")) {
+      db.createCollection(c, Seq("tag" -> "integer"))
+      db.insertIntoCollection(c, rows.toDF("geometry", "tag"))
+    }
+    db.createIndex("pfh")
+    db.createIndex("pfq", method = "quadkey", zoom = 8)
+    // the no-prefilter reference: the engine's own predicate per row
+    val all = db.getCollection("pfh").select("tag", "geometry").collect()
+      .map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+    def wkb(wkt: String) = GeoOps.geomFromText(
+      org.apache.spark.unsafe.types.UTF8String.fromString(wkt))
+    val rectWkb = GeoOps.makeEnvelope(-40.5, -30.5, 40.5, 30.5)
+    val modes = Seq("contains", "within", "intersects", "touches", "overlaps",
+      "crosses", "disjoint", "equals")
+    val wheres = Seq((None, "AND"), (Some("tag < 200"), "AND"), (Some("tag < 200"), "OR"))
+    for {
+      c <- Seq("pfh", "pfq")
+      (path, q, env) <- Seq(("bbox", rectWkb, (-40.5, -30.5, 40.5, 30.5)),
+        ("mask", wkb(l), (-30.5, -35.5, 40.5, 40.5)))
+      mode <- modes
+      (where, op) <- wheres
+    } {
+      val ctx = s"$c $path $mode where=$where op=$op"
+      val df = path match {
+        case "bbox" => db.getCollectionByBbox(c, env, mode, where = where, op = op)
+        case _ => db.getCollectionByMask(c, l, mode, where = where, op = op)
+      }
+      val pushed = df.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.head.metadata("PushedFilters")
+      val (mnx, mny, mxx, mxy) = env
+      val containment = Seq(s"GreaterThanOrEqual(_bbox_minx,$mnx)",
+        s"LessThanOrEqual(_bbox_maxx,$mxx)", s"GreaterThanOrEqual(_bbox_miny,$mny)",
+        s"LessThanOrEqual(_bbox_maxy,$mxy)")
+      val overlap = Seq(s"LessThanOrEqual(_bbox_minx,$mxx)",
+        s"GreaterThanOrEqual(_bbox_maxx,$mnx)", s"LessThanOrEqual(_bbox_miny,$mxy)",
+        s"GreaterThanOrEqual(_bbox_maxy,$mny)")
+      val conj = op == "AND"
+      if (!conj || mode == "disjoint")
+        assert(!pushed.contains("_bbox_"), s"$ctx: unexpected envelope $pushed")
+      else if (mode == "contains" || mode == "equals")
+        assert(containment.forall(pushed.contains), s"$ctx: $pushed")
+      else assert(overlap.forall(pushed.contains), s"$ctx: $pushed")
+      val qk = c == "pfq" && conj && (mode == "contains" || mode == "equals")
+      assert(pushed.contains("_qk") == qk, s"$ctx: _qk expected=$qk in $pushed")
+      val id = GeoOps.modeId(mode)
+      val want = all.filter { case (tag, g) =>
+        val w = where.isDefined && tag < 200
+        val sp = GeoOps.relate(id, q, g)
+        if (where.isEmpty) sp else if (conj) w && sp else w || sp
+      }.map(_._1).sorted.toSeq
+      assert(df.collect().map(_.getAs[Int]("tag")).sorted.toSeq === want, ctx)
+    }
   }
 
   test("EnvelopePrefilter injects _qk prefix ranges for arbitrary user filters") {

@@ -804,4 +804,32 @@ class StreamingSpec extends SparkSpec {
     val n = sess.count()
     assert(n > 0)
   }
+
+  test("ingest write barrier: an interrupt cancels the writes and is not swallowed") {
+    import java.util.concurrent.CompletableFuture
+    // two writers that never finish: a barrier that swallows the
+    // interrupt moves on to the second and blocks forever
+    val writes = Seq.fill(2)(new CompletableFuture[Unit]())
+    @volatile var outcome = "still waiting"
+    @volatile var flagRestored = false
+    val waiter = new Thread(() =>
+      try { EventStream.awaitWrites(writes); outcome = "returned" }
+      catch {
+        case _: InterruptedException =>
+          outcome = "interrupted"
+          flagRestored = Thread.currentThread().isInterrupted
+        case t: Throwable => outcome = s"threw $t"
+      })
+    waiter.setDaemon(true)
+    waiter.start()
+    val deadline = System.nanoTime() + 10000000000L
+    while (waiter.getState != Thread.State.WAITING && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    waiter.interrupt()
+    waiter.join(10000)
+    assert(!waiter.isAlive, "barrier kept blocking after the interrupt")
+    assert(outcome == "interrupted")
+    assert(flagRestored, "interrupt flag cleared")
+    assert(writes.forall(_.isCancelled), "remaining writes not cancelled")
+  }
 }
