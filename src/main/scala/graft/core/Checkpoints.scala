@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /**
  * Lineage cuts with a cluster-survivable option.
@@ -37,6 +37,13 @@ import org.apache.spark.sql.Dataset
  * Row-identity across both modes is pinned by ExtSpec ("reliable
  * checkpoint mode: identical results"): the cut is a pure
  * materialization boundary, never a semantic choice.
+ *
+ * Round-based operators read their per-round scalars (stage counts,
+ * convergence, miss counts, dangling mass) from `observe()` metrics
+ * evaluated by the cut's own action, through ONE helper,
+ * [[cutObserved]] — the engine's only reader of
+ * `queryExecution.observedMetrics`. A round is then one action: the
+ * cut that materializes the frame also answers the loop's question.
  */
 object Checkpoints {
 
@@ -65,6 +72,25 @@ object Checkpoints {
         ds.checkpoint(eager)
       case None => ds.localCheckpoint(eager)
     }
+  }
+
+  /**
+   * [[cut]] `observed` eagerly and return the cut frame together with
+   * every named `observe()` metric the cut's action collected. `names`
+   * are `observe(name, ...)` names attached anywhere in `observed`'s
+   * plan (a fused chain attaches several). A name the action did not
+   * report throws one IllegalStateException naming `scope` and the
+   * metric.
+   */
+  def cutObserved(observed: DataFrame, scope: String,
+                  names: String*): (DataFrame, Map[String, Row]) = {
+    val out = cut(observed)
+    val metrics = observed.queryExecution.observedMetrics
+    (out, names.map { n =>
+      n -> metrics.getOrElse(n, throw new IllegalStateException(
+        s"$scope: observed metric '$n' missing after the lineage cut — " +
+          "the cut's action did not execute the observed plan"))
+    }.toMap)
   }
 
   /** `.lineageCut(...)` chain syntax for [[cut]]. */

@@ -223,12 +223,11 @@ object DistanceJoin {
               .reduce(_ && _), "left")
           .select(unmatched.columns.map(unmatched(_))
             ++ Seq(col("_ncand"), col("_top")): _*)
-          .observe(s"knn_round_$round",
+        val name = s"knn_round_$round"
+        val (cut, m) = Checkpoints.cutObserved(merged.observe(name,
             count(when(coalesce(col("_ncand"), lit(0L)) < k, 1)).as("miss"),
-            count(lit(1)).as("total"))
-        val cut = merged.lineageCut()
-        val m = merged.queryExecution.observedMetrics(s"knn_round_$round")
-        val (miss, total) = (m.getLong(0), m.getLong(1))
+            count(lit(1)).as("total")), "knnJoin", name)
+        val (miss, total) = (m(name).getLong(0), m(name).getLong(1))
         val resolved = explodeTop(cut.filter(col("_ncand") >= k))
         out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
         if (miss == 0L) done = true
@@ -250,10 +249,12 @@ object DistanceJoin {
         else {
           val resolvedKeys = resolved.filter(col("rank") === 1)
             .select(leftCols: _*)
-          val next = unmatched.join(resolvedKeys,
-            unmatched.columns.map(c => unmatched(c) <=> resolvedKeys(c))
-              .reduce(_ && _), "left_anti").lineageCut()
-          if (next.isEmpty) done = true
+          val name = s"knn_rest_$round"
+          val (next, m) = Checkpoints.cutObserved(unmatched.join(resolvedKeys,
+              unmatched.columns.map(c => unmatched(c) <=> resolvedKeys(c))
+                .reduce(_ && _), "left_anti")
+            .observe(name, count(lit(1)).as("n")), "knnJoin", name)
+          if (m(name).getLong(0) == 0L) done = true
           else { unmatched = next; r = math.min(r * 2, maxRadius) }
         }
       }
@@ -345,7 +346,10 @@ object DistanceJoin {
     * keys the left join emits exactly one row per unmatched left, and
     * filter(_best nullness) splits it into the r15 shape's `best` and
     * anti-join results. The whole-row path (duplicate lefts collapse —
-    * a left join would instead duplicate matches) keeps the r15 shape.
+    * a left join would instead duplicate matches) keeps the r15
+    * anti-join shape, with the next round's unmatched count observed on
+    * that round's cut ([[Checkpoints.cutObserved]]) instead of a separate
+    * isEmpty job.
     */
   private def nearestLoop(left: DataFrame, right: DataFrame,
                           rIdCol: String,
@@ -387,12 +391,11 @@ object DistanceJoin {
             unmatched.columns.map(c => unmatched(c) <=> keyed("_k_" + c))
               .reduce(_ && _), "left")
           .select(unmatched.columns.map(unmatched(_)) :+ col("_best"): _*)
-          .observe(s"nl_round_$round",
+        val name = s"nl_round_$round"
+        val (cut, m) = Checkpoints.cutObserved(merged.observe(name,
             count(when(col("_best").isNull, 1)).as("miss"),
-            count(lit(1)).as("total"))
-        val cut = merged.lineageCut()
-        val m = merged.queryExecution.observedMetrics(s"nl_round_$round")
-        val (miss, total) = (m.getLong(0), m.getLong(1))
+            count(lit(1)).as("total")), "nearestJoin", name)
+        val (miss, total) = (m(name).getLong(0), m(name).getLong(1))
         val best = cut.filter(col("_best").isNotNull)
           .select(leftCols :+ col("_best.*"): _*)
         out = Some(out.map(_.unionByName(best)).getOrElse(best))
@@ -419,8 +422,10 @@ object DistanceJoin {
             .reduce(_ && _), "left_anti")
         if (r >= maxRadius) done = true
         else {
-          val remaining = next.lineageCut()
-          if (remaining.isEmpty) done = true
+          val name = s"nl_rest_$round"
+          val (remaining, m) = Checkpoints.cutObserved(
+            next.observe(name, count(lit(1)).as("n")), "nearestJoin", name)
+          if (m(name).getLong(0) == 0L) done = true
           else { unmatched = remaining; r = math.min(r * 2, maxRadius) }
         }
       }

@@ -90,83 +90,28 @@ object Tiles {
   }
 
   /**
-   * Minimal-ish QUADKEY PREFIX COVER of a lon/lat rectangle — the
-   * driver-side planning half of the quadkey physical layout
-   * (`GeoDb.createIndex(method = "quadkey")`): the returned prefixes
-   * turn into `_qk BETWEEN p||'00…' AND p||'33…'` range predicates
-   * that parquet row-group string min/max stats prune against.
+   * QUADKEY PREFIX COVER of a geometry — the driver-side planning half
+   * of the quadkey physical layout (`GeoDb.createIndex(method =
+   * "quadkey")`): the returned prefixes turn into `_qk BETWEEN
+   * p||'00…' AND p||'33…'` range predicates that parquet row-group
+   * string min/max stats prune against. A rectangle (a bbox read) is
+   * the common case; the quadtree descends with JTS tests against the
+   * geometry itself, so an L-shaped / multipart region covers only the
+   * tiles it actually touches — the notch of an L contributes NO
+   * prefixes, where the envelope cover keeps it all.
    *
-   * Quadtree descent: a node fully inside the rect emits its prefix; a
-   * node partially inside recurses; iterative deepening caps the
-   * result at `maxPrefixes` (a coarser prefix only WIDENS the ranges —
-   * always sound, never lossy). The rect is clamped to the Mercator
-   * domain first (an indexed row's key exists only there — [[quadkey]]
-   * refuses outside it), and the tile range carries a ±1-tile margin
-   * absorbing the documented tile_y ulp class, so a centroid binned on
-   * an executor can never fall outside a cover computed on the driver.
-   * Empty clamped rect → empty cover (no indexed row can match).
-   */
-  def cover(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double,
-            z: Int, maxPrefixes: Int = 64): Seq[String] = {
-    require_z(z)
-    require(z >= 1, "tiles: cover needs zoom >= 1")
-    require(maxPrefixes >= 4, s"tiles: maxPrefixes must be >= 4, got $maxPrefixes")
-    require(!lonMin.isNaN && !latMin.isNaN && !lonMax.isNaN && !latMax.isNaN,
-      "tiles: cover got a NaN rect corner")
-    val lo = math.max(lonMin, -180.0); val hi = math.min(lonMax, 180.0)
-    val la = math.max(latMin, -MaxLatDeg); val lb = math.min(latMax, MaxLatDeg)
-    if (lo > hi || la > lb) return Seq.empty
-    val n = 1L << z
-    def tx(lon: Double): Long =
-      math.min(math.floor((lon + 180.0) / 360.0 * n).toLong, n - 1)
-    def ty(lat: Double): Long = {
-      val phi = math.toRadians(lat)
-      val y = (1.0 - math.log(math.tan(phi) + 1.0 / math.cos(phi)) / math.Pi) / 2.0 * n
-      math.max(0L, math.min(math.floor(y).toLong, n - 1))
-    }
-    // y grows with FALLING latitude; ±1-tile ulp margin on every edge
-    val tx0 = math.max(0L, tx(lo) - 1); val tx1 = math.min(n - 1, tx(hi) + 1)
-    val ty0 = math.max(0L, ty(lb) - 1); val ty1 = math.min(n - 1, ty(la) + 1)
-    def coverAtDepth(maxD: Int): Vector[String] = {
-      val out = Vector.newBuilder[String]
-      def rec(d: Int, nx: Long, ny: Long, prefix: String): Unit = {
-        val shift = z - d
-        val rx0 = nx << shift; val rx1 = ((nx + 1L) << shift) - 1
-        val ry0 = ny << shift; val ry1 = ((ny + 1L) << shift) - 1
-        if (rx1 < tx0 || rx0 > tx1 || ry1 < ty0 || ry0 > ty1) ()
-        else if ((rx0 >= tx0 && rx1 <= tx1 && ry0 >= ty0 && ry1 <= ty1) || d == maxD)
-          out += prefix
-        else (0 until 4).foreach { q =>
-          rec(d + 1, nx * 2 + (q & 1), ny * 2 + (q >> 1), prefix + q)
-        }
-      }
-      rec(0, 0L, 0L, "")
-      out.result()
-    }
-    var depth = z
-    var res = coverAtDepth(depth)
-    while (res.size > maxPrefixes && depth > 0) { depth -= 1; res = coverAtDepth(depth) }
-    res
-  }
-
-  /**
-   * Quadkey prefix cover of an ARBITRARY geometry (r15; [[cover]] is
-   * the rectangle special case): the quadtree descends with JTS tests
-   * against the polygon itself, so an L-shaped / multipart region
-   * covers only the tiles it actually touches — the notch of an L
-   * contributes NO prefixes, where the envelope cover keeps it all.
-   *
-   * Soundness mirrors [[cover]]'s: the DROP decision (subtree emits
-   * nothing) tests disjointness against the node rect EXPANDED by one
-   * z-level tile on every side, absorbing the documented tile_y ulp
-   * class (a centroid binned with a drifted `ln`/`tan` on an executor
-   * can land at most one tile off); the EMIT decision (JTS `covers` of
-   * the unexpanded rect, or hitting the depth floor) only chooses
-   * coarse-vs-recurse — both sound. Iterative deepening caps the
-   * prefix count at `maxPrefixes` exactly like [[cover]] (with an
+   * Soundness: the DROP decision (subtree emits nothing) tests
+   * disjointness against the node rect EXPANDED by one z-level tile on
+   * every side, absorbing the documented tile_y ulp class (a centroid
+   * binned with a drifted `ln`/`tan` on an executor can land at most
+   * one tile off); the EMIT decision (JTS `covers` of the unexpanded
+   * rect, or hitting the depth floor) only chooses coarse-vs-recurse —
+   * both sound. Iterative deepening caps the prefix count at
+   * `maxPrefixes` (a coarser prefix only WIDENS the ranges), with an
    * early-abort so a huge coastline at deep zoom cannot enumerate
-   * millions of boundary tiles before coarsening). EMPTY geometry →
-   * empty cover (nothing indexed can match it).
+   * millions of boundary tiles before coarsening. EMPTY geometry, or
+   * one more than a tile away from the Mercator domain → empty cover
+   * (nothing indexed can match it).
    *
    * The caller owns the centroid-containment argument: pruning a
    * centroid-quadkey layout with this cover is exact for POINT rows

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Checkpoints
 import graft.core.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -286,6 +287,10 @@ object Dedup {
     out
   }
 
+  // broadcast gate of the per-round label frame, in payload bytes: the
+  // old 2M-row gate at 16 B per long-id (node, rep) row
+  private val BroadcastLabelBytes = 2000000L * 16L
+
   /**
    * Connected components over a pair set by iterative smallest-label
    * propagation PLUS pointer doubling (each round also contracts
@@ -331,23 +336,24 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val labels0 = edges.groupBy(col("a").as("node"))
       .agg(least(min("b"), col("a")).as("rep"))
-      .observe("cc_nodes", count(lit(1)).as("n"))
-    var labels = labels0.lineageCut()
-    // node count off the init materialization's own observe metric (no
-    // extra job): it decides — §8 "decide with small rows" — whether
-    // the per-round label frame rides a BROADCAST join (no shuffle of
-    // the much larger edge set per round; the usual case for near-dup
-    // cluster graphs, whose label frame is tiny next to the edges) or
-    // the shuffle join that arbitrary-scale graphs need. Threshold via
-    // spark.graft.cc.broadcastNodes (rows; ~16 B/row — the default 2M
-    // is a ~32 MB broadcast, well under the driver/executor caps).
-    val nodeCount = labels0.queryExecution.observedMetrics.get("cc_nodes")
-      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
-        "components(): node-count metric missing after materialization"))
-    val bcastLimit = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.broadcastNodes").map(_.toLong)
-      .getOrElse(2000000L)
-    val bcast = nodeCount <= bcastLimit
+    // the label frame's payload bytes, off the init cut's own observe
+    // metric (no extra job): they decide — §8 "decide with small rows"
+    // — whether the per-round label frame rides a BROADCAST join (no
+    // shuffle of the much larger edge set per round; the usual case for
+    // near-dup cluster graphs, whose label frame is tiny next to the
+    // edges) or the shuffle join that arbitrary-scale graphs need.
+    // Bytes, not rows: string ids (URLs) make a row hundreds of bytes
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val idBytes: Column => Column = labels0.schema("node").dataType match {
+      case _: StringType | BinaryType => c => coalesce(octet_length(c), lit(0))
+      case t => _ => lit(t.defaultSize)
+    }
+    val (labelsInit, init) = Checkpoints.cutObserved(
+      labels0.observe("cc_init", coalesce(
+        sum(idBytes(col("node")) + idBytes(col("rep"))), lit(0L)).as("bytes")),
+      "components()", "cc_init")
+    var labels = labelsInit
+    val bcast = init("cc_init").getLong(0) <= BroadcastLabelBytes
     def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // self-loops (marked `_own` = true) ride the per-round join so ONE
     // aggregate yields min(own, neighbors) AND carries the node's
@@ -376,16 +382,14 @@ object Dedup {
           .alias("r")), Seq("rep"), "left")
         .select(col("node"), coalesce(col("rep2"), col("rep")).as("rep"),
           col("_old"))
-        .observe(s"cc_round_$i",
-          count(when(col("rep") =!= col("_old"), 1)).as("changed"))
       // ONE job: the lineage cut materializes the round AND the
       // CollectMetrics node inside it answers "did any label change?" —
       // the r15 shape paid a second join+isEmpty job per round for that
-      val next = nextAll.lineageCut()
-      val changed = nextAll.queryExecution.observedMetrics.get(s"cc_round_$i")
-        .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
-          "components(): convergence metric missing after materialization"))
-      converged = changed == 0L
+      val round = s"cc_round_$i"
+      val (next, m) = Checkpoints.cutObserved(nextAll.observe(round,
+          count(when(col("rep") =!= col("_old"), 1)).as("changed")),
+        "components()", round)
+      converged = m(round).getLong(0) == 0L
       labels = next.select(col("node"), col("rep"))
       i += 1
     }

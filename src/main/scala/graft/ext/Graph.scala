@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Checkpoints
 import graft.core.Checkpoints.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,10 +19,11 @@ import org.apache.spark.storage.StorageLevel
  * Both operators are expressed as slim-frame hash joins + aggregates —
  * no custom plans, no driver-side adjacency:
  *
- *  - [[pageRank]] moves only `(node, rank)` longs per iteration (the
- *    edge table is joined pre-partitioned on `src`, so each of the
- *    fixed `iters` rounds pays ONE shuffle of the slim rank frame into
- *    the edge partitioning plus ONE aggregate shuffle on `dst`);
+ *  - [[pageRank]] moves only `(node, rank, dangling flag)` rows per
+ *    iteration (the edge table is joined pre-partitioned on `src`, so
+ *    each of the fixed `iters` rounds pays ONE shuffle of the slim rank
+ *    frame into the edge partitioning plus ONE aggregate shuffle on
+ *    `dst`, in ONE Spark action: the round's lineage cut);
  *  - [[triangleCounts]] uses the degree-ordered orientation (compact-
  *    forward; Latapy 2008): every edge points from its lower-(degree,
  *    id) endpoint, so per-node out-degree is O(√m) on ANY graph and the
@@ -80,10 +82,9 @@ object Graph {
    * Scale: the edge table (+ per-src out-degree) is materialized ONCE,
    * repartitioned on `src`, and reused every round; the per-round
    * moving parts are the (node, pr) frame (shuffled into that
-   * partitioning) and the contribution aggregate on `dst`. The only
-   * driver traffic is one dangling-mass scalar per round (an aggregate
-   * over the anti-joined dangling node set — slim by construction).
-   * At 10⁹ nodes the rank frame is ~16 GB spread over the cluster;
+   * partitioning) and the contribution aggregate on `dst`. Each round
+   * is ONE action, its lineage cut, which also observes the dangling
+   * mass the next round redistributes. At 10⁹ nodes the rank frame is ~16 GB spread over the cluster;
    * nothing here is proportional to edge count on the driver.
    */
   def pageRank(edges: DataFrame, srcCol: String = "src",
@@ -97,44 +98,7 @@ object Graph {
     val e = edges.select(
         refusedLong(edges, srcCol, "pageRank").as("src"),
         refusedLong(edges, dstCol, "pageRank").as("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "pageRank: empty edge table")
-    // out-degree per src, co-partitioned with the edge frame
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // nodes with no out-edges: their mass redistributes uniformly
-    val dangling = nodes.join(deg.select(col("src").as("node")), Seq("node"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eDeg = e.join(deg, Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (RankScale * 15L / 100L) / n // exact: both operands positive
-    var ranks = nodes.select(col("node"), lit(RankScale / n).as("pr"))
-      .lineageCut()
-    var i = 0
-    while (i < iters) {
-      val ds = dangling.join(ranks, Seq("node"))
-        .agg(coalesce(sum("pr"), lit(0L)).as("s"))
-        .head().getLong(0)
-      val dTerm = (ds * 85L) / (100L * n)
-      val contrib = eDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          expr("(pr * 85) div (100 * outdeg)").as("c"))
-        .groupBy("node").agg(sum("c").as("cs"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base + dTerm) + coalesce(col("cs"), lit(0L))).as("pr"))
-        .lineageCut()
-      i += 1
-    }
-    Seq(e, nodes, deg, dangling, eDeg).foreach(_.unpersist())
-    ranks
+    rankLoop(e, None, iters, "pageRank")
   }
 
   /**
@@ -164,51 +128,72 @@ object Graph {
       require(edges.columns.contains(c),
         s"personalizedPageRank: column '$c' missing from ${edges.columns.mkString("[", ",", "]")}")
     }
-    val spark = edges.sparkSession
-    import spark.implicits._
     val e = edges.select(
         refusedLong(edges, srcCol, "personalizedPageRank").as("src"),
         refusedLong(edges, dstCol, "personalizedPageRank").as("dst"))
-      .repartition(col("src"))
+    rankLoop(e, Some(sources), iters, "personalizedPageRank")
+  }
+
+  /**
+   * The fixed-round loop behind [[pageRank]] (`seeds` = None: every
+   * node is a seed) and [[personalizedPageRank]] over the `(src, dst)`
+   * edge frame `e`. Each rank frame carries a `_dang` flag (no
+   * out-edges) set once from `nodes LEFT JOIN deg`, and each round's
+   * cut observes the frame's dangling mass `sum(pr where _dang)` — the
+   * next round's teleport term — so a round is ONE action, the cut
+   * ([[graft.core.Checkpoints.cutObserved]]).
+   */
+  private def rankLoop(e: DataFrame, seeds: Option[Seq[Long]],
+                       iters: Int, op: String): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val es = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    // out-degree per src, co-partitioned with the edge frame
+    val deg = es.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val srcSet = sources.toDF("node")
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .union(srcSet.select(col("node")))
-      .distinct()
+    // every node (seeds need not appear in the edge table), flagged
+    // dangling when it has no out-edges: its mass redistributes to the
+    // seeds every round
+    val nodeRefs = es.select(col("src").as("node"))
+      .union(es.select(col("dst").as("node")))
+    val nodes = seeds.map(s => nodeRefs.union(s.toDF("node")))
+      .getOrElse(nodeRefs).distinct()
+      .join(deg.select(col("src").as("node"), lit(false).as("_dang")),
+        Seq("node"), "left")
+      .select(col("node"), coalesce(col("_dang"), lit(true)).as("_dang"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nS = sources.size.toLong
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val isSeed = seeds.map(s => col("node").isin(s: _*)).getOrElse(lit(true))
+    val nS = seeds.map(_.size.toLong).getOrElse(nodes.count())
+    require(nS > 0, s"$op: empty edge table")
+    val eDeg = es.join(deg, Seq("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling = nodes.join(deg.select(col("src").as("node")), Seq("node"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eDeg = e.join(deg, Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val isSeed = col("node").isin(sources: _*)
-    val base = (RankScale * 15L / 100L) / nS
-    var ranks = nodes.select(col("node"),
-        when(isSeed, lit(RankScale / nS)).otherwise(lit(0L)).as("pr"))
-      .lineageCut()
-    var i = 0
-    while (i < iters) {
-      val ds = dangling.join(ranks, Seq("node"))
-        .agg(coalesce(sum("pr"), lit(0L)).as("s"))
-        .head().getLong(0)
+    val base = (RankScale * 15L / 100L) / nS // exact: both operands positive
+    def cutRound(ranks: DataFrame, i: Int): (DataFrame, Long) = {
+      val name = s"rank_round_$i"
+      val (cut, m) = Checkpoints.cutObserved(ranks.observe(name,
+          coalesce(sum(when(col("_dang"), col("pr"))), lit(0L)).as("dangling")),
+        op, name)
+      (cut, m(name).getLong(0))
+    }
+    var (ranks, ds) = cutRound(nodes.select(col("node"),
+      when(isSeed, lit(RankScale / nS)).otherwise(lit(0L)).as("pr"),
+      col("_dang")), 0)
+    for (i <- 1 to iters) {
       val dTerm = (ds * 85L) / (100L * nS)
       val contrib = eDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+        .join(ranks.select(col("node").as("src"), col("pr")), Seq("src"))
         .select(col("dst").as("node"),
           expr("(pr * 85) div (100 * outdeg)").as("c"))
         .groupBy("node").agg(sum("c").as("cs"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
+      val (next, nextDs) = cutRound(nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
           (when(isSeed, lit(base + dTerm)).otherwise(lit(0L)) +
-            coalesce(col("cs"), lit(0L))).as("pr"))
-        .lineageCut()
-      i += 1
+            coalesce(col("cs"), lit(0L))).as("pr"),
+          col("_dang")), i)
+      ranks = next; ds = nextDs
     }
-    Seq(e, nodes, deg, dangling, eDeg).foreach(_.unpersist())
-    ranks
+    Seq(es, nodes, deg, eDeg).foreach(_.unpersist())
+    ranks.select(col("node"), col("pr"))
   }
 
   /**

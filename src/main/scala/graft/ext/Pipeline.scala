@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Checkpoints
 import graft.core.Checkpoints.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
@@ -42,12 +43,6 @@ import org.apache.spark.sql.functions._
  */
 object Pipeline {
 
-  /** Dev-only per-stage wall timing on stderr (`GRAFT_STAGE_TIMING=1`) —
-    * the measure-first hook for the ingest/cleaning stack; zero cost
-    * when unset. */
-  private val stageTiming: Boolean =
-    sys.env.get("GRAFT_STAGE_TIMING").exists(_.nonEmpty)
-
   /**
    * FUSED stage-report plumbing (r16). The r15 shape paid TWO jobs per
    * stage — an eager `lineageCut()` materialization plus a `count()`
@@ -59,9 +54,9 @@ object Pipeline {
    *  1. every stage's survivor count rides an `observe()` metric
    *     (`CollectMetrics` — exactly-once per successful execution, task
    *     retries do not double-count) evaluated DURING the next
-   *     materialization and read back from that action's
-   *     `queryExecution.observedMetrics` — the standalone `count()` job
-   *     per stage is gone;
+   *     materialization and read back through
+   *     [[graft.core.Checkpoints.cutObserved]] — the standalone
+   *     `count()` job per stage is gone;
    *  2. consecutive SINGLE-consumer stages share one materialization
    *     ([[mark]] without [[materialize]] between them). Materialization
    *     stays wherever a stage's output is consumed more than once
@@ -69,41 +64,28 @@ object Pipeline {
    *     probe paths) or its count feeds plan construction (the derived
    *     boilerplate threshold) — cutting those would re-execute work,
    *     the opposite of the point.
-   *
-   * `GRAFT_STAGE_TIMING` spans now time mark→materialize, so the FIRST
-   * stage of a fused chain carries the whole chain's wall time and later
-   * members read near-zero — the count fields are unchanged.
    */
   private final class StageChain(
       scope: String,
       report: scala.collection.mutable.Builder[StageReport, Seq[StageReport]]) {
     private val pending =
-      scala.collection.mutable.ArrayBuffer[(String, Option[DataFrame], Long)]()
+      scala.collection.mutable.ArrayBuffer[(String, Option[DataFrame])]()
     /** survivor count of the most recently materialized stage */
     var lastCount = 0L
     /** Attach stage `name`'s count as an observe metric; the count is
       * realized (and reported) by the next [[materialize]]. */
     def mark(name: String, overflow: Option[DataFrame] = None)
             (df: DataFrame): DataFrame = {
-      pending += ((name, overflow, System.nanoTime()))
+      pending += ((name, overflow))
       df.observe("st_" + name, count(lit(1)).as("n"))
     }
     /** Cut lineage once; harvest every pending stage's observed count. */
     def materialize(df: DataFrame): DataFrame = {
-      val out = df.lineageCut()
-      val metrics = df.queryExecution.observedMetrics
-      pending.foreach { case (name, overflow, t0) =>
-        val n = metrics.get("st_" + name) match {
-          case Some(row) => row.getLong(0)
-          case None => throw new IllegalStateException(
-            s"stage chain $scope/$name: observed metric missing after " +
-              "materialization — the checkpoint action did not execute " +
-              "the observed plan")
-        }
-        lastCount = n
-        if (stageTiming) System.err.println(
-          f"GRAFT_STAGE $scope/$name: ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows")
-        report += StageReport(name, n, overflow)
+      val (out, metrics) = Checkpoints.cutObserved(df, s"stage chain $scope",
+        pending.map("st_" + _._1).toSeq: _*)
+      pending.foreach { case (name, overflow) =>
+        lastCount = metrics("st_" + name).getLong(0)
+        report += StageReport(name, lastCount, overflow)
       }
       pending.clear()
       out
@@ -235,12 +217,9 @@ object Pipeline {
     // from) rides the report instead of being silently discarded; the
     // signature frame is the shared persisted table, so this costs the
     // banding + one slim aggregate, not a second shingle pass
-    val tOv = System.nanoTime()
     val overflow = Dedup.minhashBandOverflow(
       Dedup.charShingleSets(cur, textCol, idCol),
       maxBucket = minhashMaxBucket).lineageCut()
-    if (stageTiming) System.err.println(
-      f"GRAFT_STAGE clean/_overflow: ${(System.nanoTime() - tOv) / 1e9}%.3f s")
     cur = chain.stage("minhash_dedup", Some(overflow))(Dedup.minhashKeepers(
       cur, textCol, idCol, threshold = minhashThreshold,
       maxBucket = minhashMaxBucket))
@@ -454,7 +433,6 @@ object Pipeline {
     // reproduces exactly crossPairsViaMinhash's banding and criterion)
     // rides the stage report: no silent exclusions, per the README
     // convention this function's own URL require documents.
-    val tXOv = System.nanoTime()
     val crossOverflow = (oldMinhashTable match {
       case Some(tbl) => Dedup.minhashBandOverflowFromSigs(
         tbl.select("id", "sig"), maxBucket = minhashMaxBucket)
@@ -463,8 +441,6 @@ object Pipeline {
           col(oldTextCol).as(textCol)), textCol, idCol),
         maxBucket = minhashMaxBucket)
     }).lineageCut()
-    if (stageTiming) System.err.println(
-      f"GRAFT_STAGE ingest/_cross_overflow: ${(System.nanoTime() - tXOv) / 1e9}%.3f s")
     cur = stage("minhash_cross_dedup", Some(crossOverflow))(oldMinhashTable match {
       case Some(tbl) =>
         val dupes = Dedup.crossPairsViaMinhashTable(

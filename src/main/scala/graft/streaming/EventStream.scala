@@ -307,16 +307,6 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // dev-only span timing on stderr (GRAFT_STAGE_TIMING=1) — the
-        // measure-first hook for the sink's non-stage work
-        val spanTiming = sys.env.get("GRAFT_STAGE_TIMING").exists(_.nonEmpty)
-        def span[A](name: String)(body: => A): A = {
-          val t0 = System.nanoTime()
-          val out = body
-          if (spanTiming) System.err.println(
-            f"GRAFT_STAGE sink/$name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          out
-        }
         // the cleaning stack resolves its kernels via the SQL registry;
         // registration is idempotent and the sink must not depend on
         // the caller having done it
@@ -342,10 +332,10 @@ object EventStream {
         // the current corpus, or a batch-shaped EMPTY frame on the very
         // first batch: ingestBatch's cross stages all no-op against an
         // empty old side
-        val old = span("read_old_corpus")(priorParts(corpusDir) match {
+        val old = priorParts(corpusDir) match {
           case Some(parts) if parts.nonEmpty => spark.read.parquet(parts: _*)
           case _ => batch.select(keepCols: _*).limit(0)
-        })
+        }
         // maintained side tables; bootstrap (derive from the corpus +
         // persist) covers an externally-seeded corpus dir, so later
         // batches never under-cover it
@@ -358,20 +348,20 @@ object EventStream {
           }
         val side = s"$corpusDir.side"
         val urlSet = urlCol.map { u =>
-          span("side_urlset")(sideTable(s"$side/urlset",
+          sideTable(s"$side/urlset",
             old.select(graft.ext.TextAnalysis.canonicalizeUrl(col(u))
               .as("url_canon")).filter(col("url_canon").isNotNull).distinct())
-            .select("url_canon"))
+            .select("url_canon")
         }
-        val hashSet = span("side_md5set")(sideTable(s"$side/md5set",
+        val hashSet = sideTable(s"$side/md5set",
           old.select(md5(col(textCol)).as("text_md5")).distinct())
-          .select("text_md5"))
+          .select("text_md5")
         // the minhash (id, sig, sh) table: with it the near-dup cross
         // stage reads ONLY this artifact — a fresh session never pays an
         // old-corpus text scan to rebuild signatures
-        val mhTable = span("side_minhash")(sideTable(s"$side/minhash",
+        val mhTable = sideTable(s"$side/minhash",
           graft.ext.Dedup.minhashTableRows(old, textCol, idCol))
-          .select("id", "sig", "sh"))
+          .select("id", "sig", "sh")
         // bloom artifacts: bootstrap from the (already batch-excluded)
         // side tables if absent, else load. A replayed batch's own keys
         // may already sit in the bloom — harmless over-containment, the
@@ -385,22 +375,21 @@ object EventStream {
           graft.ext.Bloom.loadBloom(spark, path)._1
         }
         val urlBloom = for { _ <- bloomExpectedKeys; u <- urlSet }
-          yield span("bloom_url_load")(bloomArtifact(s"$side/bloom_url", u, "url_canon"))
+          yield bloomArtifact(s"$side/bloom_url", u, "url_canon")
         val hashBloom = bloomExpectedKeys.map(_ =>
-          span("bloom_md5_load")(bloomArtifact(s"$side/bloom_md5", hashSet, "text_md5")))
-        val (survivors0, report) = span("ingest_batch_total")(graft.ext.Pipeline.ingestBatch(
+          bloomArtifact(s"$side/bloom_md5", hashSet, "text_md5"))
+        val (survivors0, report) = graft.ext.Pipeline.ingestBatch(
           batch, textCol, idCol, old, textCol, idCol,
           urlCol = urlCol, oldUrlCol = urlCol,
           minhashThreshold = minhashThreshold,
           minhashMaxBucket = minhashMaxBucket,
           oldUrlSet = urlSet, oldHashSet = Some(hashSet),
           oldMinhashTable = Some(mhTable),
-          oldUrlBloom = urlBloom, oldHashBloom = hashBloom))
+          oldUrlBloom = urlBloom, oldHashBloom = hashBloom)
         // every write keyed by batch id + overwrite: a checkpoint
         // REPLAY overwrites its own partitions instead of appending
         // duplicates — corpus and side tables stay mutually consistent
-        val survivors = span("survivors_cut")(
-          survivors0.select(keepCols: _*).lineageCut())
+        val survivors = survivors0.select(keepCols: _*).lineageCut()
         // pre-tokenize at ingest: annotation happens on the |survivors|
         // frame only (the artifact is driver-sized), and only the
         // corpus write carries it — side tables stay slim keys
@@ -416,48 +405,48 @@ object EventStream {
         // unchanged: the checkpoint commits only after ALL writes
         // return, and a replayed batch overwrites every partition it
         // touched, exactly as under the sequential schedule.
-        val writeJobs = Seq.newBuilder[(String, () => Unit)]
-        writeJobs += ("write_corpus" -> (() =>
-          corpusOut.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")))
+        val writeJobs = Seq.newBuilder[() => Unit]
+        writeJobs += (() =>
+          corpusOut.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId"))
         urlCol.foreach { u =>
-          writeJobs += ("write_urlset" -> (() =>
+          writeJobs += (() =>
             survivors.select(graft.ext.TextAnalysis.canonicalizeUrl(col(u))
                 .as("url_canon")).filter(col("url_canon").isNotNull).distinct()
-              .write.mode("overwrite").parquet(s"$side/urlset/batch=$batchId")))
+              .write.mode("overwrite").parquet(s"$side/urlset/batch=$batchId"))
         }
-        writeJobs += ("write_md5set" -> (() =>
+        writeJobs += (() =>
           survivors.select(md5(col(textCol)).as("text_md5")).distinct()
-            .write.mode("overwrite").parquet(s"$side/md5set/batch=$batchId")))
-        writeJobs += ("write_minhash" -> (() =>
+            .write.mode("overwrite").parquet(s"$side/md5set/batch=$batchId"))
+        writeJobs += (() =>
           graft.ext.Dedup.minhashTableRows(survivors, textCol, idCol)
-            .write.mode("overwrite").parquet(s"$side/minhash/batch=$batchId")))
+            .write.mode("overwrite").parquet(s"$side/minhash/batch=$batchId"))
         // OR-append the batch's keys into the bloom artifacts —
         // batch-id-keyed (replays skip) and bitwise idempotent anyway
         bloomExpectedKeys.foreach { _ =>
           urlCol.foreach { u =>
-            writeJobs += ("bloom_url_append" -> (() =>
+            writeJobs += (() =>
               graft.ext.Bloom.appendMembershipBloom(
                 survivors.select(graft.ext.TextAnalysis.canonicalizeUrl(col(u))
                   .as("url_canon")).filter(col("url_canon").isNotNull)
                   .distinct(),
-                "url_canon", batchId, s"$side/bloom_url")))
+                "url_canon", batchId, s"$side/bloom_url"))
           }
-          writeJobs += ("bloom_md5_append" -> (() =>
+          writeJobs += (() =>
             graft.ext.Bloom.appendMembershipBloom(
               survivors.select(md5(col(textCol)).as("text_md5")).distinct(),
-              "text_md5", batchId, s"$side/bloom_md5")))
+              "text_md5", batchId, s"$side/bloom_md5"))
         }
         reportDir.foreach { rd =>
           import spark.implicits._
           val rep = report.map(r => (r.stage, r.rows)).toDF("stage", "rows")
-          writeJobs += ("write_report" -> (() =>
-            rep.write.mode("overwrite").parquet(s"$rd/batch_id=$batchId")))
+          writeJobs += (() =>
+            rep.write.mode("overwrite").parquet(s"$rd/batch_id=$batchId"))
         }
         val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
         try {
-          val futures = writeJobs.result().map { case (name, job) =>
+          val futures = writeJobs.result().map { job =>
             pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = span(name)(job())
+              def call(): Unit = job()
             })
           }
           awaitWrites(futures)
@@ -467,10 +456,9 @@ object EventStream {
         // re-run it — harmless, compaction is rerun-idempotent.
         compactEveryBatches.foreach { n =>
           if ((batchId + 1) % n == 0)
-            span("compact")(
-              graft.ext.Compact.compactIngestLayout(spark, corpusDir,
-                targetBytes = compactTargetBytes,
-                keepLatest = compactKeepLatest))
+            graft.ext.Compact.compactIngestLayout(spark, corpusDir,
+              targetBytes = compactTargetBytes,
+              keepLatest = compactKeepLatest)
         }
         ()
       }

@@ -5387,7 +5387,8 @@ class ExtSpec extends SparkSpec {
   test("reliable checkpoint mode (spark.graft.checkpointDir): identical results from every iterative operator") {
     import spark.implicits._
     // the cut is a materialization boundary, never a semantic one —
-    // pageRank / components / geoDbscan must be ROW-IDENTICAL whether
+    // every round-based operator (and the stage-report counts the
+    // cleaning pipeline observes on its cuts) must be ROW-IDENTICAL whether
     // each round localCheckpoints (default) or writes reliable
     // checkpoint files under the conf'd dir (the cluster-survivable
     // mode the 100-TB story needs)
@@ -5399,25 +5400,55 @@ class ExtSpec extends SparkSpec {
       (i.toLong, 10.0 + c * 0.5 + rnd.nextGaussian() * 0.001,
         20.0 + c * 0.5 + rnd.nextGaussian() * 0.001)
     }.toDF("id", "lat", "lon")
-    def runAll(): (Set[(Long, Long)], Set[(Long, Long)], Set[(Long, Long)]) = {
-      val pr = Graph.pageRank(edges, iters = 6)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val comp = Dedup.components(
+    // knn/nearest: startRadius far below the spacing, so the whole-row
+    // arms run several doubling rounds and the lIdCol arms a fused round
+    val knnL = (0L until 60L).map(i =>
+      (i, rnd.nextDouble() * 40, rnd.nextDouble() * 40)).toDF("lid", "lx", "ly")
+    val knnR = (0L until 30L).map(i =>
+      (i, rnd.nextDouble() * 50, rnd.nextDouble() * 50)).toDF("rid", "rx", "ry")
+    val blurb = "this content is provided as is without warranty of any kind"
+    val docs = (0 until 40).map(i => (i.toLong,
+        s"body line ${i % 25} alpha${i % 25} beta${i % 25} gamma delta\n$blurb"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def runAll(): Map[String, Set[Seq[Any]]] = {
+      import graft.core.DistanceJoin
+      def knn(lId: Option[String]) = rows(DistanceJoin.knnJoin(knnL, knnR,
+        "lx", "ly", "rx", "ry", "rid", k = 3, startRadius = 0.5,
+        maxRadius = 4096.0, lIdCol = lId))
+      def nearest(lId: Option[String]) = rows(DistanceJoin.nearestJoin(knnL,
+        knnR, "lx", "ly", "rx", "ry", "rid", startRadius = 0.5,
+        maxRadius = 4096.0, lIdCol = lId))
+      val (_, report) = Pipeline.cleanCorpus(docs, "text", "doc_id",
+        boilerplateMaxDocFreq = 5)
+      Map(
+        "pageRank" -> rows(Graph.pageRank(edges, iters = 6)),
+        "personalizedPageRank" ->
+          rows(Graph.personalizedPageRank(edges, Seq(3L, 7L), iters = 6)),
+        "shortestPaths" ->
+          rows(Graph.shortestPaths(edges, sourceId = 0L, rounds = 6)),
+        "components" -> rows(Dedup.components(
           edges.filter($"src" =!= $"dst")
-            .select($"src".as("id"), $"dst".as("id2")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val db = graft.core.GeoCluster.geoDbscan(pts, "id", "lat", "lon",
-          epsMeters = 500.0, minPts = 3)
-        .select($"id".cast("long"), $"cluster".cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (pr, comp, db)
+            .select($"src".as("id"), $"dst".as("id2")))),
+        "geoDbscan" -> rows(graft.core.GeoCluster.geoDbscan(pts, "id",
+            "lat", "lon", epsMeters = 500.0, minPts = 3)
+          .select($"id".cast("long"), $"cluster".cast("long"))),
+        "knnJoin" -> knn(None),
+        "knnJoin lIdCol" -> knn(Some("lid")),
+        "nearestJoin" -> nearest(None),
+        "nearestJoin lIdCol" -> nearest(Some("lid")),
+        "cleanCorpus report" ->
+          report.map(r => Seq[Any](r.stage, r.rows, r.overflowRows)).toSet)
     }
     val localMode = runAll()
+    assert(localMode.values.forall(_.nonEmpty), localMode)
     val dir = tmpDir("graft-ckpt")
     spark.conf.set(graft.core.Checkpoints.ConfKey, dir)
     try {
       val reliableMode = runAll()
-      assert(reliableMode === localMode)
+      localMode.keys.foreach(k =>
+        assert(reliableMode(k) === localMode(k), s"$k differs"))
       // the reliable mode actually WROTE checkpoint files (it did not
       // silently fall back to executor-local blocks)
       def countFiles(p: java.nio.file.Path): Long = {
@@ -5428,6 +5459,46 @@ class ExtSpec extends SparkSpec {
       assert(countFiles(java.nio.file.Paths.get(dir)) > 0,
         "no checkpoint files written under spark.graft.checkpointDir")
     } finally spark.conf.unset(graft.core.Checkpoints.ConfKey)
+  }
+
+  test("components(): the label-frame broadcast is gated by bytes, not rows") {
+    // chains of four: 2,000 nodes, far below the old 2M-row gate; with
+    // 10,000-char string ids the (node, rep) label frame is ~40 MB,
+    // over the 32 MB gate, so every round must SHUFFLE the labels. The
+    // same graph on long ids keeps the broadcast. Spark's own size-based
+    // broadcast is switched off so only the operator's decision shows.
+    val pad = "u" * 10000
+    val edgesOf = (0 until 2000).filter(_ % 4 != 3).map(i => (i, i + 1))
+    def plans(pairs: org.apache.spark.sql.DataFrame)
+        : (Map[Any, Any], Seq[String]) = {
+      val (labels, acts) = recordActions(Dedup.components(pairs).collect())
+      (labels.map(r => r.get(0) -> r.get(1)).toMap,
+        acts.filter(_._1 == "localCheckpoint").map(_._2.executedPlan.toString))
+    }
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try {
+      val (wide, widePlans) = plans(edgesOf.map { case (a, b) =>
+        (f"$pad$a%05d", f"$pad$b%05d") }.toDF("id", "id2"))
+      assert(wide.size == 2000 && wide.forall { case (n, rep) =>
+        val i = n.toString.takeRight(5).toInt
+        rep == f"$pad${i - i % 4}%05d"
+      })
+      assert(widePlans.size >= 2, widePlans.size)
+      assert(!widePlans.exists(_.contains("BroadcastExchange")),
+        "wide string labels rode a broadcast")
+      val (narrow, narrowPlans) = plans(edgesOf.map { case (a, b) =>
+        (a.toLong, b.toLong) }.toDF("id", "id2"))
+      assert(narrow.forall { case (n, rep) =>
+        rep == n.asInstanceOf[Long] - n.asInstanceOf[Long] % 4 })
+      assert(narrowPlans.exists(_.contains("BroadcastExchange")),
+        "long-id labels no longer broadcast")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("StTransform snapshot: >=10MB NTv2 grid rides a Broadcast, not the plan; " +

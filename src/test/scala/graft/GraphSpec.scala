@@ -114,6 +114,27 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("pageRank and personalizedPageRank: one action per iteration, the round's cut") {
+    import spark.implicits._
+    val df = Seq[(Long, Long)]((1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 5))
+      .toDF("src", "dst")
+    val runs = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (i => Graph.pageRank(df, iters = i)),
+      "personalizedPageRank" ->
+        (i => Graph.personalizedPageRank(df, Seq(2L, 5L), iters = i)))
+    for ((op, run) <- runs) {
+      def actions(iters: Int): Seq[String] =
+        recordActions(run(iters).collect())._2.map(_._1)
+      val two = actions(2)
+      val five = actions(5)
+      // three more rounds cost exactly three more actions, and each is
+      // a lineage cut (the dangling mass rides the cut's observe metric)
+      assert(five.size - two.size === 3, s"$op: $two vs $five")
+      assert(five.diff(two) === Seq.fill(3)("localCheckpoint"),
+        s"$op: $two vs $five")
+    }
+  }
+
   /** Local reference: Bellman-Ford, exactly `rounds` relaxation rounds. */
   private def refSp(edges: Seq[(Long, Long, Long)], src: Long,
                     rounds: Int): Map[Long, Long] = {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -9,6 +11,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Run `body` and return its result with every SQL action it ran, in
+    * order: (action name, e.g. "localCheckpoint" or "collect", and its
+    * QueryExecution). */
+  def recordActions[A](body: => A): (A, Seq[(String, QueryExecution)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add((funcName, qe))
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSpec {

@@ -97,11 +97,17 @@ class TilesSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] { Tiles.quadkey(lit(0.0), lit(0.0), 0) }
   }
 
+  private val gf = new org.locationtech.jts.geom.GeometryFactory()
+  /** the rectangle polygon a bbox read covers */
+  private def rect(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double) =
+    gf.toGeometry(new org.locationtech.jts.geom.Envelope(lonMin, lonMax, latMin, latMax))
+
   test("cover: every in-rect point's quadkey has a covering prefix; budget honored; empty rect") {
     import spark.implicits._
-    // the property the _qk pruning's SOUNDNESS rides on: for any rect,
-    // any point inside it must quadkey-bin under one of the returned
-    // prefixes — across zooms, rect shapes and the prefix budget
+    // the property the _qk pruning's SOUNDNESS rides on: for any rect
+    // (the coverGeometry cover a bbox read gets from the prefilter
+    // rule), any point inside it must quadkey-bin under one of the
+    // returned prefixes — across zooms, rect shapes and the budget
     val rnd = new scala.util.Random(29)
     for (z <- Seq(4, 8, 12); trial <- 0 until 8) {
       val lonMin = rnd.nextDouble() * 340 - 180
@@ -109,7 +115,7 @@ class TilesSpec extends SparkSpec {
       val lonMax = math.min(180.0, lonMin + rnd.nextDouble() * 40 + 0.1)
       val latMax = math.min(Tiles.MaxLatDeg, latMin + rnd.nextDouble() * 30 + 0.1)
       val budget = Seq(4, 16, 64)(trial % 3)
-      val cov = Tiles.cover(lonMin, latMin, lonMax, latMax, z, budget)
+      val cov = Tiles.coverGeometry(rect(lonMin, latMin, lonMax, latMax), z, budget)
       assert(cov.nonEmpty && cov.size <= budget,
         s"z=$z trial=$trial: ${cov.size} prefixes > budget $budget")
       assert(cov.forall(p => p.length <= z && p.forall(c => c >= '0' && c <= '3')))
@@ -125,19 +131,17 @@ class TilesSpec extends SparkSpec {
       assert(missed.isEmpty,
         s"z=$z trial=$trial budget=$budget: uncovered quadkeys ${missed.take(3).toSeq}")
     }
-    // rect fully outside the Mercator domain → empty cover (no indexed
-    // row can exist there — the engine turns this into lit(false))
-    assert(Tiles.cover(10, 87.0, 20, 89.0, 8) === Seq.empty)
-    assert(Tiles.cover(181.0, 0, 185.0, 5, 8) === Seq.empty)
+    // rect more than a tile outside the Mercator domain → empty cover
+    // (no indexed row can exist there)
+    assert(Tiles.coverGeometry(rect(10, 87.0, 20, 89.0), 8) === Seq.empty)
     // whole-world rect at a tight budget degrades to few coarse
     // prefixes, never to a miss
-    val world = Tiles.cover(-180, -85, 180, 85, 10, 4)
+    val world = Tiles.coverGeometry(rect(-180, -85, 180, 85), 10, 4)
     assert(world.nonEmpty && world.size <= 4)
   }
 
   test("coverGeometry: L-shape covers every interior point, skips the notch, beats the envelope") {
     import spark.implicits._
-    val gf = new org.locationtech.jts.geom.GeometryFactory()
     def poly(pts: (Double, Double)*) = gf.createPolygon(
       (pts :+ pts.head).map { case (x, y) =>
         new org.locationtech.jts.geom.Coordinate(x, y) }.toArray)
@@ -146,7 +150,7 @@ class TilesSpec extends SparkSpec {
     val l = poly((0, -40), (80, -40), (80, -20), (20, -20), (20, 50), (0, 50))
     for (z <- Seq(6, 9)) {
       val cov = Tiles.coverGeometry(l, z)
-      val covEnv = Tiles.cover(0, -40, 80, 50, z)
+      val covEnv = Tiles.coverGeometry(l.getEnvelope, z)
       assert(cov.nonEmpty && cov.size <= 64)
       // coverage: every interior point's quadkey binned under a prefix
       val rnd = new scala.util.Random(31 + z)
