@@ -6,14 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.GeoFunctions
 import graft.ext.TextFunctions
-import graft.plans.{BinnedRangeJoin, EnvelopePrefilter, GridSpatialJoin}
+import graft.plans.{BinnedRangeJoin, EnvelopePrefilter, GridSpatialJoin, ParamFilters}
 
 /**
  * SparkSessionExtensions entry point: register with
  * `spark.sql.extensions=graft.GraftExtensions` to get the geo + text
- * function families and the envelope-prefilter optimizer rule in every
- * session, with no engine object needed. (GeoDb also installs the same
- * pieces imperatively for sessions created without the config.)
+ * function families, the envelope-prefilter optimizer rule and the
+ * by-reference filter constants planner strategy in every session, with
+ * no engine object needed. (GeoDb also installs the same pieces
+ * imperatively for sessions created without the config.)
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => BinnedRangeJoin)
     // opt-in via spark.graft.spatialJoin.cellSize (no-op otherwise)
     ext.injectOptimizerRule(_ => GridSpatialJoin)
+    ext.injectPlannerStrategy(_ => ParamFilters)
   }
 }
 

@@ -15,7 +15,8 @@ case class CollectionMeta(
     schemaDdl: String,
     createdAt: String,
     indexes: Seq[String] = Seq.empty) {
-  def schema: StructType = StructType.fromDDL(schemaDdl)
+  /** Parsed once per meta: a read asks for it several times. */
+  lazy val schema: StructType = StructType.fromDDL(schemaDdl)
   def qualified: String = s"${database}_$collection"
 }
 

@@ -44,6 +44,11 @@ class GeoDb(
   if (!spark.experimental.extraOptimizations.contains(graft.plans.EnvelopePrefilter))
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.EnvelopePrefilter
+  // constants of the after-scan filter reach generated code by reference,
+  // so reads differing only in constants share one compiled class
+  if (!spark.experimental.extraStrategies.contains(graft.plans.ParamFilters))
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies :+ graft.plans.ParamFilters
 
   /** Extra parquet writer options applied to every collection write —
     * e.g. Map("parquet.block.size" -> "8388608") to shrink row groups for
@@ -476,7 +481,7 @@ class GeoDb(
    * `geometry` under one of eight comparison modes, optional extra `where`
    * composed with AND/OR, ORDER BY id, limit/offset (offset needs limit).
    * Row-group pruning (the GIST-index replacement) is
-   * [[graft.plans.EnvelopePrefilter]]'s, see [[spatialRead]].
+   * [[graft.plans.EnvelopePrefilter]]'s, see [[spatialMatches]].
    */
   def getCollectionByBbox(collection: String,
                           bbox: (Double, Double, Double, Double),
@@ -486,7 +491,15 @@ class GeoDb(
                           op: String = "AND",
                           limit: Option[Int] = None,
                           offset: Option[Int] = None,
-                          database: Option[String] = None): DataFrame = {
+                          database: Option[String] = None): DataFrame =
+    orderedById(bboxMatches(collection, bbox, comparisonMode, bboxCrs, where,
+      op, database), limit, offset)
+
+  private def bboxMatches(collection: String,
+                          bbox: (Double, Double, Double, Double),
+                          comparisonMode: String, bboxCrs: Any,
+                          where: Option[String], op: String,
+                          database: Option[String]): DataFrame = {
     val d = db(database)
     requireAccess(d, collection, "SELECT")
     val meta = metaOf(d, collection)
@@ -494,8 +507,8 @@ class GeoDb(
     val (minx, miny, maxx, maxy) =
       if (qCrs == meta.srid) bbox
       else GeoOps.transformBbox(bbox._1, bbox._2, bbox._3, bbox._4, qCrs, meta.srid)
-    spatialRead(d, collection, meta, "bbox", GeoOps.makeEnvelope(minx, miny, maxx, maxy),
-      comparisonMode, where, op, limit, offset)
+    spatialMatches(d, collection, meta, "bbox", GeoOps.makeEnvelope(minx, miny, maxx, maxy),
+      comparisonMode, where, op)
   }
 
   /**
@@ -523,7 +536,15 @@ class GeoDb(
                           limit: Option[Int] = None,
                           offset: Option[Int] = None,
                           pointsOnly: Boolean = false,
-                          database: Option[String] = None): DataFrame = {
+                          database: Option[String] = None): DataFrame =
+    orderedById(maskMatches(collection, maskWkt, comparisonMode, maskCrs, where,
+      op, pointsOnly, database), limit, offset)
+
+  private def maskMatches(collection: String, maskWkt: String,
+                          comparisonMode: String, maskCrs: Any,
+                          where: Option[String], op: String,
+                          pointsOnly: Boolean,
+                          database: Option[String]): DataFrame = {
     val d = db(database)
     requireAccess(d, collection, "SELECT")
     val meta = metaOf(d, collection)
@@ -550,43 +571,54 @@ class GeoDb(
         col("_qk") <= lit(p + "3" * (z - p.length))).reduceOption(_ || _)
         .getOrElse(lit(false))
     }
-    spatialRead(d, collection, meta, "mask", wkb, comparisonMode, where, op,
-      limit, offset, guard, cover)
+    spatialMatches(d, collection, meta, "mask", wkb, comparisonMode, where, op,
+      guard, cover)
   }
 
   /**
-   * The one body of the bbox and mask reads: `st_<mode>(query, geometry)`
-   * (query geometry FIRST, geodb.sql:1204-1214) composed with `where`
-   * under `op`, ORDER BY id (geodb.sql:1240), then offset/limit. It
-   * builds no stat-column prefilter: for a conjunctive
-   * read the optimizer rule [[graft.plans.EnvelopePrefilter]] adds the
-   * `_bbox_*` conjuncts the mode implies and, on a quadkey layout, the
-   * `_qk` prefix ranges. `guard` runs ahead of the predicate, so every
-   * surviving row meets it; `cover` is a caller's own `_qk` prefilter,
-   * added only where the rule would add its own (no `OR` composition).
+   * The one filter of the bbox and mask reads and counts:
+   * `st_<mode>(query, geometry)` (query geometry FIRST,
+   * geodb.sql:1204-1214) composed with `where` under `op`, projected to
+   * the user schema, unordered. It builds no stat-column prefilter: for a
+   * conjunctive read the optimizer rule [[graft.plans.EnvelopePrefilter]]
+   * adds the `_bbox_*` conjuncts the mode implies (ahead of the
+   * `st_<mode>` conjunct) and, on a quadkey layout, the `_qk` prefix
+   * ranges. `guard` runs ahead of the predicate, so every surviving row
+   * meets it; `cover` is a caller's own `_qk` prefilter, added only where
+   * the rule would add its own (no `OR` composition).
    */
-  private def spatialRead(d: String, collection: String, meta: CollectionMeta,
-                          via: String, query: Array[Byte], mode: String,
-                          where: Option[String], op: String,
-                          limit: Option[Int], offset: Option[Int],
-                          guard: Option[Column] = None,
-                          cover: Option[Column] = None): DataFrame = {
+  private def spatialMatches(d: String, collection: String, meta: CollectionMeta,
+                             via: String, query: Array[Byte], mode: String,
+                             where: Option[String], op: String,
+                             guard: Option[Column] = None,
+                             cover: Option[Column] = None): DataFrame = {
     val spatial = (guard.toSeq :+ st_relation(mode, lit(query), col("geometry")))
       .reduce(_ && _)
     val cond = where.filter(_.nonEmpty).map(expr) match {
       case Some(w) if op.equalsIgnoreCase("OR") => w || spatial
       case w => (w.toSeq ++ Seq(spatial) ++ cover).reduce(_ && _)
     }
-    var out = readRaw(d, collection).filter(cond)
-      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-      .orderBy("id")
-    limit.foreach { l =>
-      offset.foreach(o => out = out.offset(o))
-      out = out.limit(l)
-    }
     logEvent(EventType.Read, s"Collection $d/$collection read by $via")
-    emptyContract(out)
+    readRaw(d, collection, meta).filter(cond)
+      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
+
+  /**
+   * ORDER BY id (geodb.sql:1240), then offset/limit; offset without limit
+   * is ignored. A limited read is a top-k, which Spark runs as one job
+   * (TakeOrderedAndProject). An unlimited read sorts ONE partition: a
+   * global `orderBy` would first run a range-partitioner sample job over
+   * the whole filtered scan and then scan again, where one shuffle into a
+   * single (spilling) sort task scans once.
+   */
+  private def orderedById(matches: DataFrame, limit: Option[Int],
+                          offset: Option[Int]): DataFrame =
+    emptyContract(limit match {
+      case Some(l) =>
+        val sorted = matches.orderBy("id")
+        offset.fold(sorted)(sorted.offset).limit(l)
+      case None => matches.repartition(1).sortWithinPartitions("id")
+    })
 
   // =========================================================================
   // Aggregates (§2.4)
@@ -606,11 +638,7 @@ class GeoDb(
                             where: Option[String] = None,
                             op: String = "AND",
                             database: Option[String] = None): Long =
-    getCollectionByBbox(collection, bbox, comparisonMode, bboxCrs, where, op,
-      database = database) match {
-      case df if df.columns.sameElements(Array("Empty Result")) => 0L
-      case df => df.count()
-    }
+    bboxMatches(collection, bbox, comparisonMode, bboxCrs, where, op, database).count()
 
   /** [[countCollectionByBbox]]'s mask twin: count rows matching an
     * areal mask under [[getCollectionByMask]]'s semantics (and its
@@ -622,11 +650,8 @@ class GeoDb(
                             op: String = "AND",
                             pointsOnly: Boolean = false,
                             database: Option[String] = None): Long =
-    getCollectionByMask(collection, maskWkt, comparisonMode, maskCrs, where,
-      op, pointsOnly = pointsOnly, database = database) match {
-      case df if df.columns.sameElements(Array("Empty Result")) => 0L
-      case df => df.count()
-    }
+    maskMatches(collection, maskWkt, comparisonMode, maskCrs, where, op,
+      pointsOnly, database).count()
 
   /**
    * Collection extent. Returns (ymin, xmin, ymax, xmax) — the reference
@@ -1388,10 +1413,10 @@ class GeoDb(
       throw new NoSuchElementException(s"collection $d/$c does not exist"))
 
   /** Full frame including hidden stat columns. */
-  private def readRaw(d: String, c: String): DataFrame = {
-    val meta = metaOf(d, c)
+  private def readRaw(d: String, c: String): DataFrame = readRaw(d, c, metaOf(d, c))
+
+  private def readRaw(d: String, c: String, meta: CollectionMeta): DataFrame =
     spark.read.schema(withStats(meta)).parquet(catalog.dataDir(d, c))
-  }
 
   /** Register every accessible collection as a temp view named
     * `{database}_{collection}` — the reference's physical table naming

@@ -321,16 +321,6 @@ object Dedup {
     // cache the pair set BEFORE the symmetric union — its producing plan
     // (often an LSH pipeline) would otherwise execute once per branch
     val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // empty edge set -> empty labels, skipping the propagation loop's
-    // join jobs entirely. This is the common production re-run case (a
-    // pipeline re-applied to an already-clean corpus finds no pairs) and
-    // the pair frames feeding this are eagerly materialized upstream, so
-    // the probe costs one limit(1) scan of a tiny table.
-    if (p.limit(1).isEmpty) {
-      val out = p.select(col("id").as("node"), col("id").as("rep"))
-      p.unpersist()
-      return out
-    }
     val edges = p.select(col("id").as("a"), col("id2").as("b"))
       .union(p.select(col("id2").as("a"), col("id").as("b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -350,10 +340,17 @@ object Dedup {
     }
     val (labelsInit, init) = Checkpoints.cutObserved(
       labels0.observe("cc_init", coalesce(
-        sum(idBytes(col("node")) + idBytes(col("rep"))), lit(0L)).as("bytes")),
+        sum(idBytes(col("node")) + idBytes(col("rep"))), lit(0L)).as("bytes"),
+        count(lit(1)).as("nodes")),
       "components()", "cc_init")
+    // an empty pair set (the common re-run over an already-clean corpus)
+    // is answered by the same metric: empty labels, no round, no probe job
+    if (init("cc_init").getAs[Long]("nodes") == 0L) {
+      edges.unpersist(); p.unpersist()
+      return labelsInit
+    }
     var labels = labelsInit
-    val bcast = init("cc_init").getLong(0) <= BroadcastLabelBytes
+    val bcast = init("cc_init").getAs[Long]("bytes") <= BroadcastLabelBytes
     def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     // self-loops (marked `_own` = true) ride the per-round join so ONE
     // aggregate yields min(own, neighbors) AND carries the node's

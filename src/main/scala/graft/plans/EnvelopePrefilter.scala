@@ -30,6 +30,15 @@ import graft.functions.{StDistance, StDistanceSpherical, StRelation}
  * conjunct and rely on it. The single exception is the mask read's
  * `pointsOnly` cover, a caller contract this rule cannot infer.
  *
+ * CONJUNCT ORDER: the injected conjuncts go IN FRONT of the first
+ * conjunct that implies them (the first `st_<mode>` or distance
+ * conjunct), after every conjunct the caller put ahead of it. Spark
+ * evaluates a filter's conjuncts left to right with short-circuit, so
+ * the JTS predicate decodes only the rows whose stat columns already
+ * pass the cheap envelope test, while a caller's guard ahead of the
+ * predicate (the mask read's pointsOnly refusal) still sees every row
+ * the scan returns.
+ *
  * DISTANCE conjuncts prune too (r14): `st_distance(geom, <literal>) <= r`
  * (either argument/literal order, `<` too — and therefore `st_dwithin`,
  * which resolves to exactly this form) injects the intersects prefilter
@@ -79,14 +88,15 @@ object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
       // injected by an earlier pass or hand-built by the caller — is not
       // injected again, so a caller's own `_qk` cover (GeoDb's
       // pointsOnly mask read) still gains the envelope conjuncts
-      def extrasFor(target: LogicalPlan, carried: Seq[Expression]): Seq[Expression] = {
+      // extras per conjunct, aligned with `conjuncts`
+      def extrasFor(target: LogicalPlan, carried: Seq[Expression]): Seq[Seq[Expression]] = {
         val envDone = carried.exists(references(_, statNames))
         val qkDone = carried.exists(references(_, Seq("_qk")))
         def env(g: Attribute)(build: Seq[Attribute] => Option[Expression]) =
           if (envDone) None else statsFor(target, g).flatMap(build)
         def qk(g: Attribute, q: Expression, containment: Boolean) =
           if (qkDone || !containment) None else qkPrefix(target, g, q)
-        conjuncts.flatMap {
+        conjuncts.map {
           case StRelation(mode, q, g: Attribute) if q.foldable =>
             env(g)(s => prefilter(mode, q, s(0), s(1), s(2), s(3), queryFirst = true)).toSeq ++
               qk(g, q, Set("contains", "equals").contains(mode.toLowerCase))
@@ -99,8 +109,10 @@ object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
           case _ => Nil
         }
       }
-      val direct = extrasFor(child, Seq(cond))
-      if (direct.nonEmpty) Filter((conjuncts ++ direct).reduce(And), child)
+      val perConjunct = extrasFor(child, Seq(cond))
+      val at = perConjunct.indexWhere(_.nonEmpty)
+      if (at >= 0) Filter((conjuncts.take(at) ++ perConjunct.flatten ++
+        conjuncts.drop(at)).reduce(And), child)
       else child match {
         // stat columns pruned away by a projection — the shape of every
         // registered temp view (readCollection selects the user schema).
@@ -115,7 +127,7 @@ object EnvelopePrefilter extends Rule[LogicalPlan] with PredicateHelper {
             case Filter(gcond, _) => Seq(gcond)
             case _ => Nil
           })
-          val below = extrasFor(grandchild, carried)
+          val below = extrasFor(grandchild, carried).flatten
           if (below.isEmpty) f
           else Filter(cond, Project(projList, Filter(below.reduce(And), grandchild)))
         case _ => f

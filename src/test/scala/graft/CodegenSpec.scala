@@ -164,6 +164,56 @@ class CodegenSpec extends SparkSpec {
     }
   }
 
+  /** `body`'s result and the Janino compiles it caused (codegen-cache
+    * misses; a cache hit compiles nothing). */
+  private def compiles[T](body: => T): (T, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
+
+  test("reads differing only in constants reuse compiled code under strict codegen") {
+    // bbox, PostgREST and SQL group-by reads: filter constants reach the
+    // generated code by reference (plans.ParamFilters), so a second call
+    // with other constants generates the same Java and compiles nothing
+    val db = new graft.engine.GeoDb(spark, tmpDir("graft-wh"), "geodb_user")
+    db.createCollection("cg", Seq("grp" -> "integer", "cls" -> "integer", "d" -> "date",
+      "area" -> "bigint"))
+    val rows = (0 until 400).map { i =>
+      (s"POINT(${(i * 7) % 160 - 80} ${(i * 13) % 120 - 60})", i % 5, i % 7,
+        java.sql.Date.valueOf(java.time.LocalDate.of(2000, 1, 1).plusDays(i * 17L)),
+        (i * 37L) % 1000)
+    }
+    db.insertIntoCollection("cg", rows.toDF("geometry", "grp", "cls", "d", "area"))
+    db.createIndex("cg")
+    def inBox(b: (Double, Double, Double, Double)) = rows.count { case (wkt, _, _, _, _) =>
+      val Array(x, y) = wkt.stripPrefix("POINT(").stripSuffix(")").split(" ").map(_.toDouble)
+      x >= b._1 && x <= b._3 && y >= b._2 && y <= b._4
+    }
+    withStrictCodegen {
+      def bbox(b: (Double, Double, Double, Double)) =
+        db.getCollectionByBbox("cg", b, "intersects").collect().length
+      def pg(grp: Int, in1: Int, in2: Int, day: String, area: Long) =
+        db.getCollection("cg", s"grp=eq.$grp&cls=in.($in1,$in2)&d=gte.$day&area=gt.$area")
+          .collect().length
+      def group(day: String, area: Long) =
+        db.getCollectionPg("cg", "grp, COUNT(*) AS ct, SUM(area) AS sa",
+          Some(s"d >= DATE '$day' AND area > $area"), Some("grp")).collect().length
+      val reads: Seq[(String, () => Int, () => Int)] = Seq(
+        ("bbox", () => bbox((-40.5, -30.5, 40.5, 30.5)), () => bbox((-20.5, -50.5, 60.5, 10.5))),
+        ("postgrest", () => pg(1, 2, 3, "2005-01-01", 100), () => pg(3, 4, 5, "2008-06-30", 250)),
+        ("group-by", () => group("2003-01-01", 200), () => group("2010-07-01", 500)))
+      for ((what, first, second) <- reads) {
+        val n1 = first()
+        val (n2, added) = compiles(second())
+        assert(n1 > 0 && n2 > 0, s"$what: both calls must return rows ($n1, $n2)")
+        assert(added == 0, s"$what: the second call compiled $added classes")
+      }
+      assert(bbox((-40.5, -30.5, 40.5, 30.5)) == inBox((-40.5, -30.5, 40.5, 30.5)))
+    }
+  }
+
   test("whole-stage codegen spans include the geo predicate") {
     val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .withColumn("g", st_point($"l_extendedprice", $"l_quantity"))

@@ -2574,6 +2574,27 @@ class ExtSpec extends SparkSpec {
     assert(Dedup.minhashKeepers(docs, "text", "doc_id").count() == 2L)
   }
 
+  test("components: no emptiness probe job; the empty case rides the init cut's metric") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id", "id2")
+    val (labels, acts) = recordActions(Dedup.components(pairs).collect())
+    assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    assert(!acts.exists(_._1 == "isEmpty"), acts.map(_._1))
+    assert(acts.map(_._1).headOption.contains("localCheckpoint"), acts.map(_._1))
+    // empty pair set: one init cut answers, no round runs; the labeling
+    // is empty with the non-empty call's (node, rep) column types
+    val (empty, emptyActs) = recordActions {
+      val out = Dedup.components(Seq.empty[(Long, Long)].toDF("id", "id2"))
+      (out.schema, out.collect())
+    }
+    assert(empty._2.isEmpty)
+    assert(empty._1.map(f => f.name -> f.dataType) ==
+      Seq("node" -> org.apache.spark.sql.types.LongType,
+        "rep" -> org.apache.spark.sql.types.LongType))
+    assert(emptyActs.map(_._1) == Seq("localCheckpoint", "collect"), emptyActs.map(_._1))
+  }
+
   test("tokenBudgetSelect: greedy score-prefix per group, monotone cut") {
     import spark.implicits._
     val docs = Seq(

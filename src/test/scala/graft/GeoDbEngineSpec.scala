@@ -823,6 +823,98 @@ class GeoDbEngineSpec extends SparkSpec {
     }
   }
 
+  test("unlimited spatial reads sort one partition: two jobs, no range sort, the parent plan's rows and order") {
+    import spark.implicits._
+    val rows = (0 until 300).map { i =>
+      (s"POINT(${(i * 7) % 160 - 80} ${(i * 13) % 120 - 60})", i)
+    } ++ (300 until 400).map { i =>
+      val (x, y) = ((i * 11) % 160 - 80, (i * 17) % 120 - 60)
+      (s"POLYGON(($x $y, ${x + 3} $y, ${x + 3} ${y + 2}, $x ${y + 2}, $x $y))", i)
+    } ++ (400 until 450).map { i =>
+      val (x, y) = ((i * 11) % 160 - 80, (i * 17) % 120 - 60)
+      (s"LINESTRING($x $y, ${x + 15} ${y + 7})", i)
+    } :+ (("POLYGON((-40.5 -30.5, 40.5 -30.5, 40.5 30.5, -40.5 30.5, -40.5 -30.5))", 450))
+    val db = new GeoDb(spark, tmpDir("graft-wh"), "geodb_user")
+    for (c <- Seq("soh", "soq")) {
+      db.createCollection(c, Seq("tag" -> "integer"))
+      // several input partitions, so the read's scan has several tasks
+      db.insertIntoCollection(c, rows.toDF("geometry", "tag").repartition(4))
+    }
+    db.createIndex("soh")
+    db.createIndex("soq", method = "quadkey", zoom = 8)
+    val env = (-40.5, -30.5, 40.5, 30.5)
+    val rect = GeoOps.makeEnvelope(env._1, env._2, env._3, env._4)
+    val modes = Seq("contains", "within", "intersects", "touches", "overlaps",
+      "crosses", "disjoint", "equals")
+    def idTags(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+      df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("tag"))).toSeq
+    def rangeSorted(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning")
+    for {
+      c <- Seq("soh", "soq")
+      mode <- modes
+      (limit, offset) <- Seq((None, None), (Some(40), None), (Some(40), Some(15)))
+    } {
+      val ctx = s"$c $mode limit=$limit offset=$offset"
+      // the parent plan: a global ORDER BY id, then offset/limit
+      val sorted = db.readCollection("geodb_user", c)
+        .filter(graft.functions.GeoFunctions.st_relation(mode, lit(rect), col("geometry")))
+        .orderBy("id")
+      val parent = limit.fold(sorted)(l => offset.fold(sorted)(sorted.offset).limit(l))
+      val want = idTags(parent)
+      val df = db.getCollectionByBbox(c, env, mode, limit = limit, offset = offset)
+      if (limit.isEmpty) {
+        assert(rangeSorted(sorted), s"$ctx: the parent plan no longer range-sorts")
+        assert(!rangeSorted(df), s"$ctx:\n${df.queryExecution.executedPlan}")
+        val (got, jobs) = countJobs(idTags(df))
+        assert(got === want, ctx)
+        // one shuffle-map job for the parallel scan, one for the sort task
+        // (an empty result ends after the map job)
+        if (got.nonEmpty) assert(jobs == 2, s"$ctx: $jobs jobs")
+        else assert(jobs <= 2, s"$ctx: $jobs jobs")
+      } else assert(idTags(df) === want, ctx)
+    }
+    assert(idTags(db.getCollectionByBbox("soh", env, "intersects")).size > 100)
+  }
+
+  test("after-scan filter order: caller conjuncts and guard, then envelope, then st_<mode>") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Expression, PredicateHelper}
+    import org.apache.spark.sql.execution.FilterExec
+    val db = new GeoDb(spark, tmpDir("graft-wh"), "geodb_user")
+    db.createCollection("ord", Seq("tag" -> "integer"))
+    db.insertIntoCollection("ord", (0 until 400).map { i =>
+      (s"POINT(${(i * 7) % 160 - 80} ${(i * 13) % 120 - 60})", i)
+    }.toDF("geometry", "tag"))
+    db.createIndex("ord", method = "quadkey", zoom = 8)
+    val l = "POLYGON((-30.5 -35.5, 40.5 -35.5, 40.5 -10.5, -0.5 -10.5, " +
+      "-0.5 40.5, -30.5 40.5, -30.5 -35.5))"
+    object split extends PredicateHelper {
+      def apply(e: Expression): Seq[Expression] = splitConjunctivePredicates(e)
+    }
+    def conjuncts(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      split(df.queryExecution.sparkPlan.collectFirst { case f: FilterExec => f }
+        .getOrElse(fail(s"no FilterExec in ${df.queryExecution.sparkPlan}")).condition)
+        .map(_.toString)
+    def order(cs: Seq[String], before: String => Boolean): Unit = {
+      val first = cs.indexWhere(before)
+      val env = cs.indexWhere(_.contains("_bbox_"))
+      val lastEnv = cs.lastIndexWhere(_.contains("_bbox_"))
+      val st = cs.indexWhere(_.contains("st_contains"))
+      assert(first >= 0 && first < env && lastEnv < st, cs.mkString("\n"))
+    }
+    val mask = db.getCollectionByMask("ord", l, pointsOnly = true)
+    order(conjuncts(mask), _.contains("raise_error"))
+    val where = db.getCollectionByBbox("ord", (-40.5, -30.5, 40.5, 30.5), where = Some("tag < 200"))
+    order(conjuncts(where), _.contains("tag"))
+    // rows as before: the pointsOnly read returns exactly the L's points
+    def inL(x: Int, y: Int) =
+      (x >= -30 && x <= 40 && y >= -35 && y <= -11) ||
+      (x >= -30 && x <= -1 && y >= -35 && y <= 40)
+    assert(mask.collect().map(_.getAs[Int]("tag")).sorted.toSeq === (0 until 400).filter(i =>
+      inL((i * 7) % 160 - 80, (i * 13) % 120 - 60)))
+  }
+
   test("EnvelopePrefilter injects _qk prefix ranges for arbitrary user filters") {
     import spark.implicits._
     val db = new GeoDb(spark, tmpDir("graft-wh"), "geodb_user")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions._
-import graft.plans.{BinnedRangeJoin, EnvelopePrefilter, GridSpatialJoin}
+import graft.plans.{BinnedRangeJoin, EnvelopePrefilter, GridSpatialJoin, ParamFilters, ParamLiteral}
 
 /** The envelope-injection optimizer rule (SURVEY §4 R3). */
 class PlanRuleSpec extends SparkSpec {
@@ -100,9 +100,76 @@ class PlanRuleSpec extends SparkSpec {
         .withColumn("_bbox_maxx", $"x").withColumn("_bbox_maxy", $"y")
         .filter(st_contains(st_makeenvelope(lit(0.0), lit(0.0), lit(10.0), lit(10.0)), $"geometry"))
       assert(df2.queryExecution.optimizedPlan.toString.contains("_bbox_minx"))
+      // planner strategy active: filter constants by reference
+      assert(s2.sessionState.planner.strategies.contains(graft.plans.ParamFilters))
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(old)
       org.apache.spark.sql.SparkSession.setActiveSession(old)
+    }
+  }
+
+  test("ParamFilters: only primitive comparison and IN constants go by reference; rows unchanged") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types._
+    val i = AttributeReference("i", IntegerType)()
+    val s = AttributeReference("s", StringType)()
+    val dec = AttributeReference("dec", DecimalType(10, 2))()
+    val kept: Seq[Expression] = Seq(
+      EqualTo(i, Literal(null, IntegerType)), EqualTo(s, Literal("x")),
+      LessThan(dec, Literal(Decimal(1.5), DecimalType(10, 2))),
+      Like(s, Literal("a%"), '\\'), RLike(s, Literal("^a.*")),
+      In(s, Seq(Literal("a"), Literal("b"))), IsNull(Add(i, Literal(1))))
+    kept.foreach(e => assert(ParamFilters.parametrize(e) == e, e))
+    val swapped = ParamFilters.parametrize(And(GreaterThan(i, Literal(3)),
+      In(i, Seq(Literal(1), Literal(null, IntegerType), Literal(2)))))
+    assert(swapped.collect { case p: ParamLiteral => p.lit } ==
+      Seq(Literal(3), Literal(1), Literal(2)), swapped)
+    assert(swapped.toString == And(GreaterThan(i, Literal(3)),
+      In(i, Seq(Literal(1), Literal(null, IntegerType), Literal(2)))).toString)
+
+    // NaN, ±Infinity, date and timestamp comparisons: the same rows with
+    // and without the strategy, under strict codegen
+    val dir = tmpDir("graft-param") + "/t"
+    Seq((1, 1.5, "2020-01-01", "2020-01-01 10:00:00"),
+      (2, Double.NaN, "2021-06-15", "2021-06-15 00:00:00"),
+      (3, Double.PositiveInfinity, "1999-12-31", "1999-12-31 23:59:59"),
+      (4, Double.NegativeInfinity, "2020-01-02", "2020-01-02 00:00:01"),
+      (5, -0.0, "2020-01-01", "2020-01-01 09:59:59"))
+      .toDF("k", "x", "d", "ts")
+      .select($"k", $"x", to_date($"d").as("d"), to_timestamp($"ts").as("ts"))
+      .write.parquet(dir)
+    val preds = Seq(
+      "x = double('NaN')", "x > 1.0", "x < double('-Infinity')",
+      "x >= double('-Infinity')", "x = double('Infinity')", "x <=> double('NaN')",
+      "x IN (double('NaN'), 1.5)", "x = 0.0", "x <= double('NaN')",
+      "d >= DATE '2020-01-01'", "d = DATE '2020-01-02'",
+      "ts < TIMESTAMP '2020-01-01 10:00:00'", "ts IN (TIMESTAMP '2021-06-15 00:00:00')",
+      "k IN (1, 3, 5) AND d < DATE '2021-01-01'")
+    def run(p: String) = {
+      val df = spark.read.parquet(dir).filter(p).select("k")
+      (df.collect().map(_.getInt(0)).sorted.toSeq,
+        df.queryExecution.sparkPlan.exists(_.expressions.exists(_.exists(
+          _.isInstanceOf[ParamLiteral]))))
+    }
+    val saved = spark.experimental.extraStrategies
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      spark.experimental.extraStrategies = saved.filterNot(_ == ParamFilters) :+ ParamFilters
+      val withParams = preds.map(run)
+      spark.experimental.extraStrategies = saved.filterNot(_ == ParamFilters)
+      val plain = preds.map(run)
+      preds.indices.foreach { j =>
+        assert(withParams(j)._1 === plain(j)._1, preds(j))
+        assert(withParams(j)._2 && !plain(j)._2, s"${preds(j)}: ParamLiteral placement")
+      }
+      assert(plain.map(_._1) === Seq(Seq(2), Seq(1, 2, 3), Nil, Seq(1, 2, 3, 4, 5),
+        Seq(3), Seq(2), Seq(1, 2), Seq(5), Seq(1, 2, 3, 4, 5), Seq(1, 2, 4, 5), Seq(4),
+        Seq(3, 5), Seq(2), Seq(1, 3, 5)))
+    } finally {
+      spark.experimental.extraStrategies = saved
+      spark.conf.set("spark.sql.codegen.fallback", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
 

@@ -8,7 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (`cutObserved`), so a missing metric always fails with its
   *    diagnostic;
   *  - no `GRAFT_*` environment knobs: the token appears only as the
-  *    `SPARK_GRAFT_*` harness keys of `Bench` and `Verify`. */
+  *    `SPARK_GRAFT_*` harness keys of `Bench` and `Verify`;
+  *  - every optimizer rule or planner strategy installed imperatively
+  *    (`spark.experimental.extraOptimizations` / `extraStrategies`) is
+  *    also injected by `GraftExtensions`, so a session configured with
+  *    the extensions plans like one an engine object set up. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -34,6 +38,23 @@ class SourceGuardSpec extends AnyFunSuite {
     val bad = offending((rel, line) =>
       rel != "graft/core/Checkpoints.scala" && line.contains("observedMetrics"))
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("every imperatively installed plan hook is also injected by GraftExtensions") {
+    val install = "extra(Optimizations|Strategies)\\s*:\\+\\s*([\\w.]+)".r
+    val installed = (for ((rel, lines) <- sources; line <- lines;
+                          m <- install.findAllMatchIn(line))
+      yield (m.group(1), m.group(2).split('.').last, rel)).distinct
+    assert(installed.exists(_._3 == "graft/engine/GeoDb.scala"),
+      "no imperative hook install found in GeoDb — the guard would pass vacuously")
+    val ext = sources.find(_._1 == "graft/GraftExtensions.scala")
+      .getOrElse(fail("graft/GraftExtensions.scala not found"))._2.mkString("\n")
+    val missing = installed.filterNot { case (kind, name, _) =>
+      val inject = if (kind == "Optimizations") "injectOptimizerRule" else "injectPlannerStrategy"
+      s"$inject\\(\\s*_\\s*=>\\s*$name\\s*\\)".r.findFirstIn(ext).isDefined
+    }
+    assert(missing.isEmpty, missing.map { case (k, n, rel) =>
+      s"$rel installs $n into extra$k, GraftExtensions does not inject it" }.mkString("\n"))
   }
 
   test("no GRAFT_* environment knobs outside the Bench/Verify SPARK_GRAFT_* keys") {

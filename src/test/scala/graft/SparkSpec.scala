@@ -32,6 +32,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Run `body` and return its result with the number of Spark jobs it
+    * started. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
