@@ -1,7 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main. Emits TWO artifacts:
+/** Benchmark main. `BENCH.out` is the canonical per-query record; the
+  * compact last line is only a digest sized for tail capture.
+  * Emits TWO artifacts:
   *   - `BENCH.out` (cwd) + stderr: full-precision JSON, long query
   *     names, per-query seconds — the human/judge record. KILL-SAFE
   *     since r15: the file is REWRITTEN after every completed entry
@@ -178,8 +180,8 @@ object Bench {
     // column, so a gate whose cost lives in a left-joined scoring stack
     // times a plan its consumers never see — measured on the backoff-LM
     // gate: 0.6 s counted vs 2.2 s evaluated (round 12; the same reason
-    // ScaleProbeX checksums). bit_xor(xxhash64(struct(*))) forces every
-    // output column of every row.
+    // the SCALE.md "Measured: derived 10× corpus" probes checksum).
+    // bit_xor(xxhash64(struct(*))) forces every output column of every row.
     import org.apache.spark.sql.functions.{bit_xor, struct, xxhash64}
     def force(df: org.apache.spark.sql.DataFrame): Unit = {
       df.select(bit_xor(xxhash64(struct(df.columns.map(

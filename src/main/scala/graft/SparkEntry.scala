@@ -1166,7 +1166,8 @@ object SparkEntry {
       // through the engine's client-side bbox reprojection helper —
       // including the reference's EPSG:4326 lat_lon axis-order quirk.
       // Pinned oracle values are cross-checked against an independent
-      // Snyder implementation (mm agreement; see tools/PrintCrs)
+      // Snyder implementation (mm agreement; SCALE.md "Round-3
+      // additions", conic/azimuthal CRS)
       val db = tmpDb(s, "crs")
       def r3(v: Double): Double = math.rint(v * 1000.0) / 1000.0
       val rows = Seq(

@@ -1532,15 +1532,17 @@ class GeoDb(
     estimatedCount(d, c) - before
   }
 
-  /** Copy-on-write commit: write temp dir, atomic swap (SURVEY §7.4.2). */
   /**
    * Writer serialization: every row/layout-mutating commit runs under a
    * per-collection lock taken by ATOMIC CREATE of `.commit.lock` in the
    * collection directory. The critical section re-reads `meta` inside
    * the lock, so two concurrent inserts serialize and id ranges never
-   * collide. Readers never take the lock: copy-on-write + atomic rename
-   * keeps scans consistent. Locks from crashed writers are broken after
-   * `staleLockMs` (commit work is minutes-scale at most per collection).
+   * collide. Readers never take the lock, so a concurrent reader can
+   * fail: one that lists the data directory while `swapIn` moves it
+   * gets `FILE_NOT_EXIST` (7 of 33 reads during an `updateCollection`
+   * did; ROADMAP direction 1, snapshot commits, is the fix). Locks from
+   * crashed writers are broken after `staleLockMs` (commit work is
+   * minutes-scale at most per collection).
    *
    * SUPPORTED FILESYSTEMS: the protocol's three safety primitives —
    * exclusive create-if-absent is atomic, rename is atomic, rename
@@ -1769,6 +1771,9 @@ class GeoDb(
     }
   }
 
+  /** Copy-on-write commit (SURVEY §7.4.2): write `newDf` to a temp dir
+    * beside the data dir, rename the data dir aside, rename the temp dir
+    * into its place, then delete the old one. */
   private def swapIn(d: String, c: String, newDf: DataFrame): Unit = {
     val dir = catalog.collectionDir(d, c)
     val token = UUID.randomUUID.toString.take(8)

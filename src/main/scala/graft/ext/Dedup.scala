@@ -751,13 +751,6 @@ object Dedup {
       df.select(col(idCol).as("id"), word_shingles(col(textCol), lit(n)).as("grams")),
       threshold)
 
-  /** Exact char-k-shingle Jaccard pairs (same prefix-filter join). */
-  def charJaccardPairs(df: DataFrame, textCol: String, idCol: String,
-                       k: Int = 5, threshold: Double = 0.8): DataFrame =
-    setSimilarityJoin(
-      df.select(col(idCol).as("id"), char_shingles(col(textCol), lit(k)).as("grams")),
-      threshold)
-
   /**
    * The exact similarity self-join over (id, grams[sorted long]) rows.
    *
@@ -1095,7 +1088,8 @@ object Dedup {
     * hash-repartition the slim (id, id2) stream to ~300k raw rows per
     * task (capped at 4x the session's shuffle partitions) and
     * dropDuplicates in place (the distribution already satisfies the
-    * aggregate, so no second exchange). ProfileEd measured the default
+    * aggregate, so no second exchange). SCALE.md "Measured: the quiet
+    * q135 number and where its 8 s actually goes" has the default
     * 32-partition distinct exchange at 7.4-8.0 s of q135's 10.6 s cold
     * — the hash-agg build over ~10M distinct slim keys is memory-bound
     * per task — and the 4x shape (its variant E) at 5.1 s: ~25% off the

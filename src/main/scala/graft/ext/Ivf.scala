@@ -75,7 +75,7 @@ object Ivf {
    * Driver-Lloyd TRAIN BUDGET: assignment work is exactly
    * `sample · k · d` distance ops per iteration, so wall time is linear
    * in each factor — measured 26 Gops/s on the 32-core driver
-   * (tools/LloydProbe; SCALE.md "Lloyd at the k-clamp"). At the 16384
+   * (SCALE.md "Measured: Lloyd at the k-clamp"). At the 16384
    * CLAMP with the 100k sample and d = 64 a full 10-iteration train is
    * 1.05e12 ops ≈ 40 s measured — constant in corpus size AND usable,
    * so the default budget (2e12 ops ≈ 75 s at the measured rate) does

@@ -2,8 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guards over `src/main/scala` (the measurement mains
-  * under `graft/tools/` are exempt):
+/** Source-level guards over every file under `src/main/scala`:
   *  - observed metrics are read in ONE place, `core/Checkpoints.scala`
   *    (`cutObserved`), so a missing metric always fails with its
   *    diagnostic;
@@ -12,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every optimizer rule or planner strategy installed imperatively
   *    (`spark.experimental.extraOptimizations` / `extraStrategies`) is
   *    also injected by `GraftExtensions`, so a session configured with
-  *    the extensions plans like one an engine object set up. */
+  *    the extensions plans like one an engine object set up;
+  *  - the only `main` objects are the harness (`Bench`, `Verify`) and
+  *    the three tools (`PlanDump`, `Smoke`, `EntryCheck`); measurement
+  *    belongs to `perfbench/`, not to one-off probe mains. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -23,7 +25,6 @@ class SourceGuardSpec extends AnyFunSuite {
     try walk.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString.replace('\\', '/'))
-      .filterNot(_.startsWith("graft/tools/"))
       .toSeq.sorted
       .map(rel => rel -> java.nio.file.Files.readAllLines(root.resolve(rel)).asScala.toSeq)
     finally walk.close()
@@ -63,5 +64,18 @@ class SourceGuardSpec extends AnyFunSuite {
     val bad = offending((rel, line) => token.findAllIn(line)
       .exists(k => !harness(rel) || !k.startsWith("SPARK_GRAFT_")))
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the only main objects are Bench, Verify, PlanDump, Smoke and EntryCheck") {
+    val pkg = "^package\\s+([\\w.]+)".r
+    val obj = "^\\s*object\\s+(\\w+)".r.unanchored
+    val mains = for ((_, lines) <- sources;
+                     p = lines.collectFirst { case pkg(name) => name }.getOrElse("");
+                     (line, i) <- lines.zipWithIndex if line.contains("def main(")) yield {
+      val o = lines.take(i).reverseIterator.collectFirst { case obj(name) => name }
+      s"$p.${o.getOrElse("?")}"
+    }
+    assert(mains.sorted == Seq("graft.Bench", "graft.Verify", "graft.tools.EntryCheck",
+      "graft.tools.PlanDump", "graft.tools.Smoke"), mains.mkString("\n"))
   }
 }
