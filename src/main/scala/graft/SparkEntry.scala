@@ -3987,10 +3987,9 @@ object SparkEntry {
         cos(radians(least(lit(90.0),
           greatest(abs(b.cast("double") * hDegL),
             abs((b.cast("double") + 1) * hDegL)) + hDegL)))
-      def nCellsOf(b: Column): Column =
-        greatest(lit(1L), floor(lit(360.0) /
-          degrees(lit(2.0) * asin(least(lit(1.0), arg(b))))).cast("long"))
-      def wOf(b: Column): Column = lit(360.0) / nCellsOf(b).cast("double")
+      // the cell width the operator bins with, from its own grid
+      val grid = new graft.core.DistanceJoin.LatBands(cellM / bigR)
+      def wOf(b: Column): Column = lit(360.0) / grid.nCellsOf(b).cast("double")
       def fracDist(c: Column): Column = {
         val fr = c - floor(c); least(fr, lit(1.0) - fr)
       }

@@ -1,6 +1,5 @@
 package graft.core
 
-import graft.core.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -99,31 +98,48 @@ object DistanceJoin {
   /**
    * NEAREST-neighbor join: for every left point, its single closest
    * right point (ties to the smallest `rIdCol`). Exact, via ITERATIVE
-   * RADIUS DOUBLING over [[radiusJoin]]: probe at `startRadius`,
-   * resolve the lefts that found any candidate (all pairs within r are
+   * RADIUS GROWTH over [[radiusJoin]]: probe at `startRadius`, resolve
+   * the lefts that found any candidate (all pairs within r are
    * present, so the per-left minimum at radius r IS the true nearest),
-   * re-probe only the unresolved lefts at 2r, up to `maxRadius` —
-   * log2(maxRadius/startRadius) rounds, each a hash join that carries
-   * only the still-unmatched lefts. Lefts with no right point within
-   * `maxRadius` are OMITTED (the bound is the caller's contract; an
-   * unbounded search against an empty right side would never
-   * terminate). VALUE-duplicate left rows collapse to one output row —
-   * the group key is the whole left row; pass `lIdCol` (a unique id)
-   * to group on a slim key instead, which both preserves duplicates-
-   * by-payload and keeps wide left payloads out of the per-round
-   * shuffles (the payload joins back once at the end).
+   * re-probe only the unresolved lefts at a larger radius, up to
+   * `maxRadius` — at most log2(maxRadius/startRadius) + 1 rounds, each
+   * a hash join that carries only the still-unmatched lefts. Lefts
+   * with no right point within `maxRadius` are OMITTED (the bound is
+   * the caller's contract; an unbounded search against an empty right
+   * side would never terminate). VALUE-duplicate left rows collapse to
+   * one output row — the loop key is the whole distinct left row; pass
+   * `lIdCol` (a unique id) to key on a slim key instead, which both
+   * preserves duplicates-by-payload and keeps wide left payloads out of
+   * the per-round shuffles (the payload joins back once at the end).
    *
    * Scale: round i costs |unmatched_i| × (right density within 3×3
-   * cells at radius 2^i) — geometrically fewer lefts against
+   * cells at radius r_i) — geometrically fewer lefts against
    * geometrically larger cells; for realistic densities almost
-   * everything resolves in round 1 and the tail pays the doubling.
-   * Each round lineage-cuts the shrinking unmatched set ([[Checkpoints.cut]]) to stop
-   * plan growth.
+   * everything resolves in round 1 and the tail pays the growth. Every
+   * round but the last is one lineage cut of the unmatched lefts joined
+   * to their round result ([[Checkpoints.cutObserved]]), which stops
+   * plan growth and observes the miss count that picks the next radius.
    */
+  def nearestJoin(left: DataFrame, right: DataFrame,
+                  lx: String, ly: String, rx: String, ry: String,
+                  rIdCol: String,
+                  startRadius: Double, maxRadius: Double,
+                  lIdCol: Option[String] = None): DataFrame = {
+    require(startRadius > 0 && maxRadius >= startRadius,
+      s"need 0 < startRadius ($startRadius) <= maxRadius ($maxRadius)")
+    require(right.columns.contains(rIdCol),
+      s"nearestJoin: id column '$rIdCol' missing from right side")
+    val distCols = Seq("dist2", "dist")
+    perLeft(left, lIdCol, lx, ly, right, distCols, "nearestJoin")(
+      nearestRounds(_, right, rIdCol, startRadius, maxRadius,
+        (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), distCols,
+        "nearestJoin"))
+  }
+
   /**
    * k-NEAREST-neighbors join: for every left point, its k closest
    * right points with ranks (ties (dist2, right id) — the repo's
-   * bounded-heap convention). Same iterative radius doubling as
+   * bounded-heap convention). Same iterative radius growth as
    * [[nearestJoin]], with the resolution rule generalized: a left
    * resolves at the first radius where it has >= k candidates (all
    * pairs within r are present, so its k nearest are among them —
@@ -147,132 +163,54 @@ object DistanceJoin {
       s"need 0 < startRadius ($startRadius) <= maxRadius ($maxRadius)")
     require(right.columns.contains(rIdCol),
       s"knnJoin: id column '$rIdCol' missing from right side")
-    if (lIdCol.isDefined) {
-      // slim-key path: loop on (id, x, y), payload back in one join —
-      // see [[slimLeft]] for the contract (unique non-NULL ids)
-      val id = lIdCol.get
-      requireDisjointForJoinBack(left, id, right,
-        Seq("dist2", "dist", "rank"), "knnJoin")
-      val slim = slimLeft(left, id, lx, ly, "knnJoin")
-      // direct knnLoop call so the loop knows the slimLeft uniqueness
-      // contract and takes the fused one-job-per-round shape (r16)
-      val res = knnLoop(slim, rIdCol, k, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), "dist2",
-          uniqueLeft = true)
+    perLeft(left, lIdCol, lx, ly, right, Seq("dist2", "dist", "rank"),
+        "knnJoin") { keys =>
+      knnRounds(keys, rIdCol, k, startRadius, maxRadius,
+          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), "dist2", "knnJoin")
         .withColumn("dist", sqrt(col("dist2")))
-        .select(slim.columns.map(col) ++
+        .select(keys.columns.map(col) ++
           Seq(col(rIdCol), col("dist2"), col("dist"), col("rank")): _*)
-        .drop(lx, ly)
-      return left.join(res, Seq(id))
     }
-    knnLoop(left, rIdCol, k, startRadius, maxRadius,
-        (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r), "dist2")
-      .withColumn("dist", sqrt(col("dist2")))
-      .select(left.columns.map(col) ++
-        Seq(col(rIdCol), col("dist2"), col("dist"), col("rank")): _*)
-  }
-
-  /** The shared >= k-candidates doubling loop behind [[knnJoin]] and
-    * [[geoKnnJoin]]: returns `left.* ++ (rIdCol, tieDist, rank)`. A
-    * left resolves at the first radius with >= k candidates (the probe
-    * is exact within r, so its k nearest are among them); per-left
-    * top-k rides the bounded heap on score `-tieDist` with ties to the
-    * smaller right id. */
-  private def knnLoop(left: DataFrame, rIdCol: String, k: Int,
-                      startRadius: Double, maxRadius: Double,
-                      probe: (DataFrame, Double) => DataFrame,
-                      tieDist: String,
-                      uniqueLeft: Boolean = false): DataFrame = {
-    val leftCols = left.columns.map(col)
-    var unmatched = left
-    var out: Option[DataFrame] = None
-    var r = startRadius
-    var done = false
-    var round = 0
-    // explode the round's heap into (rIdCol, tieDist, rank) rows
-    def explodeTop(df: DataFrame): DataFrame = df
-      .select(leftCols :+ posexplode(col("_top")): _*)
-      .select(leftCols ++ Seq(col("col.id").as(rIdCol),
-        (-col("col.score")).as(tieDist),
-        (col("pos") + 1).cast("int").as("rank")): _*)
-    while (!done) {
-      val atMax = r >= maxRadius
-      val cand = probe(unmatched, r)
-      // bounded heap per left: score = -dist (largest = closest),
-      // ties to the smaller right id — the TopKAggregate convention
-      val grouped = cand.groupBy(leftCols: _*)
-        .agg(count(lit(1)).as("_ncand"),
-          graft.ext.TopKAggregate.topk_by_score(
-            col(rIdCol), -col(tieDist), k).as("_top"))
-      if (uniqueLeft && atMax) {
-        // FINAL round: one consumer (the union), no unmatched set
-        // needed — no join-back, no cut (see nearestLoop)
-        val resolved = explodeTop(grouped)
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        done = true
-      } else if (uniqueLeft) {
-        // fused round (optimization r16, same argument as
-        // [[nearestLoop]]): ONE materialization carries the resolved
-        // heaps, the next round's unmatched set, and the miss metric;
-        // grouping columns aliased to fresh names (self-join ambiguity)
-        val keyed = grouped.select(
-          unmatched.columns.map(c => col(c).as("_k_" + c))
-            ++ Seq(col("_ncand"), col("_top")): _*)
-        val merged = unmatched.join(keyed,
-            unmatched.columns.map(c => unmatched(c) <=> keyed("_k_" + c))
-              .reduce(_ && _), "left")
-          .select(unmatched.columns.map(unmatched(_))
-            ++ Seq(col("_ncand"), col("_top")): _*)
-        val name = s"knn_round_$round"
-        val (cut, m) = Checkpoints.cutObserved(merged.observe(name,
-            count(when(coalesce(col("_ncand"), lit(0L)) < k, 1)).as("miss"),
-            count(lit(1)).as("total")), "knnJoin", name)
-        val (miss, total) = (m(name).getLong(0), m(name).getLong(1))
-        val resolved = explodeTop(cut.filter(col("_ncand") >= k))
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        if (miss == 0L) done = true
-        else {
-          unmatched = cut.filter(coalesce(col("_ncand"), lit(0L)) < k)
-            .select(leftCols: _*)
-          r = nextRadius(r, maxRadius, miss, total)
-        }
-      } else {
-        // the round's heap frame feeds BOTH the returned union and the
-        // anti-join below — cut it once (r16; this loop missed the r15
-        // nearestLoop argmin cut, so every consumer re-executed the
-        // probe join)
-        val resolved = explodeTop(
-          if (atMax) grouped else grouped.filter(col("_ncand") >= k))
-          .lineageCut()
-        out = Some(out.map(_.unionByName(resolved)).getOrElse(resolved))
-        if (atMax) done = true
-        else {
-          val resolvedKeys = resolved.filter(col("rank") === 1)
-            .select(leftCols: _*)
-          val name = s"knn_rest_$round"
-          val (next, m) = Checkpoints.cutObserved(unmatched.join(resolvedKeys,
-              unmatched.columns.map(c => unmatched(c) <=> resolvedKeys(c))
-                .reduce(_ && _), "left_anti")
-            .observe(name, count(lit(1)).as("n")), "knnJoin", name)
-          if (m(name).getLong(0) == 0L) done = true
-          else { unmatched = next; r = math.min(r * 2, maxRadius) }
-        }
-      }
-      round += 1
-    }
-    out.get
   }
 
   /**
-   * `lIdCol` variants of [[nearestJoin]]/[[knnJoin]]: when the caller
-   * names a UNIQUE left id column, the doubling loop runs on a slim
-   * `(id, x, y)` projection — the per-round shuffles, anti-joins and
-   * per-round lineage cuts carry three columns instead of the whole left
-   * payload (which at 100 TB rides EVERY round otherwise), and the
-   * payload joins back ONCE at the end by id. Duplicate or NULL ids
-   * are REFUSED loudly (a duplicate id would multiply output rows in
-   * the payload join — a wrong answer; the whole-row variants instead
-   * collapse VALUE-duplicate lefts, their documented semantic).
+   * The one `lIdCol` dispatch behind every nearest / k-nearest join.
+   * With `lIdCol` the loop runs on the slim [[slimLeft]] keys and the
+   * payload joins back ONCE by id; without it the loop runs on
+   * `left.distinct()` — the whole-row variants' documented
+   * VALUE-duplicate collapse, which also hands the loop the unique left
+   * keys [[roundLoop]] needs. `resultCols` are the columns `loop` adds
+   * besides the right side's.
+   */
+  private def perLeft(left: DataFrame, lIdCol: Option[String],
+                      lx: String, ly: String, right: DataFrame,
+                      resultCols: Seq[String], op: String)
+                     (loop: DataFrame => DataFrame): DataFrame = lIdCol match {
+    case Some(id) =>
+      // the slim keys skip the probe's own overlap refusal (they carry no
+      // payload), so the join-back checks the FULL left's columns against
+      // everything the loop adds — a silent duplicate-named column is
+      // exactly what the whole-row variants refuse loudly
+      val overlap = (left.columns.toSet - id)
+        .intersect(right.columns.toSet ++ resultCols)
+      require(overlap.isEmpty,
+        s"$op: left column names ${overlap.mkString(",")} collide with the " +
+        "right side / result columns — the lIdCol payload join-back would " +
+        "emit ambiguous duplicates; rename them")
+      left.join(loop(slimLeft(left, id, lx, ly, op)).drop(lx, ly), Seq(id))
+    case None => loop(left.distinct())
+  }
+
+  /**
+   * `lIdCol` variants of the nearest / k-nearest joins: when the caller
+   * names a UNIQUE left id column, the round loop runs on a slim
+   * `(id, x, y)` projection — the per-round shuffles and lineage cuts
+   * carry three columns instead of the whole left payload (which at
+   * 100 TB rides EVERY round otherwise), and the payload joins back
+   * ONCE at the end by id. Duplicate or NULL ids are REFUSED loudly (a
+   * duplicate id would multiply output rows in the payload join — a
+   * wrong answer; the whole-row variants instead collapse
+   * VALUE-duplicate lefts, their documented semantic).
    */
   private def slimLeft(left: DataFrame, lIdCol: String, lx: String,
                        ly: String, op: String): DataFrame = {
@@ -294,169 +232,122 @@ object DistanceJoin {
         col(lx), col(ly))
   }
 
-  /** The slim-key paths skip the probe's own overlap refusal (the slim
-    * frame carries no payload), so the payload join-back must check the
-    * FULL left's columns against everything the loop result adds — a
-    * silent duplicate-named column is exactly what the whole-row
-    * variants refuse loudly. */
-  private def requireDisjointForJoinBack(left: DataFrame, lIdCol: String,
-                                         right: DataFrame,
-                                         resultCols: Seq[String],
-                                         op: String): Unit = {
-    val overlap = (left.columns.toSet - lIdCol)
-      .intersect(right.columns.toSet ++ resultCols)
-    require(overlap.isEmpty,
-      s"$op: left column names ${overlap.mkString(",")} collide with the " +
-      "right side / result columns — the lIdCol payload join-back would " +
-      "emit ambiguous duplicates; rename them")
+  /** Nearest resolution for [[roundLoop]], behind [[nearestJoin]],
+    * [[geoNearestJoin]], [[snapToSegments]] and [[geoSnapToSegments]]: a
+    * left resolves at the first radius with ANY candidate, and its
+    * argmin over (`distCols.head`, right id) rides the bounded `min_by`
+    * struct — no window, no sort. `probe(unmatched, r)` must return all
+    * candidate pairs within r carrying `right.*` plus `distCols`.
+    * Returns `keys.* ++ right.* ++ distCols`. */
+  private def nearestRounds(keys: DataFrame, right: DataFrame, rIdCol: String,
+                            startRadius: Double, maxRadius: Double,
+                            probe: (DataFrame, Double) => DataFrame,
+                            distCols: Seq[String], op: String): DataFrame =
+    roundLoop(keys, startRadius, maxRadius, probe, op,
+      Seq(min_by(struct(right.columns.map(col) ++ distCols.map(col): _*),
+        struct(col(distCols.head), col(rIdCol))).as("_best")),
+      col("_best").isNotNull,
+      _.select(keys.columns.map(col) :+ col("_best.*"): _*))
+
+  /** k-nearest resolution for [[roundLoop]], behind [[knnJoin]] and
+    * [[geoKnnJoin]]: a left resolves at the first radius with >= k
+    * candidates (the probe is exact within r, so its k nearest are among
+    * them); per-left top-k rides the bounded heap on score `-tieDist`
+    * with ties to the smaller right id. Returns
+    * `keys.* ++ (rIdCol, tieDist, rank)`. */
+  private def knnRounds(keys: DataFrame, rIdCol: String, k: Int,
+                        startRadius: Double, maxRadius: Double,
+                        probe: (DataFrame, Double) => DataFrame,
+                        tieDist: String, op: String): DataFrame = {
+    val keyCols = keys.columns.map(col)
+    roundLoop(keys, startRadius, maxRadius, probe, op,
+      Seq(count(lit(1)).as("_ncand"),
+        graft.ext.TopKAggregate.topk_by_score(col(rIdCol), -col(tieDist), k).as("_top")),
+      col("_ncand") >= k,
+      _.select(keyCols :+ posexplode(col("_top")): _*)
+        .select(keyCols ++ Seq(col("col.id").as(rIdCol),
+          (-col("col.score")).as(tieDist),
+          (col("pos") + 1).cast("int").as("rank")): _*))
   }
 
-  /** The radius schedule shared by [[nearestLoop]] and [[knnLoop]]
-    * (optimization r16). Any schedule returns IDENTICAL rows — a left
-    * resolved at radius r has its true nearest (top-k) within r, so the
-    * argmin/heap is the same at any larger radius; only the final
-    * radius must be exactly maxRadius (the boundary-inclusion rule).
-    * The schedule only changes how many rounds (probe jobs + cuts) the
-    * tail pays, so it is tuned from the round's OWN observed counts
-    * (guide §8 "decide with small rows"): a mostly-missing round means
-    * startRadius was far too small — jump ×4; a small absolute tail
-    * goes straight to maxRadius (its probe is misses × one cover — the
-    * cheapest way to finish); otherwise the classic ×2. */
+  /** The one round loop behind every nearest / k-nearest join. `keys`
+    * must have unique rows (the [[perLeft]] contract). Each round probes
+    * the unmatched keys at radius r, aggregates the candidates per key
+    * (`agg`), and `resolved` — over the aggregate columns — says which
+    * keys are done. A round below `maxRadius` is ONE action: it cuts
+    * `unmatched LEFT JOIN aggregate`, which holds exactly one row per
+    * unmatched key because the keys are unique, so the same
+    * materialization yields the round's resolved rows, the next round's
+    * unmatched keys and (an observe() metric) the miss count that ends
+    * the loop and picks the next radius. The round at `maxRadius` is not
+    * cut: it emits every key with any candidate, and its one consumer is
+    * the returned union. `emit` turns (keys, aggregate) rows into
+    * output rows. */
+  private def roundLoop(keys: DataFrame, startRadius: Double,
+                        maxRadius: Double,
+                        probe: (DataFrame, Double) => DataFrame, op: String,
+                        agg: Seq[Column], resolved: Column,
+                        emit: DataFrame => DataFrame): DataFrame = {
+    val names = keys.columns
+    val isResolved = coalesce(resolved, lit(false))
+    var unmatched = keys
+    var out: Option[DataFrame] = None
+    var r = startRadius
+    var round = 0
+    var done = false
+    while (!done) {
+      val perKey = probe(unmatched, r).groupBy(names.map(col): _*)
+        .agg(agg.head, agg.tail: _*)
+      val found =
+        if (r >= maxRadius) { done = true; perKey }
+        else {
+          // the aggregate's grouping columns keep their input attribute
+          // ids, so alias them to fresh names before joining back onto
+          // the SAME unmatched frame they derive from (self-join
+          // ambiguity); null-safe, so a NULL payload column still finds
+          // its own row
+          val aggCols = perKey.columns.drop(names.length).map(col)
+          val keyed = perKey.select(
+            names.map(c => col(c).as("_k_" + c)) ++ aggCols: _*)
+          val name = s"${op}_round_$round"
+          val (cut, m) = Checkpoints.cutObserved(unmatched
+              .join(keyed, names.map(c => unmatched(c) <=> keyed("_k_" + c))
+                .reduce(_ && _), "left")
+              .select(names.map(unmatched(_)) ++ aggCols: _*)
+              .observe(name, count(when(!isResolved, 1)).as("miss"),
+                count(lit(1)).as("total")), op, name)
+          val (miss, total) = (m(name).getLong(0), m(name).getLong(1))
+          if (miss == 0L) done = true
+          else {
+            unmatched = cut.filter(!isResolved).select(names.map(col): _*)
+            r = nextRadius(r, maxRadius, miss, total)
+          }
+          cut.filter(isResolved)
+        }
+      val rows = emit(found)
+      out = Some(out.map(_.unionByName(rows)).getOrElse(rows))
+      round += 1
+    }
+    out.get
+  }
+
+  /** The radius schedule of [[roundLoop]] (optimization r16). Any
+    * schedule returns IDENTICAL rows — a left resolved at radius r has
+    * its true nearest (top-k) within r, so the argmin/heap is the same
+    * at any larger radius; only the final radius must be exactly
+    * maxRadius (the boundary-inclusion rule). The schedule only changes
+    * how many rounds (probe jobs + cuts) the tail pays, so it is tuned
+    * from the round's OWN observed counts (guide §8 "decide with small
+    * rows"): a mostly-missing round means startRadius was far too small
+    * — jump ×4; a small absolute tail goes straight to maxRadius (its
+    * probe is misses × one cover — the cheapest way to finish);
+    * otherwise the classic ×2. */
   private def nextRadius(r: Double, maxRadius: Double,
                          miss: Long, total: Long): Double = {
     val frac = if (total > 0) miss.toDouble / total else 0.0
     if (miss <= 2000L) maxRadius
     else if (frac >= 0.5) math.min(r * 4, maxRadius)
     else math.min(r * 2, maxRadius)
-  }
-
-  /** The shared radius-doubling argmin loop: `probe(unmatched, r)` must
-    * return all (left, right) candidate pairs within `r` carrying
-    * `right.*` plus the distance columns; `tieDist` orders the per-left
-    * argmin (ties to the smaller `rIdCol`).
-    *
-    * `uniqueLeft` (the slimLeft contract: unique non-NULL left keys —
-    * every lIdCol caller) takes the FUSED round shape (optimization
-    * r16, guide §1.2/§8): ONE job per round materializes unmatched
-    * LEFT-JOIN argmin, so the SAME action yields the round's matches,
-    * the next round's unmatched set, and (via an observe() metric) the
-    * miss count that both terminates the loop and adapts the radius
-    * schedule — the r15 shape paid a second anti-join job + isEmpty
-    * action per round. Rows returned are identical: with unique left
-    * keys the left join emits exactly one row per unmatched left, and
-    * filter(_best nullness) splits it into the r15 shape's `best` and
-    * anti-join results. The whole-row path (duplicate lefts collapse —
-    * a left join would instead duplicate matches) keeps the r15
-    * anti-join shape, with the next round's unmatched count observed on
-    * that round's cut ([[Checkpoints.cutObserved]]) instead of a separate
-    * isEmpty job.
-    */
-  private def nearestLoop(left: DataFrame, right: DataFrame,
-                          rIdCol: String,
-                          startRadius: Double, maxRadius: Double,
-                          probe: (DataFrame, Double) => DataFrame,
-                          distCols: Seq[String],
-                          uniqueLeft: Boolean = false): DataFrame = {
-    val tieDist = distCols.head
-    var unmatched = left
-    var out: Option[DataFrame] = None
-    var r = startRadius
-    var done = false
-    var round = 0
-    while (!done) {
-      val cand = probe(unmatched, r)
-      // per-left argmin: (dist asc, right id asc) through the bounded
-      // min_by struct — no window, no sort
-      val leftCols = unmatched.columns.map(col)
-      val bestAgg = cand.groupBy(leftCols: _*)
-        .agg(min_by(
-          struct(right.columns.map(col) ++ distCols.map(col): _*),
-          struct(col(tieDist), col(rIdCol))).as("_best"))
-      if (uniqueLeft && r >= maxRadius) {
-        // FINAL round: nothing downstream needs the unmatched set or
-        // the miss count, and the argmin has exactly one consumer (the
-        // returned union) — no join-back, no cut, no extra job at all.
-        // Single-round gates (startRadius >= maxRadius) hit only this.
-        val best = bestAgg.select(leftCols :+ col("_best.*"): _*)
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
-        done = true
-      } else if (uniqueLeft) {
-        // fused round: one materialization carries matches AND misses.
-        // The argmin's grouping columns keep their input attribute ids,
-        // so alias them to fresh names before joining back onto the
-        // SAME unmatched frame they derive from (self-join ambiguity)
-        val keyed = bestAgg.select(
-          unmatched.columns.map(c => col(c).as("_k_" + c)) :+ col("_best"): _*)
-        val merged = unmatched.join(keyed,
-            unmatched.columns.map(c => unmatched(c) <=> keyed("_k_" + c))
-              .reduce(_ && _), "left")
-          .select(unmatched.columns.map(unmatched(_)) :+ col("_best"): _*)
-        val name = s"nl_round_$round"
-        val (cut, m) = Checkpoints.cutObserved(merged.observe(name,
-            count(when(col("_best").isNull, 1)).as("miss"),
-            count(lit(1)).as("total")), "nearestJoin", name)
-        val (miss, total) = (m(name).getLong(0), m(name).getLong(1))
-        val best = cut.filter(col("_best").isNotNull)
-          .select(leftCols :+ col("_best.*"): _*)
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
-        if (miss == 0L) done = true
-        else {
-          unmatched = cut.filter(col("_best").isNull).drop("_best")
-          r = nextRadius(r, maxRadius, miss, total)
-        }
-      } else {
-        // the round's argmin frame is consumed TWICE — the anti-join
-        // deriving the next round's unmatched set, and the returned
-        // union — and each un-cut consumption re-executes the whole
-        // probe join; cut once, both consumers read the slim rows
-        val best = bestAgg
-          .select(leftCols :+ col("_best.*"): _*)
-          .lineageCut()
-        out = Some(out.map(_.unionByName(best)).getOrElse(best))
-        // null-SAFE anti join: a left row with a NULL payload column
-        // must still recognize itself as matched (EqualTo would
-        // re-probe and re-emit it every round)
-        val bestKeys = best.select(leftCols: _*)
-        val next = unmatched.join(bestKeys,
-          unmatched.columns.map(c => unmatched(c) <=> bestKeys(c))
-            .reduce(_ && _), "left_anti")
-        if (r >= maxRadius) done = true
-        else {
-          val name = s"nl_rest_$round"
-          val (remaining, m) = Checkpoints.cutObserved(
-            next.observe(name, count(lit(1)).as("n")), "nearestJoin", name)
-          if (m(name).getLong(0) == 0L) done = true
-          else { unmatched = remaining; r = math.min(r * 2, maxRadius) }
-        }
-      }
-      round += 1
-    }
-    out.get
-  }
-
-  def nearestJoin(left: DataFrame, right: DataFrame,
-                  lx: String, ly: String, rx: String, ry: String,
-                  rIdCol: String,
-                  startRadius: Double, maxRadius: Double,
-                  lIdCol: Option[String] = None): DataFrame = {
-    require(startRadius > 0 && maxRadius >= startRadius,
-      s"need 0 < startRadius ($startRadius) <= maxRadius ($maxRadius)")
-    require(right.columns.contains(rIdCol),
-      s"nearestJoin: id column '$rIdCol' missing from right side")
-    lIdCol match {
-      case Some(id) =>
-        requireDisjointForJoinBack(left, id, right,
-          Seq("dist2", "dist"), "nearestJoin")
-        val slim = slimLeft(left, id, lx, ly, "nearestJoin")
-        val res = nearestLoop(slim, right, rIdCol, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r),
-          Seq("dist2", "dist"), uniqueLeft = true).drop(lx, ly)
-        left.join(res, Seq(id)) // payload back in ONE hash join
-      case None =>
-        nearestLoop(left, right, rIdCol, startRadius, maxRadius,
-          (u, r) => radiusJoin(u, right, lx, ly, rx, ry, r),
-          Seq("dist2", "dist"))
-    }
   }
 
   /**
@@ -670,6 +561,58 @@ object DistanceJoin {
   val EarthRadiusMeters: Double = 6371008.8
 
   /**
+   * The one latitude-banded grid of the geodesic operators
+   * ([[geoRadiusJoin]], [[geoSpaceTimeJoinStream]] and
+   * [[GeoCluster.hotspotsGeo]]; the q270 gate audits its margins): bands
+   * of height `hRad` radians, and per-band longitude cells sized so that
+   * any pair within `hRad·R` great-circle metres sits at most one band
+   * and one cell apart (geoRadiusJoin's scaladoc has the argument). Each
+   * operator keeps its own coordinate refusals.
+   */
+  private[graft] final class LatBands(hRad: Double) {
+    private val hDeg = math.toDegrees(hRad)
+    private val sinHalf = math.sin(hRad / 2) // sin(r / 2R)
+
+    def band(lat: Column): Column = floor(lat / lit(hDeg)).cast("long")
+
+    /** Longitude cells of band `b`. The worst |lat| any point of a pair
+      * touching band b can have is the band's own edges widened by one
+      * band each way (the partner may sit one band off), clamped to the
+      * pole. */
+    def nCellsOf(b: Column): Column = {
+      val phiMax = least(lit(90.0),
+        greatest(abs(b.cast("double") * lit(hDeg)),
+          abs((b.cast("double") + 1) * lit(hDeg))) + lit(hDeg))
+      // max lon separation (degrees) of any in-radius pair at this band
+      // family: 2·asin(min(1, sin(r/2R)/cos(φmax))); cos→0 at the pole
+      // drives the arg past 1 → 180° → whole-circle cells
+      val dLamDeg = degrees(lit(2.0) *
+        asin(least(lit(1.0), lit(sinHalf) / cos(radians(phiMax)))))
+      greatest(lit(1L), floor(lit(360.0) / dLamDeg).cast("long"))
+    }
+
+    def cellOf(lon: Column, b: Column, shift: Column): Column = {
+      val n = nCellsOf(b)
+      val w = lit(360.0) / n.cast("double")
+      pmod(floor((lon + lit(180.0)) / w).cast("long") + shift, n)
+    }
+
+    /** The 3 band × 3 cell neighborhood of (band `b`, lon) as
+      * `(_gband, _gcell)` structs, DEDUPED per row: a band with few
+      * longitude cells (polar caps, or any band once a round loop
+      * reaches continental radii) wraps the -1/0/+1 cell shifts onto
+      * the SAME cell id under pmod, and without the dedup a replicated
+      * row would join a cell twice — duplicate pairs, caught by the kNN
+      * heap counting a neighbor twice (an exact verify cannot see
+      * multiplicity). */
+    def neighborKeys(b: Column, lon: Column): Column =
+      array_distinct(array((for (db <- -1L to 1L; dc <- -1L to 1L) yield {
+        val nb = b + lit(db)
+        struct(nb.as("_gband"), cellOf(lon, nb, lit(dc)).as("_gcell"))
+      }).toSeq: _*))
+  }
+
+  /**
    * All (left, right) pairs within `radiusMeters` GREAT-CIRCLE metres —
    * the geodesic sibling of [[radiusJoin]] for lat/lon corpora. Same
    * hash-join + exact-verify recipe, with the grid replaced by
@@ -727,57 +670,23 @@ object DistanceJoin {
         s"geoRadiusJoin: reserved column '$c' already present — rename it " +
         "(scratch columns would silently overwrite and drop it)")
     }
-    val hRad = radiusMeters / bigR          // band height, radians
-    val hDeg = math.toDegrees(hRad)
-    val sinHalf = math.sin(hRad / 2)        // sin(r / 2R)
+    val grid = new LatBands(radiusMeters / bigR)
     def checked(c: Column, lo: Double, hi: Double, what: String): Column =
       when(c.isNull || isnan(c) || c < lo || c > hi,
         raise_error(concat(lit(s"geoRadiusJoin: $what out of [$lo, $hi] " +
           s"(or NULL/NaN) — a misindexed cell silently drops pairs, got "),
           c.cast("string"))).cast("double"))
         .otherwise(c)
-    def band(lat: Column): Column = floor(lat / lit(hDeg)).cast("long")
-    // worst |lat| any point of a pair touching band b can have: the
-    // band's own edges widened by one band each way (the partner may
-    // sit one band off), clamped to the pole
-    def nCellsOf(b: Column): Column = {
-      val phiMax = least(lit(90.0),
-        greatest(abs(b.cast("double") * lit(hDeg)),
-          abs((b.cast("double") + 1) * lit(hDeg))) + lit(hDeg))
-      // max lon separation (degrees) of any in-radius pair at this band
-      // family: 2·asin(min(1, sin(r/2R)/cos(φmax))); cos→0 at the pole
-      // drives the arg past 1 → 180° → whole-circle cells
-      val dLamDeg = degrees(lit(2.0) *
-        asin(least(lit(1.0), lit(sinHalf) / cos(radians(phiMax)))))
-      greatest(lit(1L), floor(lit(360.0) / dLamDeg).cast("long"))
-    }
-    def cellOf(lon: Column, b: Column, shift: Column): Column = {
-      val n = nCellsOf(b)
-      val w = lit(360.0) / n.cast("double")
-      pmod(floor((lon + lit(180.0)) / w).cast("long") + shift, n)
-    }
     val l = left
       .withColumn("_glat", checked(col(lLat), -90, 90, "left latitude"))
       .withColumn("_glon", checked(col(lLon), -180, 180, "left longitude"))
-      .withColumn("_gband", band(col("_glat")))
-      .withColumn("_gcell", cellOf(col("_glon"), col("_gband"), lit(0L)))
+      .withColumn("_gband", grid.band(col("_glat")))
+      .withColumn("_gcell", grid.cellOf(col("_glon"), col("_gband"), lit(0L)))
       .drop("_glat", "_glon")
-    // the 9 replication keys are DEDUPED per row (array_distinct): a
-    // band with few longitude cells (polar caps, or any band once the
-    // doubling loop reaches continental radii) wraps the -1/0/+1 cell
-    // shifts onto the SAME cell id under pmod, and without the dedup a
-    // right row would join a left cell twice — duplicate pairs, caught
-    // by the kNN heap counting a neighbor twice (the radius join's
-    // exact verify cannot see multiplicity)
-    val rKeys = array((for (db <- -1L to 1L; dc <- -1L to 1L) yield {
-      val b = band(col("_glat")) + lit(db)
-      struct(b.as("_gband"),
-        cellOf(col("_glon"), b, lit(dc)).as("_gcell"))
-    }).toSeq: _*)
     val r = right
       .withColumn("_glat", checked(col(rLat), -90, 90, "right latitude"))
       .withColumn("_glon", checked(col(rLon), -180, 180, "right longitude"))
-      .withColumn("_gk", explode(array_distinct(rKeys)))
+      .withColumn("_gk", explode(grid.neighborKeys(grid.band(col("_glat")), col("_glon"))))
       .withColumn("_gband", col("_gk._gband"))
       .withColumn("_gcell", col("_gk._gcell"))
       .drop("_glat", "_glon", "_gk")
@@ -851,9 +760,7 @@ object DistanceJoin {
       require(!left.columns.contains(c) && !right.columns.contains(c),
         s"geoSpaceTimeJoinStream: reserved column '$c' already present — rename it")
     }
-    val hRad = radiusMeters / bigR
-    val hDeg = math.toDegrees(hRad)
-    val sinHalf = math.sin(hRad / 2)
+    val grid = new LatBands(radiusMeters / bigR)
     def checked(c: Column, lo: Double, hi: Double, what: String): Column =
       when(c.isNull || isnan(c) || c < lo || c > hi,
         raise_error(concat(lit(s"geoSpaceTimeJoinStream: $what out of [$lo, $hi] " +
@@ -864,20 +771,6 @@ object DistanceJoin {
       when(x.isNull || isnan(x.cast("double")),
         raise_error(lit(s"geoSpaceTimeJoinStream: NULL/NaN $what")).cast("long"))
         .otherwise(floor(x.cast("double") / bw).cast("long"))
-    def band(lat: Column): Column = floor(lat / lit(hDeg)).cast("long")
-    def nCellsOf(b: Column): Column = {
-      val phiMax = least(lit(90.0),
-        greatest(abs(b.cast("double") * lit(hDeg)),
-          abs((b.cast("double") + 1) * lit(hDeg))) + lit(hDeg))
-      val dLamDeg = degrees(lit(2.0) *
-        asin(least(lit(1.0), lit(sinHalf) / cos(radians(phiMax)))))
-      greatest(lit(1L), floor(lit(360.0) / dLamDeg).cast("long"))
-    }
-    def cellOf(lon: Column, b: Column, shift: Column): Column = {
-      val n = nCellsOf(b)
-      val w = lit(360.0) / n.cast("double")
-      pmod(floor((lon + lit(180.0)) / w).cast("long") + shift, n)
-    }
     // fan-out REBALANCE (optimization r15): the ±1 time-bucket axis
     // moved from the right explosion to the LEFT (l._gct + dt == r._gct
     // matches the same |Δbucket| <= 1 set r._gct + dt did, and dt is
@@ -887,24 +780,17 @@ object DistanceJoin {
     val l = left
       .withColumn("_glat", checked(col(lLat), -90, 90, "left latitude"))
       .withColumn("_glon", checked(col(lLon), -180, 180, "left longitude"))
-      .withColumn("_gband", band(col("_glat")))
-      .withColumn("_gcell", cellOf(col("_glon"), col("_gband"), lit(0L)))
+      .withColumn("_gband", grid.band(col("_glat")))
+      .withColumn("_gcell", grid.cellOf(col("_glon"), col("_gband"), lit(0L)))
       .withColumn("_dt", explode(array(lit(-1L), lit(0L), lit(1L))))
       .withColumn("_gct", tbin(col(lt), "left time") + col("_dt"))
       .drop("_glat", "_glon", "_dt")
       .withColumn("_lets", timestamp_seconds(col(lt).cast("double")))
       .withWatermark("_lets", watermarkDelay)
-    // deduped 3x3 spatial neighborhood (polar wrap can alias shifts —
-    // same argument as geoRadiusJoin)
-    val rKeys = array((for (db <- -1L to 1L; dc <- -1L to 1L) yield {
-      val b = band(col("_glat")) + lit(db)
-      struct(b.as("_gband"),
-        cellOf(col("_glon"), b, lit(dc)).as("_gcell"))
-    }).toSeq: _*)
     val r = right
       .withColumn("_glat", checked(col(rLat), -90, 90, "right latitude"))
       .withColumn("_glon", checked(col(rLon), -180, 180, "right longitude"))
-      .withColumn("_gk", explode(array_distinct(rKeys)))
+      .withColumn("_gk", explode(grid.neighborKeys(grid.band(col("_glat")), col("_glon"))))
       .withColumn("_gband", col("_gk._gband"))
       .withColumn("_gcell", col("_gk._gcell"))
       .withColumn("_gct", tbin(col(rt), "right time"))
@@ -937,11 +823,11 @@ object DistanceJoin {
   /**
    * Geodesic NEAREST-neighbor join — [[nearestJoin]] on the sphere:
    * for every left point the single great-circle-closest right point
-   * (ties (dist_m, right id)), by the same iterative radius doubling
+   * (ties (dist_m, right id)), by the same iterative radius growth
    * over [[geoRadiusJoin]]; lefts with nothing within `maxRadiusMeters`
    * are OMITTED. `lIdCol` runs the loop on a slim (id, lat, lon)
    * projection and joins the payload back once (ids must be unique —
-   * refused otherwise). The doubling radii are metres, so the probe
+   * refused otherwise). The round radii are metres, so the probe
    * geometry re-bands per round — cells stay matched to the radius.
    */
   def geoNearestJoin(left: DataFrame, right: DataFrame,
@@ -956,27 +842,16 @@ object DistanceJoin {
       s"geoNearestJoin: maxRadius must stay under pi*R metres")
     require(right.columns.contains(rIdCol),
       s"geoNearestJoin: id column '$rIdCol' missing from right side")
-    def probe(u: DataFrame, r: Double): DataFrame =
-      geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r, earthRadiusMeters)
-    lIdCol match {
-      case Some(id) =>
-        requireDisjointForJoinBack(left, id, right,
-          Seq("dist_m"), "geoNearestJoin")
-        val slim = slimLeft(left, id, lLat, lLon, "geoNearestJoin")
-        val res = nearestLoop(slim, right, rIdCol, startRadiusMeters,
-          maxRadiusMeters, probe, Seq("dist_m"), uniqueLeft = true)
-          .drop(lLat, lLon)
-        left.join(res, Seq(id))
-      case None =>
-        nearestLoop(left, right, rIdCol, startRadiusMeters, maxRadiusMeters,
-          probe, Seq("dist_m"))
-    }
+    perLeft(left, lIdCol, lLat, lLon, right, Seq("dist_m"), "geoNearestJoin")(
+      nearestRounds(_, right, rIdCol, startRadiusMeters, maxRadiusMeters,
+        (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
+          earthRadiusMeters), Seq("dist_m"), "geoNearestJoin"))
   }
 
   /**
    * Geodesic k-NEAREST-neighbors join — [[knnJoin]] on the sphere:
    * every left's k great-circle-closest rights with ranks (ties
-   * (dist_m, right id)); same >= k-candidates doubling rule over
+   * (dist_m, right id)); same >= k-candidates resolution rule over
    * [[geoRadiusJoin]], lefts with fewer than k candidates within
    * `maxRadiusMeters` resolve there with what they have. `lIdCol` as
    * in [[knnJoin]]. Returns `left.* ++ (rIdCol, dist_m, rank)`.
@@ -994,23 +869,11 @@ object DistanceJoin {
       s"geoKnnJoin: maxRadius must stay under pi*R metres")
     require(right.columns.contains(rIdCol),
       s"geoKnnJoin: id column '$rIdCol' missing from right side")
-    if (lIdCol.isDefined) {
-      val id = lIdCol.get
-      requireDisjointForJoinBack(left, id, right,
-        Seq("dist_m", "rank"), "geoKnnJoin")
-      val slim = slimLeft(left, id, lLat, lLon, "geoKnnJoin")
-      // direct knnLoop call so the loop knows the slimLeft uniqueness
-      // contract and takes the fused one-job-per-round shape (r16)
-      return left.join(
-        knnLoop(slim, rIdCol, k, startRadiusMeters, maxRadiusMeters,
-          (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
-            earthRadiusMeters), "dist_m", uniqueLeft = true)
-          .drop(lLat, lLon),
-        Seq(id))
-    }
-    knnLoop(left, rIdCol, k, startRadiusMeters, maxRadiusMeters,
-      (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
-        earthRadiusMeters), "dist_m")
+    perLeft(left, lIdCol, lLat, lLon, right, Seq("dist_m", "rank"),
+        "geoKnnJoin")(
+      knnRounds(_, rIdCol, k, startRadiusMeters, maxRadiusMeters,
+        (u, r) => geoRadiusJoin(u, right, lLat, lLon, rLat, rLon, r,
+          earthRadiusMeters), "dist_m", "geoKnnJoin"))
   }
 
   /**
@@ -1112,7 +975,7 @@ object DistanceJoin {
    * GEODESIC snap-to-nearest-segment join — [[snapToSegments]] on the
    * sphere: every point's closest road arc within `maxRadiusMeters`
    * (ties to the smallest `sIdCol`), by [[nearestJoin]]'s radius
-   * doubling over [[geoSegmentRadiusJoin]]. Points with nothing within
+   * growth over [[geoSegmentRadiusJoin]]. Points with nothing within
    * the bound are OMITTED; `lIdCol` as in [[nearestJoin]]. Returns
    * `points.* ++ segs.* ++ dist_m`.
    */
@@ -1129,22 +992,12 @@ object DistanceJoin {
       s"need 0 < startRadius ($startRadiusMeters) <= maxRadius ($maxRadiusMeters)")
     require(segs.columns.contains(sIdCol),
       s"geoSnapToSegments: id column '$sIdCol' missing from segment side")
-    def probe(u: DataFrame, r: Double): DataFrame =
-      geoSegmentRadiusJoin(u, segs, pLat, pLon, aLat, aLon, bLat, bLon,
-        r, maxSegMeters, earthRadiusMeters)
-    lIdCol match {
-      case Some(id) =>
-        requireDisjointForJoinBack(points, id, segs,
-          Seq("dist_m"), "geoSnapToSegments")
-        val slim = slimLeft(points, id, pLat, pLon, "geoSnapToSegments")
-        val res = nearestLoop(slim, segs, sIdCol, startRadiusMeters,
-          maxRadiusMeters, probe, Seq("dist_m"), uniqueLeft = true)
-          .drop(pLat, pLon)
-        points.join(res, Seq(id))
-      case None =>
-        nearestLoop(points, segs, sIdCol, startRadiusMeters,
-          maxRadiusMeters, probe, Seq("dist_m"))
-    }
+    perLeft(points, lIdCol, pLat, pLon, segs, Seq("dist_m"),
+        "geoSnapToSegments")(
+      nearestRounds(_, segs, sIdCol, startRadiusMeters, maxRadiusMeters,
+        (u, r) => geoSegmentRadiusJoin(u, segs, pLat, pLon, aLat, aLon,
+          bLat, bLon, r, maxSegMeters, earthRadiusMeters), Seq("dist_m"),
+        "geoSnapToSegments"))
   }
 
   /**
@@ -1275,7 +1128,7 @@ object DistanceJoin {
    * SNAP-to-nearest-segment join (the map-matching core): for every
    * point, its single closest segment within `maxRadius` (ties to the
    * smallest `sIdCol`), with the snapped coordinates and projection
-   * fraction. Same iterative radius doubling as [[nearestJoin]] over
+   * fraction. Same iterative radius growth as [[nearestJoin]] over
    * [[segmentRadiusJoin]]; points with no segment within `maxRadius`
    * are OMITTED (the caller's bound). `lIdCol` as in [[nearestJoin]]:
    * slim loop key + one payload join-back for wide point payloads.
@@ -1292,19 +1145,10 @@ object DistanceJoin {
     require(segs.columns.contains(sIdCol),
       s"snapToSegments: id column '$sIdCol' missing from segment side")
     val distCols = Seq("dist2", "dist", "frac", "snap_x", "snap_y")
-    def probe(u: DataFrame, r: Double): DataFrame =
-      segmentRadiusJoin(u, segs, px, py, ax, ay, bx, by, r)
-    lIdCol match {
-      case Some(id) =>
-        requireDisjointForJoinBack(points, id, segs, distCols, "snapToSegments")
-        val slim = slimLeft(points, id, px, py, "snapToSegments")
-        val res = nearestLoop(slim, segs, sIdCol, startRadius, maxRadius,
-          probe, distCols, uniqueLeft = true).drop(px, py)
-        points.join(res, Seq(id))
-      case None =>
-        nearestLoop(points, segs, sIdCol, startRadius, maxRadius,
-          probe, distCols)
-    }
+    perLeft(points, lIdCol, px, py, segs, distCols, "snapToSegments")(
+      nearestRounds(_, segs, sIdCol, startRadius, maxRadius,
+        (u, r) => segmentRadiusJoin(u, segs, px, py, ax, ay, bx, by, r),
+        distCols, "snapToSegments"))
   }
 
   /**

@@ -299,9 +299,7 @@ object GeoCluster {
         s"hotspotsGeo: weight column '$c' must be integral (got $t) — " +
         "integer mass keeps every sum exact and the z tree replayable")
     }
-    val hRad = cellSizeMeters / bigR
-    val hDeg = math.toDegrees(hRad)
-    val sinHalf = math.sin(hRad / 2)
+    val grid = new DistanceJoin.LatBands(cellSizeMeters / bigR)
     def checked(c: Column, lo: Double, hi: Double, what: String): Column =
       when(c.isNull || isnan(c) || c.cast("double") < lo || c.cast("double") > hi,
         raise_error(concat(lit(s"hotspotsGeo: $what out of [$lo, $hi] " +
@@ -315,28 +313,12 @@ object GeoCluster {
           lit("hotspotsGeo: negative weight "), col(c).cast("string"),
           lit(" — Gi* scores non-negative incidence mass"))).cast("long"))
         .otherwise(col(c).cast("long"))).getOrElse(lit(1L))
-    def band(lat: Column): Column = floor(lat / lit(hDeg)).cast("long")
-    // geoRadiusJoin's band-family cell count, verbatim (see its scaladoc
-    // for the phiMax widening and the polar whole-circle collapse)
-    def nCellsOf(b: Column): Column = {
-      val phiMax = least(lit(90.0),
-        greatest(abs(b.cast("double") * lit(hDeg)),
-          abs((b.cast("double") + 1) * lit(hDeg))) + lit(hDeg))
-      val dLamDeg = degrees(lit(2.0) *
-        asin(least(lit(1.0), lit(sinHalf) / cos(radians(phiMax)))))
-      greatest(lit(1L), floor(lit(360.0) / dLamDeg).cast("long"))
-    }
-    def cellOf(lon: Column, b: Column, shift: Column): Column = {
-      val n = nCellsOf(b)
-      val w2 = lit(360.0) / n.cast("double")
-      pmod(floor((lon + lit(180.0)) / w2).cast("long") + shift, n)
-    }
     val cells = points.select(
         checked(col(latCol), -90, 90, "latitude").as("_lat"),
         checked(col(lonCol), -180, 180, "longitude").as("_lon"),
         w.as("_w"))
-      .select(band(col("_lat")).as("band"),
-        cellOf(col("_lon"), band(col("_lat")), lit(0L)).as("cell"),
+      .select(grid.band(col("_lat")).as("band"),
+        grid.cellOf(col("_lon"), grid.band(col("_lat")), lit(0L)).as("cell"),
         col("_w"))
       .groupBy("band", "cell").agg(sum("_w").as("mass"))
     val globals = cells.agg(count(lit(1)).as("_n"),
@@ -347,15 +329,11 @@ object GeoCluster {
     // — ≤9 slim rows per occupied cell, payload never rides
     val centerLon = lit(-180.0) +
       (col("cell").cast("double") + lit(0.5)) *
-        (lit(360.0) / nCellsOf(col("band")).cast("double"))
-    val nbrKeys = array((for (db <- -1L to 1L; dc <- -1L to 1L) yield {
-      val tb = col("band") + lit(db)
-      struct(tb.as("tband"), cellOf(centerLon, tb, lit(dc)).as("tcell"))
-    }).toSeq: _*)
+        (lit(360.0) / grid.nCellsOf(col("band")).cast("double"))
     val lookups = cells.select(col("band"), col("cell"),
-        explode(array_distinct(nbrKeys)).as("_t"))
+        explode(grid.neighborKeys(col("band"), centerLon)).as("_t"))
       .select(col("band"), col("cell"),
-        col("_t.tband").as("tband"), col("_t.tcell").as("tcell"))
+        col("_t._gband").as("tband"), col("_t._gcell").as("tcell"))
     val donated = lookups
       .join(cells.select(col("band").as("tband"), col("cell").as("tcell"),
         col("mass").as("_xj")), Seq("tband", "tcell"))

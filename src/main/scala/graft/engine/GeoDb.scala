@@ -296,8 +296,10 @@ class GeoDb(
         val withMeta = incoming
           .withColumn("created_at", current_timestamp())
           .withColumn("modified_at", lit(null).cast(TimestampType))
-        val assigned = assignIds(alignTo(meta.schema, withMeta, keepId = false), meta.maxId)
-        val n = appendWrite(d, collection, meta, assigned)
+        val (assigned, n) =
+          assignIds(alignTo(meta.schema, withMeta, keepId = false), meta.maxId)
+        addStats(meta, assigned).write.options(writeOptions).mode("append")
+          .parquet(catalog.dataDir(d, collection))
         catalog.saveMeta(metaOf(d, collection).copy(maxId = meta.maxId + n))
         maintainVectorIndexes(d, collection, assigned)
       }
@@ -1500,9 +1502,10 @@ class GeoDb(
    * `monotonically_increasing_id()` is `(pid << 33) | localIndex`, so the
    * local index is its low 33 bits. Two passes, no shuffle, no exit from
    * Tungsten/codegen (round 1 used `df.rdd.zipWithIndex`, which
-   * deserialized every row; VERDICT item 9).
+   * deserialized every row; VERDICT item 9). Returns the frame with its
+   * row count, the sum of the exact per-partition counts.
    */
-  private def assignIds(dfIn: DataFrame, start: Long): DataFrame = {
+  private def assignIds(dfIn: DataFrame, start: Long): (DataFrame, Long) = {
     // pin the partitioning before the two passes: if the incoming frame
     // contains a shuffle or a sample, AQE re-planning / task re-scheduling
     // between the counting action and the id projection could change
@@ -1512,24 +1515,14 @@ class GeoDb(
     val counts = df.groupBy(spark_partition_id().as("_pid"))
       .agg(count(lit(1)).as("_n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) return df
+    if (counts.isEmpty) return (df, 0L)
     val maxPid = counts.keys.max
     val offsets = new Array[Long](maxPid + 1)
     var acc = 0L
     (0 to maxPid).foreach { p => offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
-    df.withColumn("id",
+    (df.withColumn("id",
       lit(start) + element_at(lit(offsets), spark_partition_id() + 1) +
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1)
-  }
-
-  /** Append new files; returns row count of the appended frame. */
-  private def appendWrite(d: String, c: String, meta: CollectionMeta,
-                          df: DataFrame): Long = {
-    val before = estimatedCount(d, c)
-    addStats(meta, df).write.options(writeOptions).mode("append")
-      .parquet(catalog.dataDir(d, c))
-    // row count from footers (O(#files), no re-scan, no caching of the input)
-    estimatedCount(d, c) - before
+        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1), acc)
   }
 
   /**

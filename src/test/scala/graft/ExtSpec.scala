@@ -4910,6 +4910,76 @@ class ExtSpec extends SparkSpec {
     assert(!far.contains(999L) && far.contains(0L))
   }
 
+  test("knn/nearest joins: any radius schedule == one round at maxRadius; whole-row duplicates collapse") {
+    import graft.core.DistanceJoin
+    // three rights at the origin; each ring of lefts first finds all
+    // three at one round's radius. From startRadius 1: 4260 of 4300
+    // lefts miss (over half: x4 to 4), 2060 still miss (under half, over
+    // 2000: x2 to 8), 60 miss (a small tail: straight to maxRadius 64),
+    // and the 5 lefts beyond 64 are omitted — four rounds
+    val rnd = new scala.util.Random(47)
+    val rings = Seq((40, 0.1, 0.9), (2200, 1.5, 3.5), (2000, 4.5, 7.5),
+      (55, 9.0, 60.0), (5, 70.0, 90.0))
+    val l = rings.flatMap { case (n, lo, hi) => Seq.fill(n) {
+        val (d, a) = (lo + rnd.nextDouble() * (hi - lo), rnd.nextDouble() * 2 * math.Pi)
+        (d * math.cos(a), d * math.sin(a))
+      } }.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+      .toDF("lid", "lx", "ly")
+    val lDup = l.unionByName(l.filter($"lid" % 10 === 0))
+    val r = Seq((0L, 0.0, 0.0), (1L, 0.01, 0.0), (2L, 0.0, 0.01))
+      .toDF("rid", "rx", "ry")
+    def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+      df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+    val runs = Seq[(String, Int, Double => org.apache.spark.sql.DataFrame)](
+      ("nearestJoin", 1, s => DistanceJoin.nearestJoin(lDup, r, "lx", "ly",
+        "rx", "ry", "rid", s, 64.0)),
+      ("nearestJoin lIdCol", 1, s => DistanceJoin.nearestJoin(l, r, "lx", "ly",
+        "rx", "ry", "rid", s, 64.0, lIdCol = Some("lid"))),
+      ("knnJoin", 3, s => DistanceJoin.knnJoin(lDup, r, "lx", "ly",
+        "rx", "ry", "rid", k = 3, s, 64.0)),
+      ("knnJoin lIdCol", 3, s => DistanceJoin.knnJoin(l, r, "lx", "ly",
+        "rx", "ry", "rid", k = 3, s, 64.0, lIdCol = Some("lid"))))
+    val got = runs.map { case (op, perLeft, run) =>
+      val (grown, acts) = recordActions(bag(run(1.0)))
+      assert(acts.count(_._1 == "localCheckpoint") === 3, s"$op: ${acts.map(_._1)}")
+      assert(grown == bag(run(64.0)), s"$op: schedule changed the rows")
+      val perLid = grown.toSeq.flatMap { case (row, n) => Seq.fill(n)(row.head) }
+        .groupBy(identity).map(_._2.size)
+      assert(grown.values.sum === 4295 * perLeft && perLid.forall(_ == perLeft), op)
+      op -> grown
+    }.toMap
+    // value duplicates collapse: the whole-row runs equal the lIdCol runs
+    assert(got("nearestJoin") == got("nearestJoin lIdCol"))
+    assert(got("knnJoin") == got("knnJoin lIdCol"))
+  }
+
+  test("knn/nearest joins: one action per non-final round, the round's cut") {
+    import graft.core.DistanceJoin
+    val rnd = new scala.util.Random(53)
+    val l = ((0L until 40L).map(i => (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20)) :+
+      (99L, 300.0, 300.0)).toDF("lid", "lx", "ly")
+    val r = (0L until 20L).map(i =>
+      (i, rnd.nextDouble() * 20, rnd.nextDouble() * 20)).toDF("rid", "rx", "ry")
+    val runs = Seq[(String, Double => org.apache.spark.sql.DataFrame)](
+      "nearestJoin" -> (s => DistanceJoin.nearestJoin(l, r, "lx", "ly", "rx", "ry",
+        "rid", s, 1024.0)),
+      "nearestJoin lIdCol" -> (s => DistanceJoin.nearestJoin(l, r, "lx", "ly",
+        "rx", "ry", "rid", s, 1024.0, lIdCol = Some("lid"))),
+      "knnJoin" -> (s => DistanceJoin.knnJoin(l, r, "lx", "ly", "rx", "ry",
+        "rid", k = 3, s, 1024.0)),
+      "knnJoin lIdCol" -> (s => DistanceJoin.knnJoin(l, r, "lx", "ly", "rx", "ry",
+        "rid", k = 3, s, 1024.0, lIdCol = Some("lid"))))
+    for ((op, run) <- runs) {
+      def actions(start: Double): Seq[String] =
+        recordActions(run(start).collect())._2.map(_._1)
+      // one round at maxRadius: the collect is the only action
+      assert(actions(1024.0) === Seq("collect"), op)
+      // from 0.5 the far left misses round 1, and a tail of at most 2000
+      // misses goes straight to maxRadius: two rounds, one cut
+      assert(actions(0.5) === Seq("localCheckpoint", "collect"), op)
+    }
+  }
+
   test("context assembly: prefix-stop semantics, boundary, ties, refusals") {
     // query 1: chunks score-ordered A(50) B(40) C(30): budget 95 keeps
     // A,B (cum 90); C (cum 120) overflows and STOPS the prefix even
@@ -5421,8 +5491,8 @@ class ExtSpec extends SparkSpec {
       (i.toLong, 10.0 + c * 0.5 + rnd.nextGaussian() * 0.001,
         20.0 + c * 0.5 + rnd.nextGaussian() * 0.001)
     }.toDF("id", "lat", "lon")
-    // knn/nearest: startRadius far below the spacing, so the whole-row
-    // arms run several doubling rounds and the lIdCol arms a fused round
+    // knn/nearest: startRadius far below the spacing, so every arm runs
+    // rounds that each end in a cut
     val knnL = (0L until 60L).map(i =>
       (i, rnd.nextDouble() * 40, rnd.nextDouble() * 40)).toDF("lid", "lx", "ly")
     val knnR = (0L until 30L).map(i =>

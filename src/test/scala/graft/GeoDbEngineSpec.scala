@@ -121,6 +121,11 @@ class GeoDbEngineSpec extends SparkSpec {
     db.insertIntoCollection("c1", df)
     assert(db.getCollection("c1", "order=id").select("id").as[Long]
       .collect().toSeq == Seq(1L, 2L, 3L, 4L))
+    // an empty insert assigns nothing, and the next one stays dense
+    db.insertIntoCollection("c1", df.limit(0))
+    db.insertIntoCollection("c1", df)
+    assert(db.getCollection("c1", "order=id").select("id").as[Long]
+      .collect().toSeq == (1L to 6L))
   }
 
   test("assignIds stable under nondeterministic input plans (shuffle + sample)") {

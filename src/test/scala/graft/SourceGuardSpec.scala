@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the extensions plans like one an engine object set up;
   *  - the only `main` objects are the harness (`Bench`, `Verify`) and
   *    the three tools (`PlanDump`, `Smoke`, `EntryCheck`); measurement
-  *    belongs to `perfbench/`, not to one-off probe mains. */
+  *    belongs to `perfbench/`, not to one-off probe mains;
+  *  - the geodesic operators' latitude-banded grid has one definition
+  *    (`DistanceJoin.LatBands`), not a copy per operator. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -77,5 +79,10 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("graft.Bench", "graft.Verify", "graft.tools.EntryCheck",
       "graft.tools.PlanDump", "graft.tools.Smoke"), mains.mkString("\n"))
+  }
+
+  test("the latitude-banded grid is defined once: one def nCellsOf in src/main") {
+    val defs = offending((_, line) => line.contains("def nCellsOf"))
+    assert(defs.size == 1, defs.mkString("\n"))
   }
 }
