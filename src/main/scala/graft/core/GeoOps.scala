@@ -137,12 +137,7 @@ object GeoOps {
         require(cs(i).x >= -180 && cs(i).x <= 180 && cs(i).y >= -90 && cs(i).y <= 90,
           s"lengthSpherical: vertex (${cs(i).x}, ${cs(i).y}) outside lon/lat " +
           "range — a projected polyline here would be silent nonsense")
-        val dphi = math.toRadians(cs(i).y) - math.toRadians(cs(i + 1).y)
-        val dlam = math.toRadians(cs(i).x) - math.toRadians(cs(i + 1).x)
-        val h = math.pow(math.sin(dphi / 2), 2) +
-          math.cos(math.toRadians(cs(i).y)) * math.cos(math.toRadians(cs(i + 1).y)) *
-            math.pow(math.sin(dlam / 2), 2)
-        sum += 2.0 * r * math.asin(math.min(1.0, math.sqrt(h)))
+        sum += haversineMeters(cs(i).y, cs(i).x, cs(i + 1).y, cs(i + 1).x, r)
         i += 1
       }
       sum
@@ -182,12 +177,21 @@ object GeoOps {
   def distanceSpherical(a: Array[Byte], b: Array[Byte], radiusMeters: Double): Double = {
     val ca = pointLonLat(a, "distanceSpherical")
     val cb = pointLonLat(b, "distanceSpherical")
-    val dphi = math.toRadians(ca.y) - math.toRadians(cb.y)
-    val dlam = math.toRadians(ca.x) - math.toRadians(cb.x)
+    haversineMeters(ca.y, ca.x, cb.y, cb.x, radiusMeters)
+  }
+
+  /** The one scalar haversine (metres on a sphere of radius `r`) between
+    * two lat/lon degree pairs: the tree [[DistanceJoin.geoRadiusJoin]]
+    * verifies with, Δ taken as `0 − 1` — callers keep their own operand
+    * order so every result is bit-identical to the Column tree. */
+  def haversineMeters(lat0: Double, lon0: Double, lat1: Double, lon1: Double,
+                      r: Double): Double = {
+    val dphi = math.toRadians(lat0) - math.toRadians(lat1)
+    val dlam = math.toRadians(lon0) - math.toRadians(lon1)
     val h = math.pow(math.sin(dphi / 2), 2) +
-      math.cos(math.toRadians(ca.y)) * math.cos(math.toRadians(cb.y)) *
+      math.cos(math.toRadians(lat0)) * math.cos(math.toRadians(lat1)) *
         math.pow(math.sin(dlam / 2), 2)
-    2.0 * radiusMeters * math.asin(math.min(1.0, math.sqrt(h)))
+    2.0 * r * math.asin(math.min(1.0, math.sqrt(h)))
   }
 
   /** PLANAR azimuth a→b in radians clockwise from north, in [0, 2π) —

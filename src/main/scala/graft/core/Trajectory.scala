@@ -2,51 +2,61 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, ShortType}
 
 /**
- * Trajectory STAY-POINT detection (Zheng et al. 2009, "Mining
- * interesting locations and travel sequences from GPS trajectories",
- * WWW — the public dwell-detection algorithm): walk each key's points
- * in time order; from an anchor `i`, advance `j` while `p_j` stays
- * within `radius` of the ANCHOR (not pairwise); when the first point
- * escapes (or the trajectory ends), the run `[i, j)` is a stay point
- * iff it lasted at least `minDurationSec` — emit its centroid
- * (arithmetic mean) and time span, and restart from `j`; otherwise
- * slide the anchor by one. The scan is inherently SEQUENTIAL with
- * data-dependent jumps — no window function expresses it — so this is
- * the repo's sanctioned `mapPartitions` case: repartition by key,
- * sort within partitions, run the state machine per key.
+ * The TRAJECTORY family: per-key point tracks `(key, ts, x|lon, y|lat)`
+ * — dwell detection, segmentation, kinematics, resampling, compression,
+ * spike filtering, OD flows and map-matching, batch and streaming.
  *
- * Determinism: the per-key scan order is `(ts, x, y)` — duplicate
- * timestamps get a coordinate tiebreak so results never depend on
- * shuffle arrival order. The planar variant compares SQUARED distance
- * (pure `-`/`*` arithmetic — bit-portable like
- * [[DistanceJoin.radiusJoin]]); the geodesic variant inherits the
- * haversine ulp classes at the radius boundary (documented there).
+ * One input contract, `track`: every operator names its columns
+ * through it, which refuses a missing column and a non-integral key or
+ * timestamp at plan time and builds the slim `(k, t, …)` frame whose
+ * rows REFUSE loudly on NULL key/ts/coordinates (a silently dropped
+ * point would change the answer — each operator says how, in
+ * `"<op>: NULL <what> — <why>"`) and, for the geodesic operators that
+ * range-check, on NaN or out-of-range lon/lat.
  *
- * Scale: one shuffle (repartition by key) carrying `(key, ts, x, y)`
- * slim rows; each key's FULL trajectory buffers in executor memory
- * while it is scanned — `maxPointsPerKey` REFUSES loudly beyond the
- * cap (default 5M points ≈ 160 MB) instead of OOMing an executor; a
- * hotter key belongs pre-split by (key, day) upstream, which is also
- * the semantically right dwell scope. Keys hash-partition, so skew is
- * one hot key per task at worst, never a cross-key pileup.
+ * One per-key scan, `perKey`: the operators that are inherently
+ * SEQUENTIAL per key (stay points, Douglas–Peucker, the speed filter,
+ * the Viterbi map-matcher — data-dependent jumps no window function
+ * expresses) repartition the slim frame on the key, sort within
+ * partitions and walk each key's whole track in one task — the repo's
+ * sanctioned `mapPartitions` case. One shuffle of slim rows; each
+ * key's track buffers in executor memory while it is scanned, under a
+ * loud `maxPointsPerKey` cap (default 5M points ≈ 160 MB) instead of
+ * an executor OOM — a hotter key belongs pre-split by (key, day)
+ * upstream. Keys hash-partition, so skew is one hot key per task at
+ * worst. Scan orders break duplicate timestamps on the coordinates, so
+ * results never depend on shuffle arrival order.
  *
- * Output: `(<keyCol> long, sp_idx int, start_ts long, end_ts long,
- * n_points int, cx double, cy double)` — `sp_idx` is the 1-based stay
- * index within the key, centroids are arithmetic means in input
- * units. Integral keys and long timestamps only (refused otherwise);
- * NULL key/ts/coords refused loudly (a dropped point would silently
- * split a dwell).
+ * The window-expressible operators (segments, kinematics, resample,
+ * odMatrix) and the two `flatMapGroupsWithState` streaming machines
+ * share the contract but not the scan.
  */
 object Trajectory {
 
-  /** Planar stay points — squared-distance anchor test, exact
-    * arithmetic. `radius` in coordinate units, `minDurationSec` in
-    * `tsCol` units. */
+  /**
+   * Planar STAY POINTS (Zheng et al. 2009, "Mining interesting
+   * locations and travel sequences from GPS trajectories", WWW — the
+   * public dwell-detection algorithm): walk each key's points in
+   * `(ts, x, y)` order; from an anchor `i`, advance `j` while `p_j`
+   * stays within `radius` of the ANCHOR (not pairwise); when the first
+   * point escapes (or the trajectory ends), the run `[i, j)` is a stay
+   * point iff it lasted at least `minDurationSec` — emit its centroid
+   * (arithmetic mean) and time span, and restart from `j`; otherwise
+   * slide the anchor by one. The anchor test compares SQUARED distance
+   * (pure `-`/`*` arithmetic — bit-portable like
+   * [[DistanceJoin.radiusJoin]]). `radius` in coordinate units,
+   * `minDurationSec` in `tsCol` units.
+   *
+   * Output: `(<keyCol> long, sp_idx int, start_ts long, end_ts long,
+   * n_points int, cx double, cy double)` — `sp_idx` is the 1-based stay
+   * index within the key, centroids are arithmetic means in input
+   * units.
+   */
   def stayPoints(points: DataFrame, keyCol: String, tsCol: String,
                  xCol: String, yCol: String,
                  radius: Double, minDurationSec: Long,
@@ -58,24 +68,19 @@ object Trajectory {
   }
 
   /** Geodesic stay points — lat/lon degrees, great-circle `radiusMeters`
-    * anchor test (x=lat, y=lon in the output's cx/cy). */
+    * anchor test (x=lat, y=lon in the output's cx/cy); inherits the
+    * haversine ulp classes at the radius boundary (documented on
+    * [[DistanceJoin.geoRadiusJoin]]). Coordinates are NULL-checked
+    * only, not range-checked. */
   def geoStayPoints(points: DataFrame, keyCol: String, tsCol: String,
                     latCol: String, lonCol: String,
                     radiusMeters: Double, minDurationSec: Long,
                     earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters,
-                    maxPointsPerKey: Int = 5000000): DataFrame = {
-    val bigR = earthRadiusMeters
+                    maxPointsPerKey: Int = 5000000): DataFrame =
     run(points, keyCol, tsCol, latCol, lonCol, minDurationSec, maxPointsPerKey,
       "geoStayPoints", radiusMeters,
-      (aLat, aLon, lat, lon) => {
-        val dphi = math.toRadians(aLat) - math.toRadians(lat)
-        val dlam = math.toRadians(aLon) - math.toRadians(lon)
-        val h = math.pow(math.sin(dphi / 2), 2) +
-          math.cos(math.toRadians(aLat)) * math.cos(math.toRadians(lat)) *
-            math.pow(math.sin(dlam / 2), 2)
-        2.0 * bigR * math.asin(math.min(1.0, math.sqrt(h))) <= radiusMeters
-      })
-  }
+      (aLat, aLon, lat, lon) =>
+        GeoOps.haversineMeters(aLat, aLon, lat, lon, earthRadiusMeters) <= radiusMeters)
 
   private def run(points: DataFrame, keyCol: String, tsCol: String,
                   xCol: String, yCol: String,
@@ -86,70 +91,112 @@ object Trajectory {
       s"$op: radius must be finite > 0, got $radius")
     require(minDurationSec >= 0, s"$op: minDurationSec must be >= 0")
     require(maxPointsPerKey >= 2, s"$op: maxPointsPerKey must be >= 2")
-    Seq(keyCol, tsCol, xCol, yCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"$op: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"$op: $what column '$c' must be integral (got $t) — the scan " +
-        "orders and subtracts it exactly")
-    }
-    def refused(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"$op: NULL $what — a dropped point would " +
-          "silently split a dwell")).cast(DoubleType))
-      .otherwise(col(c).cast(DoubleType))
     val spark = points.sparkSession
     import spark.implicits._
-    val slim = points.select(
-        when(col(keyCol).isNull,
-          raise_error(lit(s"$op: NULL key — a dropped point would " +
-            "silently split a dwell")).cast(LongType))
-          .otherwise(col(keyCol).cast(LongType)).as("k"),
-        when(col(tsCol).isNull,
-          raise_error(lit(s"$op: NULL timestamp — a dropped point would " +
-            "silently split a dwell")).cast(LongType))
-          .otherwise(col(tsCol).cast(LongType)).as("t"),
-        refused(xCol, "x coordinate").as("x"),
-        refused(yCol, "y coordinate").as("y"))
-      .as[(Long, Long, Double, Double)]
-    val sorted = slim.repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("t"), col("x"), col("y"))
-    val minDur = minDurationSec
-    val cap = maxPointsPerKey
-    sorted.mapPartitions[(Long, Int, Long, Long, Int, Double, Double)] {
-        (it: Iterator[(Long, Long, Double, Double)]) =>
-      new Iterator[(Long, Int, Long, Long, Int, Double, Double)] {
-        private val in: BufferedIterator[(Long, Long, Double, Double)] =
-          it.buffered
-        private var out: Iterator[(Long, Int, Long, Long, Int, Double, Double)] =
-          Iterator.empty
-        private def refill(): Unit = {
-          while (!out.hasNext && in.hasNext) {
-            val key = in.head._1
-            val ts = new ArrayBuffer[Long]
-            val xs = new ArrayBuffer[Double]
-            val ys = new ArrayBuffer[Double]
-            while (in.hasNext && in.head._1 == key) {
-              val (_, t, x, y) = in.next()
-              ts += t; xs += x; ys += y
-              require(ts.length <= cap,
-                s"$op: key $key exceeds maxPointsPerKey ($cap) — pre-split " +
-                "the trajectory (e.g. by day) or raise the cap")
-            }
-            out = scanKey(key, ts, xs, ys, minDur, within).iterator
-          }
-        }
-        override def hasNext: Boolean = { refill(); out.hasNext }
-        override def next(): (Long, Int, Long, Long, Int, Double, Double) = {
-          refill(); out.next()
-        }
-      }
+    val slim = track(points, op, "a dropped point would silently split a dwell",
+      keyCol, tsCol, planar(xCol, yCol)).as[(Long, Long, Double, Double)]
+    perKey(slim, "t", "x", "y") { (key, rows) =>
+      val (ts, xs, ys) = columns(op, key, rows, maxPointsPerKey)
+      scanKey(key, ts, xs, ys, minDurationSec, within)
     }.toDF("k", "sp_idx", "start_ts", "end_ts", "n_points", "cx", "cy")
       .withColumnRenamed("k", keyCol)
   }
+
+  /** A double column of a track: input column, slim name, the noun its
+    * refusals use, and the `[lo, hi]` it is range-checked against (NaN
+    * included); `None` refuses NULL only. */
+  private final case class Coord(in: String, as: String, what: String,
+                                 range: Option[(Double, Double)] = None)
+  private val Lon = Some((-180.0, 180.0))
+  private val Lat = Some((-90.0, 90.0))
+  private def planar(x: String, y: String) =
+    Seq(Coord(x, "x", "x coordinate"), Coord(y, "y", "y coordinate"))
+  private def lonLat(lon: String, lat: String) =
+    Seq(Coord(lon, "lon", "longitude", Lon), Coord(lat, "lat", "latitude", Lat))
+
+  /**
+   * The family's one input contract. At plan time: every column must
+   * exist, and the key, the timestamp and each `ids` column
+   * `(column, slim name, noun)` must be integral (the scans order and
+   * subtract them exactly). The result is the slim frame
+   * `(k, t, <ids>, <coords>)` — integral columns as long, coordinates
+   * as double — whose rows refuse a NULL as `"<op>: NULL <what> —
+   * <why>"` (`NULL/NaN`, NaN included, on the coordinates when `nan`)
+   * and a ranged coordinate outside its range or NaN as `"<op>: <what>
+   * out of [lo, hi], got v"`.
+   */
+  private def track(points: DataFrame, op: String, why: String,
+                    keyCol: String, tsCol: String, coords: Seq[Coord],
+                    ids: Seq[(String, String, String)] = Nil,
+                    nan: Boolean = false): DataFrame = {
+    val ints = Seq((keyCol, "k", "key"), (tsCol, "t", "timestamp")) ++ ids
+    (ints.map(_._1) ++ coords.map(_.in)).foreach { c =>
+      require(points.columns.contains(c),
+        s"$op: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
+    }
+    ints.foreach { case (c, _, what) =>
+      val t = points.schema(c).dataType
+      require(t == LongType || t == IntegerType || t == ShortType,
+        s"$op: $what column '$c' must be integral (got $t)")
+    }
+    def refuse(c: String, bad: Column, what: String, to: DataType) =
+      when(bad, raise_error(lit(s"$op: $what — $why")).cast(to))
+        .otherwise(col(c).cast(to))
+    def ranged(c: Column, what: String, range: (Double, Double)) = {
+      val (lo, hi) = range
+      when(c < lo || c > hi || isnan(c),
+        raise_error(concat(lit(s"$op: $what out of [$lo, $hi], got "),
+          c.cast("string"))).cast(DoubleType)).otherwise(c)
+    }
+    points.select(ints.map { case (c, as, what) =>
+        refuse(c, col(c).isNull, s"NULL $what", LongType).as(as)
+      } ++ coords.map { case Coord(c, as, what, range) =>
+        val v =
+          if (nan) refuse(c, col(c).isNull || isnan(col(c).cast(DoubleType)),
+            s"NULL/NaN $what", DoubleType)
+          else refuse(c, col(c).isNull, s"NULL $what", DoubleType)
+        range.fold(v)(ranged(v, what, _)).as(as)
+      }: _*)
+  }
+
+  /**
+   * The family's one per-key scan: repartition `slim` on `k` (one
+   * shuffle), sort each partition by `k` then `order`, and hand `scan`
+   * each key with its rows in that order; `scan` consumes the rows and
+   * returns the key's output.
+   */
+  private def perKey[I <: Product, O: Encoder](slim: Dataset[I], order: String*)(
+      scan: (Long, Iterator[I]) => Iterable[O]): Dataset[O] =
+    slim.repartition(col("k"))
+      .sortWithinPartitions(("k" +: order).map(col): _*)
+      .mapPartitions((it: Iterator[I]) => {
+        val in = it.buffered
+        def keyOf(r: I) = r.productElement(0).asInstanceOf[Long]
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val key = keyOf(in.head)
+          scan(key, new Iterator[I] {
+            def hasNext: Boolean = in.hasNext && keyOf(in.head) == key
+            def next(): I = in.next()
+          })
+        }
+      })
+
+  /** One key's `(t, x, y)` rows as columns, under the loud per-key cap. */
+  private def columns(op: String, key: Long, rows: Iterator[(Long, Long, Double, Double)],
+                      cap: Int): (ArrayBuffer[Long], ArrayBuffer[Double], ArrayBuffer[Double]) = {
+    val ts = new ArrayBuffer[Long]
+    val xs = new ArrayBuffer[Double]
+    val ys = new ArrayBuffer[Double]
+    rows.foreach { case (_, t, x, y) =>
+      ts += t; xs += x; ys += y
+      capped(op, key, ts.length, cap)
+    }
+    (ts, xs, ys)
+  }
+
+  private def capped(op: String, key: Long, n: Int, cap: Int): Unit =
+    require(n <= cap, s"$op: key $key exceeds maxPointsPerKey ($cap) — " +
+      "pre-split the trajectory (e.g. by day) or raise the cap")
 
   /**
    * Trip/leg SEGMENTATION: split each key's trajectory into legs at
@@ -176,25 +223,9 @@ object Trajectory {
   def segments(points: DataFrame, keyCol: String, tsCol: String,
                xCol: String, yCol: String, maxGap: Long): DataFrame = {
     require(maxGap > 0, s"segments: maxGap must be > 0, got $maxGap")
-    Seq(keyCol, tsCol, xCol, yCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"segments: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"segments: $what column '$c' must be integral (got $t)")
-    }
-    def refuse(c: String, what: String, to: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"segments: NULL $what — a dropped point would " +
-          "silently merge or split a leg")).cast(to))
-      .otherwise(col(c).cast(to))
-    val slim = points.select(
-      refuse(keyCol, "key", "long").as("k"),
-      refuse(tsCol, "timestamp", "long").as("t"),
-      refuse(xCol, "x coordinate", "double").as("x"),
-      refuse(yCol, "y coordinate", "double").as("y"))
+    val slim = track(points, "segments",
+      "a dropped point would silently merge or split a leg", keyCol, tsCol,
+      planar(xCol, yCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("t"), col("x"), col("y"))
     val stepX = col("x") - lag(col("x"), 1).over(w)
@@ -251,33 +282,13 @@ object Trajectory {
                  lonCol: String, latCol: String,
                  earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters)
       : DataFrame = {
-    Seq(keyCol, tsCol, lonCol, latCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"kinematics: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"kinematics: $what column '$c' must be integral (got $t)")
-    }
+    val slim = track(points, "kinematics",
+      "a dropped point would corrupt its successor's step", keyCol, tsCol,
+      lonLat(lonCol, latCol))
     Seq("dt_s", "step_m", "speed_mps", "heading_rad").foreach { c =>
       require(!Seq(keyCol, tsCol, lonCol, latCol).contains(c),
         s"kinematics: input column '$c' collides with an output column — rename it")
     }
-    def refuse(c: String, what: String, to: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"kinematics: NULL $what — a dropped point would " +
-          "corrupt its successor's step")).cast(to))
-        .otherwise(col(c).cast(to))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"kinematics: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
-    val slim = points.select(
-      refuse(keyCol, "key", "long").as("k"),
-      refuse(tsCol, "timestamp", "long").as("t"),
-      ranged(refuse(lonCol, "longitude", "double"), -180, 180, "longitude").as("lon"),
-      ranged(refuse(latCol, "latitude", "double"), -90, 90, "latitude").as("lat"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("t"), col("lon"), col("lat"))
     val pT = lag(col("t"), 1).over(w)
@@ -346,29 +357,9 @@ object Trajectory {
   def resample(points: DataFrame, keyCol: String, tsCol: String,
                lonCol: String, latCol: String, stepSec: Long): DataFrame = {
     require(stepSec > 0, s"resample: stepSec must be > 0, got $stepSec")
-    Seq(keyCol, tsCol, lonCol, latCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"resample: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"resample: $what column '$c' must be integral (got $t)")
-    }
-    def refuse(c: String, what: String, to: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"resample: NULL $what — a dropped point would " +
-          "silently bend the interpolated track")).cast(to))
-        .otherwise(col(c).cast(to))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"resample: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
-    val slim = points.select(
-      refuse(keyCol, "key", "long").as("k"),
-      refuse(tsCol, "timestamp", "long").as("t"),
-      ranged(refuse(lonCol, "longitude", "double"), -180, 180, "longitude").as("lon"),
-      ranged(refuse(latCol, "latitude", "double"), -90, 90, "latitude").as("lat"))
+    val slim = track(points, "resample",
+      "a dropped point would silently bend the interpolated track", keyCol, tsCol,
+      lonLat(lonCol, latCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("t"))
     val prevT = lag(col("t"), 1).over(w)
@@ -457,8 +448,8 @@ object Trajectory {
    * executor depth limits).
    *
    * Like [[stayPoints]] this is inherently sequential per key — the
-   * sanctioned repartition + sortWithinPartitions + `mapPartitions`
-   * scan, one shuffle carrying slim `(k, t, x, y)` rows, with the same
+   * family's one per-key scan (`perKey`), one shuffle carrying slim
+   * `(k, t, x, y)` rows, with the same
    * loud `maxPointsPerKey` cap (a key's full track buffers while it is
    * scanned) and NULL refusals (a silently dropped point would bend
    * the kept chain). Output: the KEPT points `(<keyCol> long, t long,
@@ -470,66 +461,14 @@ object Trajectory {
     require(tolerance >= 0 && !tolerance.isInfinite && !tolerance.isNaN,
       s"compress: tolerance must be finite >= 0, got $tolerance")
     require(maxPointsPerKey >= 2, "compress: maxPointsPerKey must be >= 2")
-    Seq(keyCol, tsCol, xCol, yCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"compress: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"compress: $what column '$c' must be integral (got $t)")
-    }
-    def refused(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"compress: NULL $what — a dropped point would " +
-          "silently bend the kept chain")).cast(DoubleType))
-        .otherwise(col(c).cast(DoubleType))
     val spark = points.sparkSession
     import spark.implicits._
-    val slim = points.select(
-        when(col(keyCol).isNull,
-          raise_error(lit("compress: NULL key — a dropped point would " +
-            "silently bend the kept chain")).cast(LongType))
-          .otherwise(col(keyCol).cast(LongType)).as("k"),
-        when(col(tsCol).isNull,
-          raise_error(lit("compress: NULL timestamp — a dropped point " +
-            "would silently bend the kept chain")).cast(LongType))
-          .otherwise(col(tsCol).cast(LongType)).as("t"),
-        refused(xCol, "x coordinate").as("x"),
-        refused(yCol, "y coordinate").as("y"))
-      .as[(Long, Long, Double, Double)]
-    val sorted = slim.repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("t"), col("x"), col("y"))
+    val slim = track(points, "compress", "a dropped point would silently bend the kept chain",
+      keyCol, tsCol, planar(xCol, yCol)).as[(Long, Long, Double, Double)]
     val tol2 = tolerance * tolerance
-    val cap = maxPointsPerKey
-    sorted.mapPartitions[(Long, Long, Double, Double)] {
-        (it: Iterator[(Long, Long, Double, Double)]) =>
-      new Iterator[(Long, Long, Double, Double)] {
-        private val in: BufferedIterator[(Long, Long, Double, Double)] =
-          it.buffered
-        private var out: Iterator[(Long, Long, Double, Double)] =
-          Iterator.empty
-        private def refill(): Unit = {
-          while (!out.hasNext && in.hasNext) {
-            val key = in.head._1
-            val ts = new ArrayBuffer[Long]
-            val xs = new ArrayBuffer[Double]
-            val ys = new ArrayBuffer[Double]
-            while (in.hasNext && in.head._1 == key) {
-              val (_, t, x, y) = in.next()
-              ts += t; xs += x; ys += y
-              require(ts.length <= cap,
-                s"compress: key $key exceeds maxPointsPerKey ($cap) — " +
-                "pre-split the trajectory (e.g. by day) or raise the cap")
-            }
-            out = dpKey(key, ts, xs, ys, tol2).iterator
-          }
-        }
-        override def hasNext: Boolean = { refill(); out.hasNext }
-        override def next(): (Long, Long, Double, Double) = {
-          refill(); out.next()
-        }
-      }
+    perKey(slim, "t", "x", "y") { (key, rows) =>
+      val (ts, xs, ys) = columns("compress", key, rows, maxPointsPerKey)
+      dpKey(key, ts, xs, ys, tol2)
     }.toDF("k", "t", "x", "y").withColumnRenamed("k", keyCol)
   }
 
@@ -546,8 +485,8 @@ object Trajectory {
    * haversine metres/sec, range-refused coordinates). Duplicate
    * timestamps on one key REFUSE loudly (dt = 0 makes speed
    * undefined — silently dropping or keeping either point would be a
-   * coin flip); NULLs refuse; same sequential `mapPartitions` scan and
-   * loud per-key cap as the rest of the family. Output: the KEPT rows
+   * coin flip); NULLs refuse; same per-key scan (`perKey`) and loud
+   * per-key cap as the rest of the family. Output: the KEPT rows
    * `(<keyCol> long, t long, x double, y double)` (`lon`/`lat` from the
    * geodesic variant), values untouched.
    */
@@ -570,102 +509,47 @@ object Trajectory {
     require(maxSpeed > 0 && !maxSpeed.isInfinite && !maxSpeed.isNaN,
       s"$op: maxSpeed must be finite > 0, got $maxSpeed")
     require(maxPointsPerKey >= 2, s"$op: maxPointsPerKey must be >= 2")
-    Seq(keyCol, tsCol, xCol, yCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"$op: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"$op: $what column '$c' must be integral (got $t)")
-    }
-    def refused(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"$op: NULL $what — a silently dropped point " +
-          "would change which spikes get caught")).cast(DoubleType))
-        .otherwise(col(c).cast(DoubleType))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"$op: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
     val spark = points.sparkSession
     import spark.implicits._
-    val xe = refused(xCol, if (geo) "longitude" else "x coordinate")
-    val ye = refused(yCol, if (geo) "latitude" else "y coordinate")
-    val slim = points.select(
-        when(col(keyCol).isNull,
-          raise_error(lit(s"$op: NULL key")).cast(LongType))
-          .otherwise(col(keyCol).cast(LongType)).as("k"),
-        when(col(tsCol).isNull,
-          raise_error(lit(s"$op: NULL timestamp")).cast(LongType))
-          .otherwise(col(tsCol).cast(LongType)).as("t"),
-        (if (geo) ranged(xe, -180, 180, "longitude") else xe).as("x"),
-        (if (geo) ranged(ye, -90, 90, "latitude") else ye).as("y"))
+    val slim = track(points, op, "a silently dropped point would change which spikes get caught",
+      keyCol, tsCol, if (geo) lonLat(xCol, yCol) else planar(xCol, yCol))
       .as[(Long, Long, Double, Double)]
-    val sorted = slim.repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("t"), col("x"), col("y"))
-    val cap = maxPointsPerKey
-    val vmax = maxSpeed
-    val isGeo = geo
     val bigR = DistanceJoin.EarthRadiusMeters
-    sorted.mapPartitions[(Long, Long, Double, Double)] {
-        (it: Iterator[(Long, Long, Double, Double)]) =>
-      def dist(x0: Double, y0: Double, x1: Double, y1: Double): Double =
-        if (!isGeo) {
-          val dx = x1 - x0; val dy = y1 - y0
-          math.sqrt(dx * dx + dy * dy)
-        } else {
-          // the kinematics haversine tree (Trajectory.kinematics),
-          // metres on the mean sphere
-          val dphi = math.toRadians(y0) - math.toRadians(y1)
-          val dlam = math.toRadians(x0) - math.toRadians(x1)
-          val h = math.pow(math.sin(dphi / 2), 2) +
-            math.cos(math.toRadians(y0)) * math.cos(math.toRadians(y1)) *
-              math.pow(math.sin(dlam / 2), 2)
-          2.0 * bigR * math.asin(math.min(1.0, math.sqrt(h)))
-        }
-      new Iterator[(Long, Long, Double, Double)] {
-        private val in: BufferedIterator[(Long, Long, Double, Double)] =
-          it.buffered
-        private var out: Iterator[(Long, Long, Double, Double)] =
-          Iterator.empty
-        private def refill(): Unit = {
-          while (!out.hasNext && in.hasNext) {
-            val key = in.head._1
-            val kept = new ArrayBuffer[(Long, Long, Double, Double)]
-            var n = 0
-            var lastT = Long.MinValue
-            var lastKT = 0L
-            var lastKX = 0.0
-            var lastKY = 0.0
-            while (in.hasNext && in.head._1 == key) {
-              val row = in.next()
-              n += 1
-              require(n <= cap,
-                s"$op: key $key exceeds maxPointsPerKey ($cap) — " +
-                "pre-split the trajectory (e.g. by day) or raise the cap")
-              require(row._2 != lastT,
-                s"$op: key $key has two points at timestamp ${row._2} — " +
-                "dt = 0 makes speed undefined; dedup upstream")
-              lastT = row._2
-              if (kept.isEmpty ||
-                  dist(lastKX, lastKY, row._3, row._4) <=
-                    vmax * (row._2 - lastKT).toDouble) {
-                kept += row
-                lastKT = row._2; lastKX = row._3; lastKY = row._4
-              }
-            }
-            out = kept.iterator
-          }
-        }
-        override def hasNext: Boolean = { refill(); out.hasNext }
-        override def next(): (Long, Long, Double, Double) = {
-          refill(); out.next()
+    val dist: (Double, Double, Double, Double) => Double =
+      if (geo) (x0, y0, x1, y1) => GeoOps.haversineMeters(y0, x0, y1, x1, bigR)
+      else euclid
+    // scan order (t, x, y) or (t, lon, lat): every slim column after the key
+    perKey(slim, slim.columns.tail.toIndexedSeq: _*) { (key, rows) =>
+      val kept = new ArrayBuffer[(Long, Long, Double, Double)]
+      var n = 0
+      var lastT = Long.MinValue
+      var lastKT = 0L
+      var lastKX = 0.0
+      var lastKY = 0.0
+      rows.foreach { row =>
+        n += 1
+        capped(op, key, n, maxPointsPerKey)
+        require(row._2 != lastT,
+          s"$op: key $key has two points at timestamp ${row._2} — " +
+          "dt = 0 makes speed undefined; dedup upstream")
+        lastT = row._2
+        if (kept.isEmpty ||
+            dist(lastKX, lastKY, row._3, row._4) <= maxSpeed * (row._2 - lastKT).toDouble) {
+          kept += row
+          lastKT = row._2; lastKX = row._3; lastKY = row._4
         }
       }
+      kept
     }.toDF("k", "t", if (geo) "lon" else "x", if (geo) "lat" else "y")
       .withColumnRenamed("k", keyCol)
   }
+
+  /** The planar step metric of the speed filter and the map-matcher. */
+  private val euclid: (Double, Double, Double, Double) => Double =
+    (x0, y0, x1, y1) => {
+      val dx = x1 - x0; val dy = y1 - y0
+      math.sqrt(dx * dx + dy * dy)
+    }
 
   /**
    * GEODESIC track compression — [[compress]] for lon/lat tracks with
@@ -691,72 +575,16 @@ object Trajectory {
       !toleranceMeters.isNaN,
       s"compressGeo: tolerance must be finite >= 0 metres, got $toleranceMeters")
     require(maxPointsPerKey >= 2, "compressGeo: maxPointsPerKey must be >= 2")
-    Seq(keyCol, tsCol, lonCol, latCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"compressGeo: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"compressGeo: $what column '$c' must be integral (got $t)")
-    }
-    def refused(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"compressGeo: NULL $what — a dropped point " +
-          "would silently bend the kept chain")).cast(DoubleType))
-        .otherwise(col(c).cast(DoubleType))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"compressGeo: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
     val spark = points.sparkSession
     import spark.implicits._
-    val slim = points.select(
-        when(col(keyCol).isNull,
-          raise_error(lit("compressGeo: NULL key — a dropped point " +
-            "would silently bend the kept chain")).cast(LongType))
-          .otherwise(col(keyCol).cast(LongType)).as("k"),
-        when(col(tsCol).isNull,
-          raise_error(lit("compressGeo: NULL timestamp — a dropped " +
-            "point would silently bend the kept chain")).cast(LongType))
-          .otherwise(col(tsCol).cast(LongType)).as("t"),
-        ranged(refused(lonCol, "longitude"), -180, 180, "longitude").as("lon"),
-        ranged(refused(latCol, "latitude"), -90, 90, "latitude").as("lat"))
-      .as[(Long, Long, Double, Double)]
-    val sorted = slim.repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("t"), col("lon"), col("lat"))
+    val slim = track(points, "compressGeo", "a dropped point would silently bend the kept chain",
+      keyCol, tsCol, lonLat(lonCol, latCol)).as[(Long, Long, Double, Double)]
     val bigR = DistanceJoin.EarthRadiusMeters
     val tolChord = 2.0 * bigR * math.sin(toleranceMeters / (2.0 * bigR))
     val tol2 = tolChord * tolChord
-    val cap = maxPointsPerKey
-    sorted.mapPartitions[(Long, Long, Double, Double)] {
-        (it: Iterator[(Long, Long, Double, Double)]) =>
-      new Iterator[(Long, Long, Double, Double)] {
-        private val in: BufferedIterator[(Long, Long, Double, Double)] =
-          it.buffered
-        private var out: Iterator[(Long, Long, Double, Double)] =
-          Iterator.empty
-        private def refill(): Unit = {
-          while (!out.hasNext && in.hasNext) {
-            val key = in.head._1
-            val ts = new ArrayBuffer[Long]
-            val lons = new ArrayBuffer[Double]
-            val lats = new ArrayBuffer[Double]
-            while (in.hasNext && in.head._1 == key) {
-              val (_, t, lon, lat) = in.next()
-              ts += t; lons += lon; lats += lat
-              require(ts.length <= cap,
-                s"compressGeo: key $key exceeds maxPointsPerKey ($cap) — " +
-                "pre-split the trajectory (e.g. by day) or raise the cap")
-            }
-            out = dpKeyGeo(key, ts, lons, lats, tol2, bigR).iterator
-          }
-        }
-        override def hasNext: Boolean = { refill(); out.hasNext }
-        override def next(): (Long, Long, Double, Double) = {
-          refill(); out.next()
-        }
-      }
+    perKey(slim, "t", "lon", "lat") { (key, rows) =>
+      val (ts, lons, lats) = columns("compressGeo", key, rows, maxPointsPerKey)
+      dpKeyGeo(key, ts, lons, lats, tol2, bigR)
     }.toDF("k", "t", "lon", "lat").withColumnRenamed("k", keyCol)
   }
 
@@ -890,31 +718,9 @@ object Trajectory {
                lonCol: String, latCol: String, zoom: Int): DataFrame = {
     require(zoom >= 0 && zoom <= 23,
       s"odMatrix: zoom must be in [0, 23], got $zoom")
-    Seq(keyCol, tsCol, lonCol, latCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"odMatrix: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
-    Seq(keyCol -> "key", tsCol -> "timestamp").foreach { case (c, what) =>
-      val t = points.schema(c).dataType
-      require(t == LongType || t == IntegerType || t == ShortType,
-        s"odMatrix: $what column '$c' must be integral (got $t)")
-    }
-    def refuse(c: String, what: String, to: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"odMatrix: NULL $what — a dropped point could " +
-          "silently move a trip's endpoint")).cast(to))
-        .otherwise(col(c).cast(to))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"odMatrix: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
-    val slim = points.select(
-      refuse(keyCol, "key", "long").as("k"),
-      refuse(tsCol, "timestamp", "long").as("t"),
-      ranged(refuse(lonCol, "longitude", "double"), -180, 180, "longitude")
-        .as("lon"),
-      ranged(refuse(latCol, "latitude", "double"), -90, 90, "latitude")
-        .as("lat"))
+    val slim = track(points, "odMatrix",
+      "a dropped point could silently move a trip's endpoint", keyCol, tsCol,
+      lonLat(lonCol, latCol))
     val ends = slim.groupBy(col("k")).agg(
       count(lit(1)).as("_n"),
       countDistinct(col("t")).as("_nd"),
@@ -952,8 +758,8 @@ object Trajectory {
    * `asin`/`atan2` in the same order), so streaming and batch agree
    * bit-for-bit — the spec pins it. State per key is 24 bytes
    * (t, lon, lat): a NEVER-moving device costs the same as a busy one,
-   * and there is no cap to tune. Same NULL-refusal and NULL-output
-   * contract as batch (first point all-NULL, coincident pair NULL
+   * and there is no cap to tune. Same input contract (integral key and
+   * timestamp, NULL and range refusals) and NULL-output contract as batch (first point all-NULL, coincident pair NULL
    * heading, zero-dt NULL speed — zero dt can only happen inside one
    * batch, where the tiebreak orders it).
    */
@@ -961,29 +767,13 @@ object Trajectory {
                        lonCol: String, latCol: String,
                        earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters)
       : DataFrame = {
-    Seq(keyCol, tsCol, lonCol, latCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"kinematicsStream: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
     val bigR = earthRadiusMeters
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    def refuse(c: String, what: String, to: org.apache.spark.sql.types.DataType) =
-      when(col(c).isNull,
-        raise_error(lit(s"kinematicsStream: NULL $what — a dropped point " +
-          "would corrupt its successor's step")).cast(to))
-        .otherwise(col(c).cast(to))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi || isnan(c),
-        raise_error(concat(lit(s"kinematicsStream: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast("double")).otherwise(c)
-    val slim = points.select(
-        refuse(keyCol, "key", LongType).as("k"),
-        refuse(tsCol, "timestamp", LongType).as("t"),
-        ranged(refuse(lonCol, "longitude", DoubleType), -180, 180, "longitude").as("lon"),
-        ranged(refuse(latCol, "latitude", DoubleType), -90, 90, "latitude").as("lat"))
-      .as[(Long, Long, Double, Double)]
+    val slim = track(points, "kinematicsStream",
+      "a dropped point would corrupt its successor's step", keyCol, tsCol,
+      lonLat(lonCol, latCol)).as[(Long, Long, Double, Double)]
     slim.groupByKey(_._1)
       .flatMapGroupsWithState[(Long, Double, Double),
           (Long, Long, Double, Double, Option[Long], Option[Double],
@@ -1010,12 +800,7 @@ object Trajectory {
               case Some((pt, plon, plat)) =>
                 val dt = t - pt
                 // the batch Column trees, verbatim
-                val dphi = math.toRadians(plat) - math.toRadians(lat)
-                val dlam = math.toRadians(plon) - math.toRadians(lon)
-                val h = math.pow(math.sin(dphi / 2), 2) +
-                  math.cos(math.toRadians(plat)) * math.cos(math.toRadians(lat)) *
-                    math.pow(math.sin(dlam / 2), 2)
-                val step = 2.0 * bigR * math.asin(math.min(1.0, math.sqrt(h)))
+                val step = GeoOps.haversineMeters(plat, plon, lat, lon, bigR)
                 val heading =
                   if (plon == lon && plat == lat) None
                   else {
@@ -1041,7 +826,6 @@ object Trajectory {
       .withColumnRenamed("lon", lonCol).withColumnRenamed("lat", latCol)
   }
 
-  /** The Zheng et al. state machine over one key's time-ordered points. */
   /**
    * STREAMING stay-point detection — [[stayPoints]] as a stateful
    * streaming operator (`flatMapGroupsWithState`, the repo's custom-
@@ -1070,8 +854,8 @@ object Trajectory {
    * device grows it until the loud `maxPointsPerKey` cap — split
    * permanent fixtures upstream).
    *
-   * Output schema = [[stayPoints]]'s; `sp_idx` continues across
-   * batches. Works identically on a batch Dataset (state lives for
+   * Output schema and input contract = [[stayPoints]]'s; `sp_idx`
+   * continues across batches. Works identically on a batch Dataset (state lives for
    * the single batch) — the spec pins streaming ≡ batch-minus-tails.
    */
   def streamingStayPoints(points: DataFrame, keyCol: String, tsCol: String,
@@ -1092,19 +876,11 @@ object Trajectory {
                              latCol: String, lonCol: String,
                              radiusMeters: Double, minDurationSec: Long,
                              earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters,
-                             maxPointsPerKey: Int = 5000000): DataFrame = {
-    val bigR = earthRadiusMeters
+                             maxPointsPerKey: Int = 5000000): DataFrame =
     streamingRun(points, keyCol, tsCol, latCol, lonCol, radiusMeters,
       minDurationSec, maxPointsPerKey, "geoStreamingStayPoints",
-      (aLat, aLon, lat, lon) => {
-        val dphi = math.toRadians(aLat) - math.toRadians(lat)
-        val dlam = math.toRadians(aLon) - math.toRadians(lon)
-        val h = math.pow(math.sin(dphi / 2), 2) +
-          math.cos(math.toRadians(aLat)) * math.cos(math.toRadians(lat)) *
-            math.pow(math.sin(dlam / 2), 2)
-        2.0 * bigR * math.asin(math.min(1.0, math.sqrt(h))) <= radiusMeters
-      })
-  }
+      (aLat, aLon, lat, lon) =>
+        GeoOps.haversineMeters(aLat, aLon, lat, lon, earthRadiusMeters) <= radiusMeters)
 
   private def streamingRun(points: DataFrame, keyCol: String, tsCol: String,
                            xCol: String, yCol: String,
@@ -1115,30 +891,13 @@ object Trajectory {
       s"$op: radius must be finite > 0, got $radius")
     require(minDurationSec >= 0, s"$op: minDurationSec must be >= 0")
     require(maxPointsPerKey >= 2, s"$op: maxPointsPerKey must be >= 2")
-    Seq(keyCol, tsCol, xCol, yCol).foreach { c =>
-      require(points.columns.contains(c),
-        s"$op: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
     val minDur = minDurationSec
     val cap = maxPointsPerKey
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    def refused(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"$op: NULL $what — a dropped point " +
-          "would silently split a dwell")).cast(DoubleType))
-      .otherwise(col(c).cast(DoubleType))
-    val slim = points.select(
-        when(col(keyCol).isNull,
-          raise_error(lit(s"$op: NULL key")).cast(LongType))
-          .otherwise(col(keyCol).cast(LongType)).as("k"),
-        when(col(tsCol).isNull,
-          raise_error(lit(s"$op: NULL timestamp")).cast(LongType))
-          .otherwise(col(tsCol).cast(LongType)).as("t"),
-        refused(xCol, "x coordinate").as("x"),
-        refused(yCol, "y coordinate").as("y"))
-      .as[(Long, Long, Double, Double)]
+    val slim = track(points, op, "a dropped point would silently split a dwell",
+      keyCol, tsCol, planar(xCol, yCol)).as[(Long, Long, Double, Double)]
     slim.groupByKey(_._1)
       .flatMapGroupsWithState[(Seq[(Long, Double, Double)], Int, Long),
                               (Long, Int, Long, Long, Int, Double, Double)](
@@ -1235,8 +994,8 @@ object Trajectory {
    * — a ping with hundreds of candidate roads is a radius bug;
    * `maxPointsPerKey` — pre-split multi-day tracks).
    *
-   * Scale: the DP is the sanctioned sequential-scan case (the
-   * [[stayPoints]] pattern): one shuffle on the key, a per-key
+   * Scale: the DP runs in the family's one per-key scan (`perKey`,
+   * like [[stayPoints]]): one shuffle on the key, a per-key
    * O(T·K²) scan with K ≤ the candidate cap, state = one key's
    * candidate lists. 100 TB of pings stream key by key; nothing is
    * driver-side.
@@ -1293,101 +1052,46 @@ object Trajectory {
     require(beta > 0 && !beta.isInfinite, s"$op: beta must be finite > 0, got $beta")
     require(maxCandidatesPerPoint >= 1 && maxPointsPerKey >= 1,
       s"$op: caps must be >= 1")
-    Seq(keyCol, tsCol, candCol, distCol, pxCol, pyCol, snapXCol, snapYCol)
-      .foreach { c => require(candidates.columns.contains(c),
-        s"$op: column '$c' missing from ${candidates.columns.mkString("[", ",", "]")}")
-      }
-    Seq(keyCol -> "key", tsCol -> "timestamp", candCol -> "candidate id")
-      .foreach { case (c, what) =>
-        val t = candidates.schema(c).dataType
-        require(t == LongType || t == IntegerType || t == ShortType,
-          s"$op: $what column '$c' must be integral (got $t)")
-      }
-    def refuse(c: String, what: String) =
-      when(col(c).isNull || isnan(col(c).cast(DoubleType)),
-        raise_error(lit(s"$op: NULL/NaN $what — a dropped candidate " +
-          "would silently reroute the track")).cast(DoubleType))
-        .otherwise(col(c).cast(DoubleType))
-    def refuseL(c: String, what: String) =
-      when(col(c).isNull,
-        raise_error(lit(s"$op: NULL $what")).cast(LongType))
-        .otherwise(col(c).cast(LongType))
-    def ranged(c: Column, lo: Double, hi: Double, what: String) =
-      when(c < lo || c > hi,
-        raise_error(concat(lit(s"$op: $what out of [$lo, $hi], got "),
-          c.cast("string"))).cast(DoubleType)).otherwise(c)
-    def coord(c: String, what: String, lo: Double, hi: Double) =
-      if (geodesic) ranged(refuse(c, what), lo, hi, what) else refuse(c, what)
+    val (lon, lat) = if (geodesic) (Lon, Lat) else (None, None)
     val spark = candidates.sparkSession
     import spark.implicits._
-    val slim = candidates.select(
-        refuseL(keyCol, "key").as("k"), refuseL(tsCol, "timestamp").as("t"),
-        refuseL(candCol, "candidate id").as("c"),
-        refuse(distCol, "snap distance").as("d"),
-        coord(pxCol, "point x", -180, 180).as("px"),
-        coord(pyCol, "point y", -90, 90).as("py"),
-        coord(snapXCol, "snap x", -180, 180).as("sx"),
-        coord(snapYCol, "snap y", -90, 90).as("sy"))
+    val slim = track(candidates, op, "a dropped candidate would silently reroute the track",
+        keyCol, tsCol,
+        Seq(Coord(distCol, "d", "snap distance"),
+          Coord(pxCol, "px", "point x", lon), Coord(pyCol, "py", "point y", lat),
+          Coord(snapXCol, "sx", "snap x", lon), Coord(snapYCol, "sy", "snap y", lat)),
+        ids = Seq((candCol, "c", "candidate id")), nan = true)
       .as[(Long, Long, Long, Double, Double, Double, Double, Double)]
-    val sorted = slim.repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("t"), col("c"))
-    val (sg, bt, candCap, keyCap) =
-      (sigma, beta, maxCandidatesPerPoint, maxPointsPerKey)
-    val opB = op
     // step metric: planar Euclid or the kinematics haversine tree —
     // the ONLY difference between the planar and geodesic operators
     val bigR = earthRadiusMeters
     val dist: (Double, Double, Double, Double) => Double =
-      if (!geodesic) (x0, y0, x1, y1) => {
-        val dx = x1 - x0; val dy = y1 - y0
-        math.sqrt(dx * dx + dy * dy)
-      } else (lon0, lat0, lon1, lat1) => {
-        val dphi = math.toRadians(lat1) - math.toRadians(lat0)
-        val dlam = math.toRadians(lon1) - math.toRadians(lon0)
-        val h = math.pow(math.sin(dphi / 2), 2) +
-          math.cos(math.toRadians(lat0)) * math.cos(math.toRadians(lat1)) *
-            math.pow(math.sin(dlam / 2), 2)
-        2.0 * bigR * math.asin(math.min(1.0, math.sqrt(h)))
-      }
-    sorted.mapPartitions[(Long, Long, Long, Double)] {
-        (it: Iterator[(Long, Long, Long, Double, Double, Double, Double, Double)]) =>
-      new Iterator[(Long, Long, Long, Double)] {
-        private val in = it.buffered
-        private var out: Iterator[(Long, Long, Long, Double)] = Iterator.empty
-        private def refill(): Unit = {
-          while (!out.hasNext && in.hasNext) {
-            val key = in.head._1
-            // gather one key: pings in ts order, candidates per ping
-            val ts = new ArrayBuffer[Long]
-            val px = new ArrayBuffer[Double]; val py = new ArrayBuffer[Double]
-            val cands = new ArrayBuffer[ArrayBuffer[(Long, Double, Double, Double)]]
-            while (in.hasNext && in.head._1 == key) {
-              val (_, t, c, d, x, y, sx, sy) = in.next()
-              if (ts.isEmpty || ts.last != t) {
-                ts += t; px += x; py += y
-                cands += new ArrayBuffer[(Long, Double, Double, Double)]
-                require(ts.length <= keyCap,
-                  s"$opB: key $key exceeds maxPointsPerKey ($keyCap) — " +
-                  "pre-split the trajectory (e.g. by day) or raise the cap")
-              } else {
-                require(cands.last.isEmpty || cands.last.last._1 != c,
-                  s"$opB: duplicate (ts, candidate) = ($t, $c) for key " +
-                  s"$key — the emission is ambiguous; dedup the candidates")
-                require(x == px.last && y == py.last,
-                  s"$opB: candidates of key $key ts $t disagree on the " +
-                  s"ping's coordinates (($x, $y) vs (${px.last}, ${py.last}))")
-              }
-              cands.last += ((c, d, sx, sy))
-              require(cands.last.length <= candCap,
-                s"$opB: key $key ts $t exceeds maxCandidatesPerPoint " +
-                s"($candCap) — shrink the candidate radius or raise the cap")
-            }
-            out = viterbiKey(key, ts, px, py, cands, sg, bt, dist).iterator
-          }
+      if (!geodesic) euclid
+      else (lon0, lat0, lon1, lat1) => GeoOps.haversineMeters(lat1, lon1, lat0, lon0, bigR)
+    perKey(slim, "t", "c") { (key, rows) =>
+      // gather one key: pings in ts order, candidates per ping
+      val ts = new ArrayBuffer[Long]
+      val px = new ArrayBuffer[Double]; val py = new ArrayBuffer[Double]
+      val cands = new ArrayBuffer[ArrayBuffer[(Long, Double, Double, Double)]]
+      rows.foreach { case (_, t, c, d, x, y, sx, sy) =>
+        if (ts.isEmpty || ts.last != t) {
+          ts += t; px += x; py += y
+          cands += new ArrayBuffer[(Long, Double, Double, Double)]
+          capped(op, key, ts.length, maxPointsPerKey)
+        } else {
+          require(cands.last.isEmpty || cands.last.last._1 != c,
+            s"$op: duplicate (ts, candidate) = ($t, $c) for key " +
+            s"$key — the emission is ambiguous; dedup the candidates")
+          require(x == px.last && y == py.last,
+            s"$op: candidates of key $key ts $t disagree on the " +
+            s"ping's coordinates (($x, $y) vs (${px.last}, ${py.last}))")
         }
-        override def hasNext: Boolean = { refill(); out.hasNext }
-        override def next(): (Long, Long, Long, Double) = { refill(); out.next() }
+        cands.last += ((c, d, sx, sy))
+        require(cands.last.length <= maxCandidatesPerPoint,
+          s"$op: key $key ts $t exceeds maxCandidatesPerPoint " +
+          s"($maxCandidatesPerPoint) — shrink the candidate radius or raise the cap")
       }
+      viterbiKey(key, ts, px, py, cands, sigma, beta, dist)
     }.toDF("k", "t", "c", "path_cost")
       .withColumnRenamed("k", keyCol).withColumnRenamed("t", tsCol)
       .withColumnRenamed("c", candCol)
@@ -1448,6 +1152,7 @@ object Trajectory {
     res
   }
 
+  /** The Zheng et al. state machine over one key's time-ordered points. */
   private def scanKey(key: Long, ts: ArrayBuffer[Long],
                       xs: ArrayBuffer[Double], ys: ArrayBuffer[Double],
                       minDur: Long,

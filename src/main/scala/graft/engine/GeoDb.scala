@@ -50,11 +50,6 @@ class GeoDb(
     spark.experimental.extraStrategies =
       spark.experimental.extraStrategies :+ graft.plans.ParamFilters
 
-  /** Extra parquet writer options applied to every collection write —
-    * e.g. Map("parquet.block.size" -> "8388608") to shrink row groups for
-    * finer bbox-stat pruning granularity (see SCALE.md). */
-  var writeOptions: Map[String, String] = Map.empty
-
   val mandatoryProperties = Seq("id", "created_at", "modified_at", "geometry")
   private val statCols = Seq("_bbox_minx", "_bbox_miny", "_bbox_maxx", "_bbox_maxy")
   private val PUBLIC = "PUBLIC"
@@ -298,7 +293,7 @@ class GeoDb(
           .withColumn("modified_at", lit(null).cast(TimestampType))
         val (assigned, n) =
           assignIds(alignTo(meta.schema, withMeta, keepId = false), meta.maxId)
-        addStats(meta, assigned).write.options(writeOptions).mode("append")
+        addStats(meta, assigned).write.mode("append")
           .parquet(catalog.dataDir(d, collection))
         catalog.saveMeta(metaOf(d, collection).copy(maxId = meta.maxId + n))
         maintainVectorIndexes(d, collection, assigned)
@@ -1221,13 +1216,28 @@ class GeoDb(
   }
 
   def setMetadataField(collection: String, field: String, value: Any,
-                       database: Option[String] = None): Unit = {
+                       database: Option[String] = None): Unit =
+    editMetadata(collection, database, d => s"Metadata $field set on $d/$collection")(
+      (_, cur) => cur + (field -> value))
+
+  /** The one STAC metadata write: owner check, load, `edit` (given the
+    * database and the stored map), save, and a "metadata changed" event
+    * whose message `msg` builds from the database. */
+  private def editMetadata(collection: String, database: Option[String],
+                           msg: String => String)(
+                           edit: (String, Map[String, Any]) => Map[String, Any]): Unit = {
     val d = db(database)
     requireDatabaseOwner(d)
     val path = catalog.metadataPath(d, collection)
-    Jsons.save(path, Jsons.loadMap(path) + (field -> value))
-    logEvent("metadata changed", s"Metadata $field set on $d/$collection")
+    Jsons.save(path, edit(d, Jsons.loadMap(path)))
+    logEvent("metadata changed", msg(d))
   }
+
+  private def metaList(cur: Map[String, Any], field: String): Seq[Any] =
+    cur.get(field).map(_.asInstanceOf[Seq[Any]]).getOrElse(Seq.empty)
+
+  private def metaMap(cur: Map[String, Any], group: String): Map[String, Any] =
+    cur.get(group).map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty)
 
   /** Normalizes to an EPSG:4326 envelope (geodb.sql:1840-1867). */
   def setSpatialExtent(collection: String,
@@ -1243,15 +1253,9 @@ class GeoDb(
 
   /** Append a typed value to a list-valued metadata field (providers/links). */
   private def appendMetaList(collection: String, field: String, value: Map[String, Any],
-                             database: Option[String]): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val list = cur.get(field).map(_.asInstanceOf[Seq[Any]]).getOrElse(Seq.empty)
-    Jsons.save(path, cur + (field -> (list :+ value)))
-    logEvent("metadata changed", s"Metadata $field appended on $d/$collection")
-  }
+                             database: Option[String]): Unit =
+    editMetadata(collection, database, d => s"Metadata $field appended on $d/$collection")(
+      (_, cur) => cur + (field -> (metaList(cur, field) :+ value)))
 
   def addProvider(collection: String, p: Stac.Provider,
                   database: Option[String] = None): Unit =
@@ -1262,26 +1266,14 @@ class GeoDb(
     appendMetaList(collection, "links", l.toMap, database)
 
   def addAsset(collection: String, name: String, a: Stac.Asset,
-               database: Option[String] = None): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val assets = cur.get("assets").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty)
-    Jsons.save(path, cur + ("assets" -> (assets + (name -> a.toMap))))
-    logEvent("metadata changed", s"Asset $name set on $d/$collection")
-  }
+               database: Option[String] = None): Unit =
+    editMetadata(collection, database, d => s"Asset $name set on $d/$collection")(
+      (_, cur) => cur + ("assets" -> (metaMap(cur, "assets") + (name -> a.toMap))))
 
   def setItemAsset(collection: String, name: String, a: Stac.ItemAsset,
-                   database: Option[String] = None): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val ia = cur.get("item_assets").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty)
-    Jsons.save(path, cur + ("item_assets" -> (ia + (name -> a.toMap))))
-    logEvent("metadata changed", s"Item asset $name set on $d/$collection")
-  }
+                   database: Option[String] = None): Unit =
+    editMetadata(collection, database, d => s"Item asset $name set on $d/$collection")(
+      (_, cur) => cur + ("item_assets" -> (metaMap(cur, "item_assets") + (name -> a.toMap))))
 
   // ---- nested STAC upsert/remove (geodb_set_metadata_field's field-wise
   // typed upsert across entity groups, geodb.sql:1869-2036) ----
@@ -1294,44 +1286,30 @@ class GeoDb(
   }
 
   def unsetMetadataField(collection: String, field: String,
-                         database: Option[String] = None): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    Jsons.save(path, Jsons.loadMap(path) - field)
-    logEvent("metadata changed", s"Metadata $field unset on $d/$collection")
-  }
+                         database: Option[String] = None): Unit =
+    editMetadata(collection, database, d => s"Metadata $field unset on $d/$collection")(
+      (_, cur) => cur - field)
 
   /** Replace the list entry whose `keyField` equals `key` (error if absent). */
   private def updateMetaListEntry(collection: String, field: String,
                                   keyField: String, key: String,
                                   value: Map[String, Any],
-                                  database: Option[String]): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val list = cur.get(field).map(_.asInstanceOf[Seq[Any]]).getOrElse(Seq.empty)
-    val idx = list.indexWhere(
-      _.asInstanceOf[Map[String, Any]].get(keyField).contains(key))
-    require(idx >= 0, s"no $field entry with $keyField=$key on $d/$collection")
-    Jsons.save(path, cur + (field -> list.updated(idx, value)))
-    logEvent("metadata changed", s"Metadata $field[$key] updated on $d/$collection")
-  }
+                                  database: Option[String]): Unit =
+    editMetadata(collection, database, d => s"Metadata $field[$key] updated on $d/$collection") {
+      (d, cur) =>
+        val list = metaList(cur, field)
+        val idx = list.indexWhere(
+          _.asInstanceOf[Map[String, Any]].get(keyField).contains(key))
+        require(idx >= 0, s"no $field entry with $keyField=$key on $d/$collection")
+        cur + (field -> list.updated(idx, value))
+    }
 
   private def removeMetaListEntries(collection: String, field: String,
                                     keyField: String, key: String,
-                                    database: Option[String]): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val list = cur.get(field).map(_.asInstanceOf[Seq[Any]]).getOrElse(Seq.empty)
-    val kept = list.filterNot(
-      _.asInstanceOf[Map[String, Any]].get(keyField).contains(key))
-    Jsons.save(path, cur + (field -> kept))
-    logEvent("metadata changed", s"Metadata $field[$key] removed on $d/$collection")
-  }
+                                    database: Option[String]): Unit =
+    editMetadata(collection, database, d => s"Metadata $field[$key] removed on $d/$collection")(
+      (_, cur) => cur + (field -> metaList(cur, field).filterNot(
+        _.asInstanceOf[Map[String, Any]].get(keyField).contains(key))))
 
   def updateProvider(collection: String, name: String, p: Stac.Provider,
                      database: Option[String] = None): Unit =
@@ -1350,15 +1328,9 @@ class GeoDb(
     removeMetaListEntries(collection, "links", "rel", rel, database)
 
   private def removeKeyedMeta(collection: String, group: String, name: String,
-                              database: Option[String]): Unit = {
-    val d = db(database)
-    requireDatabaseOwner(d)
-    val path = catalog.metadataPath(d, collection)
-    val cur = Jsons.loadMap(path)
-    val m = cur.get(group).map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty)
-    Jsons.save(path, cur + (group -> (m - name)))
-    logEvent("metadata changed", s"Metadata $group.$name removed on $d/$collection")
-  }
+                              database: Option[String]): Unit =
+    editMetadata(collection, database, d => s"Metadata $group.$name removed on $d/$collection")(
+      (_, cur) => cur + (group -> (metaMap(cur, group) - name)))
 
   def removeAsset(collection: String, name: String,
                   database: Option[String] = None): Unit =
@@ -1432,8 +1404,7 @@ class GeoDb(
   /** User-visible frame (stat columns pruned). */
   def readCollection(d: String, c: String): DataFrame = {
     val meta = metaOf(d, c)
-    spark.read.schema(withStats(meta)).parquet(catalog.dataDir(d, c))
-      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
+    readRaw(d, c, meta).select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   private def withStats(schema: StructType): StructType =
@@ -1771,7 +1742,7 @@ class GeoDb(
     val dir = catalog.collectionDir(d, c)
     val token = UUID.randomUUID.toString.take(8)
     val tmp = s"$dir/.data-tmp-$token"
-    newDf.write.options(writeOptions).mode("overwrite").parquet(tmp)
+    newDf.write.mode("overwrite").parquet(tmp)
     val conf = spark.sessionState.newHadoopConf()
     val fs = new HPath(dir).getFileSystem(conf)
     val dataP = new HPath(catalog.dataDir(d, c))

@@ -16,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the three tools (`PlanDump`, `Smoke`, `EntryCheck`); measurement
   *    belongs to `perfbench/`, not to one-off probe mains;
   *  - the geodesic operators' latitude-banded grid has one definition
-  *    (`DistanceJoin.LatBands`), not a copy per operator. */
+  *    (`DistanceJoin.LatBands`), not a copy per operator;
+  *  - the trajectory family has one input contract (`track`: one
+  *    presence loop, one `refuse`/`ranged` pair) and one per-key scan
+  *    (`perKey`: one `.mapPartitions`) in `core/Trajectory.scala`, and
+  *    src/main has one scalar haversine (`GeoOps.haversineMeters`). */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -84,5 +88,30 @@ class SourceGuardSpec extends AnyFunSuite {
   test("the latitude-banded grid is defined once: one def nCellsOf in src/main") {
     val defs = offending((_, line) => line.contains("def nCellsOf"))
     assert(defs.size == 1, defs.mkString("\n"))
+  }
+
+  private def trajectoryLines(pattern: String): Seq[String] =
+    offending((rel, line) => rel == "graft/core/Trajectory.scala" && line.contains(pattern))
+
+  test("the trajectory family has one per-key scan: one .mapPartitions in core/Trajectory.scala") {
+    val hits = trajectoryLines(".mapPartitions")
+    assert(hits.size == 1, hits.mkString("\n"))
+  }
+
+  test("the trajectory family has one presence check: one columns.contains(c) in core/Trajectory.scala") {
+    val hits = trajectoryLines("columns.contains(c)")
+    assert(hits.size == 1, hits.mkString("\n"))
+  }
+
+  test("the trajectory family has one refusal pair: one def refuse and one def ranged") {
+    Seq("def refuse", "def ranged").foreach { d =>
+      val hits = trajectoryLines(d)
+      assert(hits.size == 1, hits.mkString("\n"))
+    }
+  }
+
+  test("one scalar haversine in src/main: math.asin(math.min(1.0 occurs once") {
+    val hits = offending((_, line) => line.contains("math.asin(math.min(1.0"))
+    assert(hits.size == 1, hits.mkString("\n"))
   }
 }

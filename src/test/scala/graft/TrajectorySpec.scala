@@ -1076,4 +1076,72 @@ class TrajectorySpec extends SparkSpec {
       Trajectory.speedFilter(pts, "k", "t", "x", "y", 0.0)
     }
   }
+
+  /** Every message of an exception's cause chain. */
+  private def chainOf(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).toSeq
+
+  test("the track contract: every operator refuses NULL key/ts by name; lat 91 where range-checked") {
+    import spark.implicits._
+    type Df = org.apache.spark.sql.DataFrame
+    def mm(geo: Boolean)(df: Df): Df = {
+      val c = df.withColumn("c", lit(1L)).withColumn("d", lit(1.0))
+      if (geo) Trajectory.mapMatchGeo(c, "k", "t", "c", "d", "lon", "lat", "lon", "lat", 1.0, 1.0)
+      else Trajectory.mapMatch(c, "k", "t", "c", "d", "lon", "lat", "lon", "lat", 1.0, 1.0)
+    }
+    // (operator, whether it refuses lat 91, the run over a (k, t, lon, lat) frame)
+    val ops: Seq[(String, Boolean, Df => Df)] = Seq(
+      ("stayPoints", false, Trajectory.stayPoints(_, "k", "t", "lon", "lat", 1.0, 10L)),
+      ("geoStayPoints", false, Trajectory.geoStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)),
+      ("segments", false, Trajectory.segments(_, "k", "t", "lon", "lat", 10L)),
+      ("kinematics", true, Trajectory.kinematics(_, "k", "t", "lon", "lat")),
+      ("resample", true, Trajectory.resample(_, "k", "t", "lon", "lat", 1L)),
+      ("compress", false, Trajectory.compress(_, "k", "t", "lon", "lat", 1.0)),
+      ("compressGeo", true, Trajectory.compressGeo(_, "k", "t", "lon", "lat", 1.0)),
+      ("speedFilter", false, Trajectory.speedFilter(_, "k", "t", "lon", "lat", 1.0)),
+      ("speedFilterGeo", true, Trajectory.speedFilterGeo(_, "k", "t", "lon", "lat", 1.0)),
+      ("odMatrix", true, Trajectory.odMatrix(_, "k", "t", "lon", "lat", 4)),
+      ("kinematicsStream", true, Trajectory.kinematicsStream(_, "k", "t", "lon", "lat")),
+      ("streamingStayPoints", false,
+        Trajectory.streamingStayPoints(_, "k", "t", "lon", "lat", 1.0, 10L)),
+      ("geoStreamingStayPoints", false,
+        Trajectory.geoStreamingStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)),
+      ("mapMatch", false, mm(geo = false)),
+      ("mapMatchGeo", true, mm(geo = true)))
+    def pts(rows: (Option[Long], Option[Long], Double)*): Df =
+      rows.map { case (k, t, lat) => (k, t, 10.0, lat) }.toDF("k", "t", "lon", "lat")
+    val nullKey = pts((Some(1L), Some(0L), 50.0), (None, Some(1L), 50.0))
+    val nullTs = pts((Some(1L), Some(0L), 50.0), (Some(1L), None, 50.0))
+    val lat91 = pts((Some(1L), Some(0L), 50.0), (Some(1L), Some(1L), 91.0))
+    def refusal(run: Df => Df, df: Df): Seq[String] =
+      chainOf(intercept[Exception](run(df).collect()))
+    ops.foreach { case (op, rangeChecked, run) =>
+      assert(refusal(run, nullKey).exists(_.contains(s"$op: NULL key — ")), op)
+      assert(refusal(run, nullTs).exists(_.contains(s"$op: NULL timestamp — ")), op)
+      if (rangeChecked)
+        assert(refusal(run, lat91).exists(m =>
+          m.contains(s"$op: ") && m.contains("out of [-90.0, 90.0], got 91.0")), op)
+      else if (op.startsWith("geo")) run(lat91).collect()
+    }
+  }
+
+  test("streaming operators refuse non-integral keys and timestamps like their batch twins") {
+    import spark.implicits._
+    // keys 1.2 and 1.7 would both cast to device 1, ts 10.5 to 10
+    val fracKey = Seq((1.2, 0L, 10.0, 50.0), (1.7, 5L, 10.0, 50.0)).toDF("k", "t", "lon", "lat")
+    val fracTs = Seq((1L, 0.0, 10.0, 50.0), (1L, 10.5, 10.0, 50.0)).toDF("k", "t", "lon", "lat")
+    val runs: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "kinematicsStream" -> (Trajectory.kinematicsStream(_, "k", "t", "lon", "lat")),
+      "streamingStayPoints" ->
+        (Trajectory.streamingStayPoints(_, "k", "t", "lon", "lat", 1.0, 10L)),
+      "geoStreamingStayPoints" ->
+        (Trajectory.geoStreamingStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)))
+    runs.foreach { case (op, run) =>
+      val ek = intercept[IllegalArgumentException](run(fracKey).collect())
+      assert(ek.getMessage.contains(s"$op: key column 'k' must be integral"), ek.getMessage)
+      val et = intercept[IllegalArgumentException](run(fracTs).collect())
+      assert(et.getMessage.contains(s"$op: timestamp column 't' must be integral"), et.getMessage)
+    }
+  }
 }
