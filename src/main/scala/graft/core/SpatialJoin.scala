@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.graftx.Bridge
 
 import graft.functions.{StEnvelopeBounds, StRelation, StRelationXY}
@@ -42,17 +43,17 @@ import graft.functions.{StEnvelopeBounds, StRelation, StRelationXY}
  * anti-join over `intersects` — pairs semantics would be a cross
  * join's output size anyway).
  *
- * Scale: shuffle carries each point once and each geometry
- * |covered cells| times (slim longs + the WKB payload); a candidate
- * passes a closed-envelope double-compare prefilter before the JTS
- * verify, and the verify itself rides the prepared-geometry slot
- * cache ([[GeoOps.relatePoint]]) — a streamed geometry row's
- * candidates arrive consecutively, so topology builds once per
- * (geometry, task) in the common case. Density skew (one hot cell)
- * is ordinary join skew: `saltCells` routes the cell key through
- * [[graft.ext.Skew.saltedJoin]]. `cellSize` trades geometry
- * replication against per-cell candidate fan-in — start near the
- * median geometry extent.
+ * Scale: the envelope is decoded ONCE per row from the WKB, or read
+ * from stored bounds (a collection's `_bbox_*`, passed by
+ * `GeoDb.spatialJoinCollections`: zero decodes). Shuffle carries each
+ * point once and each geometry |covered cells| times (slim longs + the
+ * WKB); a candidate passes a closed-envelope double-compare prefilter
+ * before the JTS verify, which rides the prepared-geometry slot cache
+ * ([[GeoOps.relatePoint]]) — a streamed geometry row's candidates arrive
+ * consecutively, so topology builds once per (geometry, task). Density
+ * skew (one hot cell) is ordinary join skew: `saltCells` routes the
+ * cell key through [[graft.ext.Skew.saltedJoin]]. `cellSize` trades
+ * replication against per-cell fan-in — start near the median extent.
  */
 object SpatialJoin {
 
@@ -74,6 +75,21 @@ object SpatialJoin {
       "overlap) — express it as an anti-join over 'intersects'")
   }
 
+  private def checkGrid(op: String, mode: String, cellSize: Double,
+                        maxCellsPerGeom: Int, saltCells: Int): Unit = {
+    checkMode(op, mode)
+    require(cellSize > 0 && !cellSize.isInfinite,
+      s"$op: cellSize must be finite > 0, got $cellSize")
+    require(maxCellsPerGeom >= 1,
+      s"$op: maxCellsPerGeom must be >= 1, got $maxCellsPerGeom")
+    require(saltCells == 0 || saltCells >= 2,
+      s"saltCells: 0 (off) or >= 2, got $saltCells")
+  }
+
+  private def present(op: String, df: DataFrame, cols: String*): Unit =
+    cols.foreach(c => require(df.columns.contains(c),
+      s"$op: column '$c' missing from ${df.columns.mkString("[", ",", "]")}"))
+
   private def checkCols(op: String, left: DataFrame, right: DataFrame,
                         scratch: Seq[String]): Unit = {
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
@@ -86,55 +102,62 @@ object SpatialJoin {
     }
   }
 
+  /** A checked column the optimizer knows is never NULL: a nullable one
+    * read by a null-intolerant join predicate gets an inferred `isnotnull`
+    * Filter, pushed below the refusals (a NULL row vanishes silently). */
+  private def known(c: Column): Column =
+    Bridge.column(KnownNotNull(Bridge.expression(c)))
+
   /**
    * Geometry side → covered-cell explosion: adds `(_scx, _scy)` join
    * keys plus `${p}env` (the closed envelope, for the double-compare
    * prefilter) and `${p}cxlo`/`${p}cylo` (the cell-range los, for the
-   * geometry×geometry reference-cell rule). NULL geometries, EMPTY
-   * geometries (JTS null envelope: minX > maxX — no cells to live in)
-   * and NaN envelope coordinates are REFUSED loudly: each would
-   * silently drop the row from every pair. Geometries covering more
-   * than `maxCellsPerGeom` cells are refused with the count — raise
-   * `cellSize` (or split the geometry) rather than let one row explode
-   * the shuffle.
+   * geometry×geometry reference-cell rule). The envelope is `stored` —
+   * four double columns (minx, miny, maxx, maxy) equal to the geometry's
+   * envelope, consumed here — or else ONE `st_envelope_bounds` decode.
+   * One projection checks and bins it: NULL geometries, EMPTY geometries
+   * (JTS null envelope: minX > maxX — no cells to live in) and NaN
+   * envelope coordinates are REFUSED loudly, in that order: each would
+   * silently drop the row from every pair. Geometries covering more than
+   * `maxCellsPerGeom` cells are refused with the count — raise `cellSize`
+   * (or split the geometry) rather than let one row explode the shuffle.
+   * The refusals share the CASE yielding `${p}cxhi`, which the first
+   * explode reads, so no row reaches a pair unchecked.
    */
-  private def withCells(df: DataFrame, geomCol: String, cellSize: Double,
-                        maxCellsPerGeom: Int, p: String, op: String): DataFrame = {
-    val env = col(s"${p}env")
-    val doubleArr = "array<double>"
-    val bounded = df
-      .withColumn(s"${p}env",
-        when(col(geomCol).isNull,
-          raise_error(lit(s"$op: NULL geometry — a null cell key would " +
-            "silently drop the row from every pair")).cast(doubleArr))
-        .otherwise(envBounds(col(geomCol))))
-      .withColumn(s"${p}env",
-        when(env(0) > env(2),
-          raise_error(lit(s"$op: EMPTY geometry — it covers no cells and " +
-            "would silently vanish from every pair; filter empties first"))
-            .cast(doubleArr))
-        .when(isnan(env(0)) || isnan(env(1)) || isnan(env(2)) || isnan(env(3)),
-          raise_error(lit(s"$op: NaN envelope coordinate — a misindexed " +
-            "cell silently drops pairs")).cast(doubleArr))
-        .otherwise(env))
-      .withColumn(s"${p}cxlo", floor(env(0) / cellSize).cast("long"))
-      .withColumn(s"${p}cylo", floor(env(1) / cellSize).cast("long"))
-      .withColumn(s"${p}cxhi", floor(env(2) / cellSize).cast("long"))
-      .withColumn(s"${p}cyhi", floor(env(3) / cellSize).cast("long"))
-    val nCells = (col(s"${p}cxhi") - col(s"${p}cxlo") + 1) *
-                 (col(s"${p}cyhi") - col(s"${p}cylo") + 1)
-    bounded
-      .withColumn(s"${p}cxhi",
-        when(nCells > maxCellsPerGeom,
-          raise_error(concat(
-            lit(s"$op: geometry covers "), nCells.cast("string"),
-            lit(s" cells > maxCellsPerGeom ($maxCellsPerGeom) at cellSize " +
-              s"$cellSize — raise cellSize or split the geometry")))
-            .cast("long"))
-        .otherwise(col(s"${p}cxhi")))
-      .withColumn("_scx", explode(sequence(col(s"${p}cxlo"), col(s"${p}cxhi"))))
-      .withColumn("_scy", explode(sequence(col(s"${p}cylo"), col(s"${p}cyhi"))))
-      .drop(s"${p}cxhi", s"${p}cyhi")
+  private def withCells(df: DataFrame, geomCol: String, stored: Option[Seq[String]],
+                        cellSize: Double, maxCellsPerGeom: Int, p: String,
+                        op: String): DataFrame = {
+    val (src, env, bound) = stored match {
+      case Some(bs) => (df, array(bs.map(col): _*), (i: Int) => col(bs(i)))
+      case None => (df.withColumn(s"${p}env", envBounds(col(geomCol))),
+        col(s"${p}env"), (i: Int) => col(s"${p}env")(i))
+    }
+    def refuse(why: String): Column = raise_error(lit(s"$op: $why"))
+    val nullGeom = refuse("NULL geometry — a null cell key would silently " +
+      "drop the row from every pair")
+    def cell(i: Int): Column = floor(bound(i) / cellSize).cast("long")
+    val nCells = (cell(2) - cell(0) + 1) * (cell(3) - cell(1) + 1)
+    val cxhi = when(col(geomCol).isNull, nullGeom)
+      .when(bound(0) > bound(2), refuse("EMPTY geometry — it covers no cells " +
+        "and would silently vanish from every pair; filter empties first"))
+      .when((0 to 3).map(i => isnan(bound(i))).reduce(_ || _),
+        refuse("NaN envelope coordinate — a misindexed cell silently drops pairs"))
+      .when(nCells > maxCellsPerGeom, raise_error(concat(
+        lit(s"$op: geometry covers "), nCells.cast("string"),
+        lit(s" cells > maxCellsPerGeom ($maxCellsPerGeom) at cellSize " +
+          s"$cellSize — raise cellSize or split the geometry"))))
+      .otherwise(cell(2))
+    val user = df.columns.filterNot(stored.getOrElse(Nil).contains).map { c =>
+      if (c == geomCol) known(when(col(c).isNull, nullGeom).otherwise(col(c))).as(c)
+      else col(c)
+    }
+    val cells = src.select(user ++ Seq(known(env).as(s"${p}env"),
+      known(cell(0)).as(s"${p}cxlo"), known(cell(1)).as(s"${p}cylo"),
+      known(cxhi).as(s"${p}cxhi"), known(cell(3)).as(s"${p}cyhi")): _*)
+    def explodeAxis(d: DataFrame, axis: String): DataFrame =
+      d.select(d.columns.filter(_ != s"${p}c${axis}hi").map(col) :+
+        explode(sequence(col(s"${p}c${axis}lo"), col(s"${p}c${axis}hi"))).as(s"_sc$axis"): _*)
+    explodeAxis(explodeAxis(cells, "x"), "y")
   }
 
   /**
@@ -157,32 +180,18 @@ object SpatialJoin {
                 cellSize: Double,
                 maxCellsPerGeom: Int = 4096,
                 saltCells: Int = 0): DataFrame = {
-    checkMode("pointJoin", mode)
-    require(cellSize > 0 && !cellSize.isInfinite,
-      s"pointJoin: cellSize must be finite > 0, got $cellSize")
-    require(maxCellsPerGeom >= 1,
-      s"pointJoin: maxCellsPerGeom must be >= 1, got $maxCellsPerGeom")
-    require(saltCells == 0 || saltCells >= 2,
-      s"saltCells: 0 (off) or >= 2, got $saltCells")
-    require(geoms.columns.contains(geomCol),
-      s"pointJoin: geometry column '$geomCol' missing from " +
-      geoms.columns.mkString("[", ",", "]"))
-    Seq(px, py).foreach { c =>
-      require(points.columns.contains(c),
-        s"pointJoin: column '$c' missing from ${points.columns.mkString("[", ",", "]")}")
-    }
+    checkGrid("pointJoin", mode, cellSize, maxCellsPerGeom, saltCells)
+    present("pointJoin", geoms, geomCol); present("pointJoin", points, px, py)
     checkCols("pointJoin", geoms, points,
       Seq("_scx", "_scy", "_genv", "_gcxlo", "_gcylo", "_gcxhi", "_gcyhi"))
-    val g = withCells(geoms, geomCol, cellSize, maxCellsPerGeom, "_g", "pointJoin")
-      .drop("_gcxlo", "_gcylo")
-    def pcell(c: Column, axis: String): Column =
-      when(c.isNull || isnan(c),
-        raise_error(lit(s"pointJoin: NULL/NaN $axis coordinate — a null " +
-          "cell would silently drop the point from every pair")).cast("long"))
-      .otherwise(floor(c / cellSize).cast("long"))
-    val pts = points
-      .withColumn("_scx", pcell(col(px), "x"))
-      .withColumn("_scy", pcell(col(py), "y"))
+    val g = withCells(geoms, geomCol, None, cellSize, maxCellsPerGeom, "_g", "pointJoin")
+    def checked(c: String): Column = known(when(col(c).isNull || isnan(col(c)),
+      raise_error(lit(s"pointJoin: NULL/NaN ${if (c == px) "x" else "y"} coordinate " +
+        "— a null cell would silently drop the point from every pair"))).otherwise(col(c)))
+    def pcell(c: String): Column = known(floor(checked(c) / cellSize).cast("long"))
+    val pts = points.select(points.columns.map(c =>
+      if (c == px || c == py) checked(c).as(c) else col(c)) ++
+      Seq(pcell(px).as("_scx"), pcell(py).as("_scy")): _*)
     val joined =
       if (saltCells >= 2)
         graft.ext.Skew.saltedJoin(pts, g, Seq("_scx", "_scy"), saltCells)
@@ -193,8 +202,8 @@ object SpatialJoin {
       // meets the geometry's closure, hence its envelope — four double
       // compares ahead of the JTS predicate
       .filter(col(px) >= env(0) && col(px) <= env(2) &&
-              col(py) >= env(1) && col(py) <= env(3))
-      .filter(relXY(mode, col(geomCol), col(px), col(py)))
+              col(py) >= env(1) && col(py) <= env(3) &&
+              relXY(mode, col(geomCol), col(px), col(py)))
       .select(geoms.columns.map(col) ++ points.columns.map(col): _*)
   }
 
@@ -212,25 +221,22 @@ object SpatialJoin {
                   mode: String = "intersects",
                   cellSize: Double,
                   maxCellsPerGeom: Int = 4096,
-                  saltCells: Int = 0): DataFrame = {
-    checkMode("spatialJoin", mode)
-    require(cellSize > 0 && !cellSize.isInfinite,
-      s"spatialJoin: cellSize must be finite > 0, got $cellSize")
-    require(maxCellsPerGeom >= 1,
-      s"spatialJoin: maxCellsPerGeom must be >= 1, got $maxCellsPerGeom")
-    require(saltCells == 0 || saltCells >= 2,
-      s"saltCells: 0 (off) or >= 2, got $saltCells")
-    require(a.columns.contains(aGeom),
-      s"spatialJoin: geometry column '$aGeom' missing from " +
-      a.columns.mkString("[", ",", "]"))
-    require(b.columns.contains(bGeom),
-      s"spatialJoin: geometry column '$bGeom' missing from " +
-      b.columns.mkString("[", ",", "]"))
+                  saltCells: Int = 0): DataFrame =
+    spatialJoin(a, aGeom, None, b, bGeom, None, mode, cellSize, maxCellsPerGeom, saltCells)
+
+  /** [[spatialJoin]] where a side may name four stored envelope columns
+    * ([[withCells]]) to read instead of decoding its WKB; not returned. */
+  private[graft] def spatialJoin(a: DataFrame, aGeom: String, aEnv: Option[Seq[String]],
+                                 b: DataFrame, bGeom: String, bEnv: Option[Seq[String]],
+                                 mode: String, cellSize: Double,
+                                 maxCellsPerGeom: Int, saltCells: Int): DataFrame = {
+    checkGrid("spatialJoin", mode, cellSize, maxCellsPerGeom, saltCells)
+    present("spatialJoin", a, aGeom); present("spatialJoin", b, bGeom)
     checkCols("spatialJoin", a, b,
       Seq("_scx", "_scy", "_aenv", "_acxlo", "_acylo", "_acxhi", "_acyhi",
           "_benv", "_bcxlo", "_bcylo", "_bcxhi", "_bcyhi"))
-    val l = withCells(a, aGeom, cellSize, maxCellsPerGeom, "_a", "spatialJoin")
-    val r = withCells(b, bGeom, cellSize, maxCellsPerGeom, "_b", "spatialJoin")
+    val l = withCells(a, aGeom, aEnv, cellSize, maxCellsPerGeom, "_a", "spatialJoin")
+    val r = withCells(b, bGeom, bEnv, cellSize, maxCellsPerGeom, "_b", "spatialJoin")
     val joined =
       if (saltCells >= 2)
         graft.ext.Skew.saltedJoin(l, r, Seq("_scx", "_scy"), saltCells)
@@ -240,12 +246,12 @@ object SpatialJoin {
       // reference cell: exactly-once without a dedup pass — the unique
       // cell both ranges cover at the per-axis max of the lows
       .filter(col("_scx") === greatest(col("_acxlo"), col("_bcxlo")) &&
-              col("_scy") === greatest(col("_acylo"), col("_bcylo")))
-      // closed-envelope overlap prefilter ahead of the JTS matrix
-      .filter(ae(0) <= be(2) && be(0) <= ae(2) &&
-              ae(1) <= be(3) && be(1) <= ae(3))
-      .filter(rel(mode, col(aGeom), col(bGeom)))
-      .select(a.columns.map(col) ++ b.columns.map(col): _*)
+              col("_scy") === greatest(col("_acylo"), col("_bcylo")) &&
+              // closed-envelope overlap prefilter ahead of the JTS matrix
+              ae(0) <= be(2) && be(0) <= ae(2) &&
+              ae(1) <= be(3) && be(1) <= ae(3) &&
+              rel(mode, col(aGeom), col(bGeom)))
+      .select((a.columns ++ b.columns).filterNot((aEnv ++ bEnv).flatten.toSet).map(col): _*)
   }
 
   /**
@@ -280,14 +286,8 @@ object SpatialJoin {
     val modeId = GeoOps.modeId(mode)
     require(maxBroadcastRows >= 1,
       s"broadcastPointJoin: maxBroadcastRows must be >= 1, got $maxBroadcastRows")
-    require(geoms.columns.contains(geomCol),
-      s"broadcastPointJoin: geometry column '$geomCol' missing from " +
-      geoms.columns.mkString("[", ",", "]"))
-    Seq(px, py).foreach { c =>
-      require(points.columns.contains(c),
-        s"broadcastPointJoin: column '$c' missing from " +
-        points.columns.mkString("[", ",", "]"))
-    }
+    present("broadcastPointJoin", geoms, geomCol)
+    present("broadcastPointJoin", points, px, py)
     checkCols("broadcastPointJoin", geoms, points, Seq("_bpx", "_bpy", "_gbidx"))
     val gIdx = geoms.schema.fieldIndex(geomCol)
     val rows = geoms.limit(maxBroadcastRows + 1).collect()

@@ -62,7 +62,7 @@ object Trajectory {
                  radius: Double, minDurationSec: Long,
                  maxPointsPerKey: Int = 5000000): DataFrame = {
     val r2 = radius * radius
-    run(points, keyCol, tsCol, xCol, yCol, minDurationSec, maxPointsPerKey,
+    run(points, keyCol, tsCol, planar(xCol, yCol), minDurationSec, maxPointsPerKey,
       "stayPoints", radius,
       (ax, ay, x, y) => { val dx = x - ax; val dy = y - ay; dx * dx + dy * dy <= r2 })
   }
@@ -70,21 +70,20 @@ object Trajectory {
   /** Geodesic stay points — lat/lon degrees, great-circle `radiusMeters`
     * anchor test (x=lat, y=lon in the output's cx/cy); inherits the
     * haversine ulp classes at the radius boundary (documented on
-    * [[DistanceJoin.geoRadiusJoin]]). Coordinates are NULL-checked
-    * only, not range-checked. */
+    * [[DistanceJoin.geoRadiusJoin]]). Latitude and longitude are
+    * range-checked like every geodesic trajectory operator's. */
   def geoStayPoints(points: DataFrame, keyCol: String, tsCol: String,
                     latCol: String, lonCol: String,
                     radiusMeters: Double, minDurationSec: Long,
                     earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters,
                     maxPointsPerKey: Int = 5000000): DataFrame =
-    run(points, keyCol, tsCol, latCol, lonCol, minDurationSec, maxPointsPerKey,
-      "geoStayPoints", radiusMeters,
+    run(points, keyCol, tsCol, latLonAsXY(latCol, lonCol), minDurationSec,
+      maxPointsPerKey, "geoStayPoints", radiusMeters,
       (aLat, aLon, lat, lon) =>
         GeoOps.haversineMeters(aLat, aLon, lat, lon, earthRadiusMeters) <= radiusMeters)
 
   private def run(points: DataFrame, keyCol: String, tsCol: String,
-                  xCol: String, yCol: String,
-                  minDurationSec: Long, maxPointsPerKey: Int,
+                  coords: Seq[Coord], minDurationSec: Long, maxPointsPerKey: Int,
                   op: String, radius: Double,
                   within: (Double, Double, Double, Double) => Boolean): DataFrame = {
     require(radius > 0 && !radius.isInfinite,
@@ -94,7 +93,7 @@ object Trajectory {
     val spark = points.sparkSession
     import spark.implicits._
     val slim = track(points, op, "a dropped point would silently split a dwell",
-      keyCol, tsCol, planar(xCol, yCol)).as[(Long, Long, Double, Double)]
+      keyCol, tsCol, coords).as[(Long, Long, Double, Double)]
     perKey(slim, "t", "x", "y") { (key, rows) =>
       val (ts, xs, ys) = columns(op, key, rows, maxPointsPerKey)
       scanKey(key, ts, xs, ys, minDurationSec, within)
@@ -113,6 +112,10 @@ object Trajectory {
     Seq(Coord(x, "x", "x coordinate"), Coord(y, "y", "y coordinate"))
   private def lonLat(lon: String, lat: String) =
     Seq(Coord(lon, "lon", "longitude", Lon), Coord(lat, "lat", "latitude", Lat))
+  /** Ranged (lat, lon) under the planar slim names, which the stay-point
+    * kernels read. */
+  private def latLonAsXY(lat: String, lon: String) =
+    Seq(Coord(lat, "x", "latitude", Lat), Coord(lon, "y", "longitude", Lon))
 
   /**
    * The family's one input contract. At plan time: every column must
@@ -863,7 +866,7 @@ object Trajectory {
                           radius: Double, minDurationSec: Long,
                           maxPointsPerKey: Int = 5000000): DataFrame = {
     val r2 = radius * radius
-    streamingRun(points, keyCol, tsCol, xCol, yCol, radius, minDurationSec,
+    streamingRun(points, keyCol, tsCol, planar(xCol, yCol), radius, minDurationSec,
       maxPointsPerKey, "streamingStayPoints",
       (ax, ay, x, y) => { val dx = x - ax; val dy = y - ay; dx * dx + dy * dy <= r2 })
   }
@@ -877,14 +880,13 @@ object Trajectory {
                              radiusMeters: Double, minDurationSec: Long,
                              earthRadiusMeters: Double = DistanceJoin.EarthRadiusMeters,
                              maxPointsPerKey: Int = 5000000): DataFrame =
-    streamingRun(points, keyCol, tsCol, latCol, lonCol, radiusMeters,
+    streamingRun(points, keyCol, tsCol, latLonAsXY(latCol, lonCol), radiusMeters,
       minDurationSec, maxPointsPerKey, "geoStreamingStayPoints",
       (aLat, aLon, lat, lon) =>
         GeoOps.haversineMeters(aLat, aLon, lat, lon, earthRadiusMeters) <= radiusMeters)
 
   private def streamingRun(points: DataFrame, keyCol: String, tsCol: String,
-                           xCol: String, yCol: String,
-                           radius: Double, minDurationSec: Long,
+                           coords: Seq[Coord], radius: Double, minDurationSec: Long,
                            maxPointsPerKey: Int, op: String,
                            within: (Double, Double, Double, Double) => Boolean): DataFrame = {
     require(radius > 0 && !radius.isInfinite,
@@ -897,7 +899,7 @@ object Trajectory {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val slim = track(points, op, "a dropped point would silently split a dwell",
-      keyCol, tsCol, planar(xCol, yCol)).as[(Long, Long, Double, Double)]
+      keyCol, tsCol, coords).as[(Long, Long, Double, Double)]
     slim.groupByKey(_._1)
       .flatMapGroupsWithState[(Seq[(Long, Double, Double)], Int, Long),
                               (Long, Int, Long, Long, Int, Double, Double)](

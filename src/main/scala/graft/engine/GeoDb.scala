@@ -1154,12 +1154,18 @@ class GeoDb(
     val da = db(databaseA); val dbo = db(databaseB)
     requireAccess(da, collA, "SELECT")
     requireAccess(dbo, collB, "SELECT")
-    val a = readCollection(da, collA)
-    val b = readCollection(dbo, collB)
-    val ap = a.select(a.columns.map(c => col(c).as(s"a_$c")): _*)
-    val bp = b.select(b.columns.map(c => col(c).as(s"b_$c")): _*)
-    val out = graft.core.SpatialJoin.spatialJoin(ap, "a_geometry",
-      bp, "b_geometry", mode, cellSize, maxCellsPerGeom, saltCells)
+    // the stored `_bbox_*` ride along as each side's envelope: every
+    // write path keeps them equal to the geometry's (addStats), so the
+    // join decodes no WKB to bin a row
+    def side(d: String, c: String, p: String): DataFrame = {
+      val meta = metaOf(d, c)
+      readRaw(d, c, meta).select((meta.schema.fieldNames ++ statCols)
+        .map(n => col(n).as(p + n)).toIndexedSeq: _*)
+    }
+    val out = graft.core.SpatialJoin.spatialJoin(
+      side(da, collA, "a_"), "a_geometry", Some(statCols.map("a_" + _)),
+      side(dbo, collB, "b_"), "b_geometry", Some(statCols.map("b_" + _)),
+      mode, cellSize, maxCellsPerGeom, saltCells)
     logEvent(EventType.Read, s"Spatial join $da/$collA x $dbo/$collB mode=$mode")
     out
   }

@@ -1079,4 +1079,70 @@ class GeoDbEngineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("SELECT"))
   }
+
+  test("spatialJoinCollections reads the stored envelope: equal to the " +
+       "decoding join after every write path; EMPTY and NULL still refuse") {
+    val db = new GeoDb(spark, tmpDir("graft-wh"), "geodb_user")
+    def rect(x: Double, y: Double, w: Double, h: Double) =
+      s"POLYGON(($x $y, ${x + w} $y, ${x + w} ${y + h}, $x ${y + h}, $x $y))"
+    db.createCollection("c", Seq("k" -> "int8"))
+    db.insertIntoCollection("c", (1 to 30).map { i =>
+      (i.toLong, rect((i * 7) % 10 * 0.4, (i * 3) % 10 * 0.4, 0.5 + i % 3 * 0.3, 0.4))
+    }.toDF("k", "geometry"))
+    val combos = for (m <- Seq("intersects", "contains", "within"); salt <- Seq(0, 3))
+      yield (m, salt)
+    // every (mode, salt) pair's rows in one collect: tag, ids, full-row hash
+    def bag(join: (String, Int) => org.apache.spark.sql.DataFrame): Seq[String] =
+      combos.map { case (m, salt) =>
+        val j = join(m, salt)
+        j.select(lit(s"$m/$salt"), col("a_id"), col("b_id"),
+          xxhash64(struct(j.columns.map(col).toIndexedSeq: _*)))
+      }.reduce(_ union _).collect().map(_.mkString("|")).sorted.toSeq
+    def check(step: String): Unit = {
+      val c = db.readCollection(db.whoami, "c")
+      def side(p: String) = c.select(c.columns.map(n => col(n).as(p + n)).toIndexedSeq: _*)
+      val stored = db.spatialJoinCollections("c", "c", cellSize = 0.5)
+      assert(stored.columns.toSeq === c.columns.map("a_" + _).toSeq ++ c.columns.map("b_" + _))
+      val got = bag((m, salt) => db.spatialJoinCollections("c", "c", m, cellSize = 0.5,
+        saltCells = salt))
+      val want = bag((m, salt) => graft.core.SpatialJoin.spatialJoin(side("a_"), "a_geometry",
+        side("b_"), "b_geometry", m, cellSize = 0.5, saltCells = salt))
+      assert(got.size > 30 && got === want, s"after $step")
+    }
+    check("insert")
+    // binning reads the stored `_bbox_*`: no WKB decode anywhere in the plan
+    val plan = db.spatialJoinCollections("c", "c", cellSize = 0.5).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(plan.collect { case p => p.expressions.map(_.collect {
+      case e: graft.functions.StEnvelopeBounds => e }.size).sum }.sum === 0)
+    val moved = GeoOps.geomFromText(
+      org.apache.spark.unsafe.types.UTF8String.fromString(rect(3.0, 3.0, 1.0, 1.0)))
+    db.updateCollection("c", Map("geometry" -> moved), "k=lt.6")
+    check("update")
+    db.insertIntoCollection("c", Seq((3L, 3L, rect(0.2, 3.9, 0.3, 0.3)),
+      (100L, 100L, rect(3.2, 3.2, 0.2, 0.2))).toDF("id", "k", "geometry"), upsert = true)
+    check("upsert")
+    db.deleteFromCollection("c", "k=gt.25")
+    check("delete")
+    db.createIndex("c")
+    check("createIndex hilbert")
+    db.dropIndex("c", "geometry")
+    db.createIndex("c", method = "quadkey", zoom = 8)
+    check("createIndex quadkey z=8")
+    def refusedWith(msg: String, coll: String): Unit = {
+      val e = intercept[Exception](db.spatialJoinCollections(coll, coll, cellSize = 0.5).count())
+      val texts = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(texts.exists(_.contains(msg)), s"expected '$msg', got: ${e.getMessage}")
+    }
+    db.insertIntoCollection("c", Seq((99L, "POLYGON EMPTY")).toDF("k", "geometry"))
+    refusedWith("EMPTY geometry", "c")
+    // inserts keep a NULL geometry; the join must refuse it, not drop it
+    db.createCollection("n", Seq("k" -> "int8"))
+    db.insertIntoCollection("n", Seq[(Long, String)]((1L, rect(0, 0, 1, 1)), (2L, null))
+      .toDF("k", "geometry"))
+    refusedWith("NULL geometry", "n")
+  }
 }

@@ -353,4 +353,63 @@ class SpatialJoinSpec extends SparkSpec {
       SpatialJoin.pointJoin(g, "ageom", pts, "px", "py", "nearby", cellSize = 5.0)
     }
   }
+
+  /** `df` written to Parquet and read back: a file scan, where Spark
+    * pushes inferred `isnotnull` filters below the refusing projection
+    * (a local relation evaluates that projection while optimizing). */
+  private def onDisk(df: DataFrame): DataFrame = {
+    val dir = tmpDir("sj-parquet") + "/t"
+    df.write.parquet(dir)
+    s.read.parquet(dir)
+  }
+
+  private def refusedWith(msg: String)(body: => Any): Unit = {
+    val e = intercept[Exception](body)
+    val texts = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(texts.exists(_.contains(msg)), s"expected '$msg', got: ${e.getMessage}")
+  }
+
+  test("file-backed inputs: NULL geometry and NULL point still refuse") {
+    import s.implicits._
+    val withNull = onDisk(Seq((1, "POLYGON((0 0, 2 0, 0 2, 0 0))"), (2, null))
+      .toDF("aid", "w")
+      .select($"aid", when($"w".isNotNull, st_geomfromtext($"w")).as("ageom")))
+    refusedWith("NULL geometry") {
+      SpatialJoin.spatialJoin(withNull, "ageom", layerB, "bgeom", "intersects",
+        cellSize = 5.0).count()
+    }
+    refusedWith("NULL geometry") {
+      SpatialJoin.pointJoin(withNull, "ageom", pts, "px", "py", "intersects",
+        cellSize = 5.0).count()
+    }
+    val nullPts = onDisk(Seq[(Int, Option[Double], Double)]((1, Some(1.0), 1.0),
+      (2, None, 1.0)).toDF("pid", "px", "py"))
+    refusedWith("NULL/NaN x coordinate") {
+      SpatialJoin.pointJoin(layerA, "ageom", nullPts, "px", "py", "intersects",
+        cellSize = 5.0).count()
+    }
+  }
+
+  test("plan guard: one st_envelope_bounds per geometry side, none in a Filter") {
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def decodes(df: DataFrame): (Int, Int) = {
+      val plan: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      def count(p: SparkPlan) = p.expressions.map(_.collect {
+        case e: graft.functions.StEnvelopeBounds => e }.size).sum
+      (plan.collect { case p => count(p) }.sum,
+       plan.collect { case f: FilterExec => count(f) }.sum)
+    }
+    val (a, b, p) = (onDisk(layerA), onDisk(layerB), onDisk(pts))
+    assert(decodes(SpatialJoin.spatialJoin(a, "ageom", b, "bgeom", "intersects",
+      cellSize = 5.0)) === ((2, 0)))
+    assert(decodes(SpatialJoin.spatialJoin(a, "ageom", b, "bgeom", "intersects",
+      cellSize = 5.0, saltCells = 3)) === ((2, 0)))
+    assert(decodes(SpatialJoin.pointJoin(a, "ageom", p, "px", "py", "intersects",
+      cellSize = 5.0)) === ((1, 0)))
+  }
 }

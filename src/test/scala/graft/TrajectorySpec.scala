@@ -1093,7 +1093,7 @@ class TrajectorySpec extends SparkSpec {
     // (operator, whether it refuses lat 91, the run over a (k, t, lon, lat) frame)
     val ops: Seq[(String, Boolean, Df => Df)] = Seq(
       ("stayPoints", false, Trajectory.stayPoints(_, "k", "t", "lon", "lat", 1.0, 10L)),
-      ("geoStayPoints", false, Trajectory.geoStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)),
+      ("geoStayPoints", true, Trajectory.geoStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)),
       ("segments", false, Trajectory.segments(_, "k", "t", "lon", "lat", 10L)),
       ("kinematics", true, Trajectory.kinematics(_, "k", "t", "lon", "lat")),
       ("resample", true, Trajectory.resample(_, "k", "t", "lon", "lat", 1L)),
@@ -1105,7 +1105,7 @@ class TrajectorySpec extends SparkSpec {
       ("kinematicsStream", true, Trajectory.kinematicsStream(_, "k", "t", "lon", "lat")),
       ("streamingStayPoints", false,
         Trajectory.streamingStayPoints(_, "k", "t", "lon", "lat", 1.0, 10L)),
-      ("geoStreamingStayPoints", false,
+      ("geoStreamingStayPoints", true,
         Trajectory.geoStreamingStayPoints(_, "k", "t", "lat", "lon", 100.0, 10L)),
       ("mapMatch", false, mm(geo = false)),
       ("mapMatchGeo", true, mm(geo = true)))
